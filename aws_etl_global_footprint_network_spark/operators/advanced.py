@@ -492,8 +492,9 @@ def variant_props_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL — so schema drift in the props payload degrades softly
     instead of failing the pipeline.
 
-    Perf floor (round-12 A/B, scripts/ab_variant_parse.py, one warm
-    sf1 session, alternating reps): VARIANT 2.9/3.3 s, from_json with
+    Perf floor (round-12 A/B, ``git show
+    cf696a5:scripts/ab_variant_parse.py``, one warm sf1 session,
+    alternating reps): VARIANT 2.9/3.3 s, from_json with
     an explicit schema 2.5/2.7 s, get_json_object x2 paths 4.4/5.7 s,
     vs the DuckDB oracle's yyjson ~0.3 s.  The gap to the oracle is
     Spark's row-wise JSON parse machinery, not this plan: the chosen

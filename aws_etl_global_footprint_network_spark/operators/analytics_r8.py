@@ -15,6 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.raters import (
+    RATER_A_SQL,
+    RATER_B_SQL,
+    rater_a,
+    rater_b,
+)
 from aws_etl_global_footprint_network_spark.registry import REGISTRY, register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
@@ -323,22 +329,13 @@ def anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cohen's kappa: agreement between two deterministic document raters
 # --------------------------------------------------------------------
 
-from aws_etl_global_footprint_network_spark.functions.raters import (
-    RATER_CHAR_MIN as KAPPA_CHAR_MIN,  # rater A: substantial by raw length
-)
-from aws_etl_global_footprint_network_spark.functions.raters import (
-    RATER_TOKEN_MIN as KAPPA_TOKEN_MIN,  # rater B: same judgment from tokens
-)
-
 
 @register(
     "cohens_kappa_labels",
     f"""
     WITH lab AS (
-      SELECT CASE WHEN n_chars >= {KAPPA_CHAR_MIN} THEN 1 ELSE 0 END AS a,
-             CASE WHEN length(text) - length(replace(text, ' ', ''))
-                       + 1 >= {KAPPA_TOKEN_MIN}
-                  THEN 1 ELSE 0 END AS b
+      SELECT {RATER_A_SQL} AS a,
+             {RATER_B_SQL} AS b
       FROM documents),
     c AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -380,13 +377,7 @@ def cohens_kappa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6. Perfect-chance (p_e = 1) pins NULL. Token count uses the
     space-count+1 identity so both engines tokenize identically."""
     d = read_testdata(spark, sf_dir, "documents")
-    toks = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
-    lab = d.select(
-        F.when(F.col("n_chars") >= KAPPA_CHAR_MIN, 1).otherwise(0).alias("a"),
-        F.when(toks >= KAPPA_TOKEN_MIN, 1).otherwise(0).alias("b"),
-    )
+    lab = d.select(rater_a().alias("a"), rater_b().alias("b"))
     c = lab.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when((F.col("a") == 1) & (F.col("b") == 1), 1).otherwise(0))
@@ -1927,10 +1918,8 @@ def cramers_v_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mcnemar_rater_shift",
     f"""
     WITH lab AS (
-      SELECT CASE WHEN n_chars >= {KAPPA_CHAR_MIN} THEN 1 ELSE 0 END AS a,
-             CASE WHEN length(text) - length(replace(text, ' ', ''))
-                       + 1 >= {KAPPA_TOKEN_MIN}
-                  THEN 1 ELSE 0 END AS b
+      SELECT {RATER_A_SQL} AS a,
+             {RATER_B_SQL} AS b
       FROM documents),
     c AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1962,13 +1951,7 @@ def mcnemar_rater_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pass 2x2 machinery as cohens_kappa_labels, reading only the
     discordant cells; all-concordant input pins NULL both engines."""
     d = read_testdata(spark, sf_dir, "documents")
-    toks = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
-    lab = d.select(
-        F.when(F.col("n_chars") >= KAPPA_CHAR_MIN, 1).otherwise(0).alias("a"),
-        F.when(toks >= KAPPA_TOKEN_MIN, 1).otherwise(0).alias("b"),
-    )
+    lab = d.select(rater_a().alias("a"), rater_b().alias("b"))
     c = lab.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when((F.col("a") == 1) & (F.col("b") == 0), 1).otherwise(0))

@@ -17,6 +17,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.raters import (
+    RATER_A_SQL,
+    RATER_B_SQL,
+    RATER_C_SQL,
+    rater_a,
+    rater_b,
+    rater_c,
+)
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
@@ -160,23 +168,12 @@ def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fleiss' kappa over three deterministic document raters
 # --------------------------------------------------------------------
 
-# raters shared structurally with Cohen's kappa / McNemar / Cochran's Q
-# (functions.raters is the single source of the gate definitions)
-from aws_etl_global_footprint_network_spark.functions.raters import (
-    RATER_CHAR_MIN as FK_CHAR_MIN,
-    RATER_TOKEN_MIN as FK_TOKEN_MIN,
-)
-
 
 @register(
     "fleiss_kappa_raters",
     f"""
     WITH lab AS (
-      SELECT (CASE WHEN n_chars >= {FK_CHAR_MIN} THEN 1 ELSE 0 END
-              + CASE WHEN length(text) - length(replace(text, ' ', ''))
-                          + 1 >= {FK_TOKEN_MIN} THEN 1 ELSE 0 END
-              + CASE WHEN text LIKE '% the %' THEN 1 ELSE 0 END)
-               AS n1
+      SELECT ({RATER_A_SQL} + {RATER_B_SQL} + {RATER_C_SQL}) AS n1
       FROM documents),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -216,15 +213,7 @@ def fleiss_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle. The third rater (contains ' the ') is equally
     deterministic cross-engine as the char/token gates."""
     d = read_testdata(spark, sf_dir, "documents")
-    toks = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
-    n1 = (
-        F.when(F.col("n_chars") >= FK_CHAR_MIN, 1).otherwise(0)
-        + F.when(toks >= FK_TOKEN_MIN, 1).otherwise(0)
-        + F.when(F.col("text").like("% the %"), 1).otherwise(0)
-    )
-    lab = d.select(n1.alias("n1"))
+    lab = d.select((rater_a() + rater_b() + rater_c()).alias("n1"))
     s = lab.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("n1").cast("bigint").alias("passes"),

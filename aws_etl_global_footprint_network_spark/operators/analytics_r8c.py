@@ -587,9 +587,10 @@ _POS_SCALE = 1 << 20  # position packed under the hash for tie-breaks
 # strictly better-distributed than a truncated md5, and 5 integer
 # multiply-adds per position instead of a cryptographic hash of a
 # fresh 5-char substring (the measured floor of the round-10 plan:
-# the md5-vs-window A/B in scripts/ab_winnowing.py showed identical
-# 5.4 s sf1 times for the explode+window and map-only layouts — the
-# hash volume, not the exchanges, was the cost).
+# the md5-vs-window A/B, git show cf696a5:scripts/ab_winnowing.py,
+# showed identical 5.4 s sf1 times for the explode+window and
+# map-only layouts — the hash volume, not the exchanges, was the
+# cost).
 WIN_B = 4096
 
 
@@ -663,14 +664,15 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     polynomial from the constants block (injective pre-mod on 5-gram
     normalised text; 5 integer multiply-adds per position) — the
     round-10 md5-per-position plan was the measured floor, not the
-    exchanges (scripts/ab_winnowing.py: explode+window and map-only
-    md5 layouts both 5.4 s at sf1; Karp-Rabin map-only 1.7 s,
-    remaining time is the bucket join tail).  Tie-breaks pack the
-    position into the low bits (leftmost minimum, deterministic both
-    engines; positions < 2^20 by the corpus's doc-length domain,
-    enforced on both sides because hash parity could never catch a
-    shared overflow).  Candidate pairs come from an equality bucket
-    join on the fingerprint value, never all-pairs — and fingerprints
+    exchanges (``git show cf696a5:scripts/ab_winnowing.py``:
+    explode+window and map-only md5 layouts both 5.4 s at sf1;
+    Karp-Rabin map-only 1.7 s, remaining time is the bucket join
+    tail).  Tie-breaks pack the position into the low bits (leftmost
+    minimum, deterministic both engines; positions < 2^20 by the
+    corpus's doc-length domain, enforced on both sides because hash
+    parity could never catch a shared overflow).  Candidate pairs
+    come from an equality bucket join on the fingerprint value, never
+    all-pairs — and fingerprints
     present in more than {WIN_MAX_DF} documents are dropped FIRST
     (IDF-style stop-fingerprints): a ubiquitous fingerprint
     contributes df^2 join rows and zero near-dup signal (measured at

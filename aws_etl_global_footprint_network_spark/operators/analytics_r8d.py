@@ -16,6 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.raters import (
+    RATER_A_SQL,
+    RATER_B_SQL,
+    RATER_C_SQL,
+    rater_a,
+    rater_b,
+    rater_c,
+)
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
@@ -23,21 +31,14 @@ from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 # Cochran's Q over the three deterministic document raters
 # --------------------------------------------------------------------
 
-# raters shared structurally with Cohen's/Fleiss' kappa and McNemar
-from aws_etl_global_footprint_network_spark.functions.raters import (
-    RATER_CHAR_MIN as CQ_CHAR_MIN,
-    RATER_TOKEN_MIN as CQ_TOKEN_MIN,
-)
-
 
 @register(
     "cochran_q_raters",
     f"""
     WITH lab AS (
-      SELECT CASE WHEN n_chars >= {CQ_CHAR_MIN} THEN 1 ELSE 0 END AS a,
-             CASE WHEN length(text) - length(replace(text, ' ', ''))
-                       + 1 >= {CQ_TOKEN_MIN} THEN 1 ELSE 0 END AS b,
-             CASE WHEN text LIKE '% the %' THEN 1 ELSE 0 END AS c
+      SELECT {RATER_A_SQL} AS a,
+             {RATER_B_SQL} AS b,
+             {RATER_C_SQL} AS c
       FROM documents),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -74,13 +75,9 @@ def cochran_q_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored. Degenerate denominator (all docs unanimous) pins NULL
     both engines."""
     d = read_testdata(spark, sf_dir, "documents")
-    toks = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
+    lab = d.select(
+        rater_a().alias("a"), rater_b().alias("b"), rater_c().alias("c")
     )
-    a = F.when(F.col("n_chars") >= CQ_CHAR_MIN, 1).otherwise(0)
-    b = F.when(toks >= CQ_TOKEN_MIN, 1).otherwise(0)
-    c = F.when(F.col("text").like("% the %"), 1).otherwise(0)
-    lab = d.select(a.alias("a"), b.alias("b"), c.alias("c"))
     r = F.col("a") + F.col("b") + F.col("c")
     s = lab.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -18,7 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.cache import cut_lineage
-from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.compat import (
+    round_compat,
+    round_compat_np,
+)
 from aws_etl_global_footprint_network_spark.functions.hashing import md5_hash60, md5_hash60_sql
 from aws_etl_global_footprint_network_spark.functions.text import tokens, tokens_sql
 from aws_etl_global_footprint_network_spark.registry import register
@@ -520,26 +523,17 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes, ui = np.unique(u, return_inverse=True)
         vi = np.searchsorted(nodes, v)  # endpoints of u cover all of v
 
-        def _round8(x: np.ndarray) -> np.ndarray:
-            # round_compat(x, 8) mirror: HALF_UP on the exact binary
-            # value of x*1e8 (frac-compare, not floor(x+0.5))
-            w = x * 1e8
-            aw = np.abs(w)
-            f = np.floor(aw)
-            r = f + (aw - f >= 0.5)
-            return (np.where(w < 0.0, -r, r) + 0.0) / 1e8
-
         n = len(nodes)
         if n == 0:
             return spark.createDataFrame(
                 [], "doc_id bigint, pagerank double"
             )
         deg = np.bincount(ui, minlength=n).astype(np.float64)
-        r = _round8(np.full(n, 1.0 / n))
+        r = round_compat_np(np.full(n, 1.0 / n), PR_ROUND)
         for _ in range(PR_ITERS):
             contrib = np.zeros(n)
             np.add.at(contrib, vi, r[ui] / deg[ui])
-            r = _round8(0.15 / n + PR_DAMP * contrib)
+            r = round_compat_np(0.15 / n + PR_DAMP * contrib, PR_ROUND)
         return spark.createDataFrame(
             pd.DataFrame({"doc_id": nodes, "pagerank": r}),
             schema="doc_id bigint, pagerank double",

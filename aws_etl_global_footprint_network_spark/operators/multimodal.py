@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_global_footprint_network_spark.functions.compat import round_compat_np
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
@@ -394,18 +395,16 @@ def grouped_pandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets = max(32, ev.count() // 2048 + 1)
 
     def rank_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         pdf = pdf.sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
-        # Half-away-from-zero to match DuckDB's ROUND (pandas .round is
-        # half-to-even; a tie like 2.125 would diverge 2.12 vs 2.13).
-        scaled = pdf["value"] * 100
+        # HALF_UP on the scaled double to match DuckDB's ROUND (pandas
+        # .round is half-to-even; a tie like 2.125 would diverge 2.12
+        # vs 2.13).
         return pd.DataFrame(
             {
                 "user_id": pdf["user_id"],
                 "event_id": pdf["event_id"],
                 "visit_rank": pdf.groupby("user_id").cumcount().to_numpy() + 1,
-                "value": np.copysign(np.floor(np.abs(scaled) + 0.5), scaled) / 100,
+                "value": round_compat_np(pdf["value"], 2),
             }
         )
 

@@ -1122,9 +1122,9 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     structural alternatives bracket this plan within noise on the
     regenerated seed — (a) the shuffle-free row path (round 12: wash
     at sf0.1, LOST at sf1), (b) the direct-value-table variant
-    (scripts/ab_spearman_r13.py: 5.2-5.5 s both arms, warm
-    alternating, identical rows), (c) this committed shape. With
-    l_extendedprice ~unique the pair/value tables are
+    (``git show cf696a5:scripts/ab_spearman_r13.py``: 5.2-5.5 s
+    both arms, warm alternating, identical rows), (c) this committed
+    shape. With l_extendedprice ~unique the pair/value tables are
     ~row-cardinality at sf0.1, so the cost IS the exact tied-rank
     grain: one pair shuffle + one value shuffle + a per-flag rank
     pass is the sufficient-statistics minimum for Spearman with

@@ -475,32 +475,20 @@ def _adaptive_plane_dot_sql(p: int) -> str:
     )
 
 
-def _plane_dot_spark(p: int) -> str:
-    """Unrolled e[i]*w_i projection against pool plane ``p`` (Spark
-    side, 0-based indexing; same left-to-right float64 fold as the
-    DuckDB twin above, so the sign bits are bit-identical).  Kept for
-    scripts/ab_lsh_unroll.py's strategy A/B — the production band
-    tables use ``_band_bucket_frame`` below (the unrolled SQL form
-    exceeds janino's 64 KB method limit at 88+ planes, degrading the
-    WHOLE fused stage to interpreted evaluation)."""
-    return " + ".join(
-        f"e[{i}]*{HYPERPLANES_POOL[p][i]!r}D" for i in range(DIM)
-    )
-
-
 def _band_bucket_frame(emb: DataFrame, extra: int) -> DataFrame:
     """(vec_id, band, bucket) sign-LSH band table via ONE Arrow-batched
     numpy projection (``mapInPandas``).
 
-    Why Python here (round 12, third strategy measured —
-    scripts/ab_lsh_unroll.py): the 88-to-152-plane x 64-dim projection
-    is the dominant cost of the whole LSH family, and neither JVM
-    strategy survives at this width — ``aggregate(zip_with(...))``
-    lambdas are evaluated interpretively per element (no codegen for
-    HOF bodies), and the unrolled ``e[0]*w0 + ...`` SQL form blows
-    janino's 64 KB per-method limit, which silently degrades the
-    ENTIRE fused whole-stage (twin synthesis included) to interpreted
-    mode (measured 83-118 s at sf1).  The numpy form is a vectorized
+    Why Python here (round 12, third strategy measured by the
+    concluded A/B ``git show cf696a5:scripts/ab_lsh_unroll.py``): the
+    88-to-152-plane x 64-dim projection is the dominant cost of the
+    whole LSH family, and neither JVM strategy survives at this
+    width — ``aggregate(zip_with(...))`` lambdas are evaluated
+    interpretively per element (no codegen for HOF bodies), and the
+    unrolled ``e[0]*w0 + ...`` SQL form blows janino's 64 KB
+    per-method limit, which silently degrades the ENTIRE fused
+    whole-stage (twin synthesis included) to interpreted mode
+    (measured 83-118 s at sf1).  The numpy form is a vectorized
     fold over the batch — ``acc = acc + E[:, i] * W[i]`` for i in
     0..63 — which performs the exact same left-to-right float64
     multiply-add per (row, plane) as the DuckDB oracle's unrolled
@@ -1068,8 +1056,8 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from aws_etl_global_footprint_network_spark.operators.similarity_pq import (
-        _round6_np,
+    from aws_etl_global_footprint_network_spark.functions.compat import (
+        round_compat_np,
     )
 
     src = spread(read_testdata(spark, sf_dir, "embeddings")).select(
@@ -1123,7 +1111,7 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg_n[r["lab"]] = agg_n.get(r["lab"], 0) + r["cnt"]
         out_labels = np.asarray(sorted(agg_s), dtype=np.int64)
         cents = np.stack(
-            [_round6_np(agg_s[lv] / agg_n[lv]) for lv in out_labels]
+            [round_compat_np(agg_s[lv] / agg_n[lv], 6) for lv in out_labels]
         ) if len(out_labels) else np.zeros((0, 0))
         sizes = {int(lv): agg_n[lv] for lv in out_labels}
         return out_labels, cents, sizes

@@ -45,7 +45,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.compat import (
+    round_compat,
+    round_compat_np,
+)
 from aws_etl_global_footprint_network_spark.functions.vectors import as_double_array
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import (
@@ -138,14 +141,6 @@ def _subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "m",
         F.slice(F.col("e"), F.col("m") * SUBDIM + 1, SUBDIM).alias("sv"),
-    )
-
-
-def _sq(a: str, b: str):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -246,24 +241,9 @@ def _trained_codebook(
 #    differs between numpy partials, Spark's partial aggregation and
 #    DuckDB — exactly as it already differed cross-engine — and the
 #    1e-6 rounding is what pins all three (the standing CENTROID_ROUND
-#    contract); `_round6_np` mirrors round_compat's HALF_UP exactly.
+#    contract); `round_compat_np` mirrors round_compat's HALF_UP exactly.
 # The JVM helpers above stay as the reference implementation; a test
 # pins the kernel-trained codebook cell-identical to the JVM one.
-
-
-def _round6_np(v):
-    """Exact elementwise mirror of ``round_compat(x, 6)``: Spark
-    rounds the scaled double with HALF_UP on its exact binary value.
-    For w >= 0, ``w - floor(w)`` is IEEE-exact (Sterbenz), so
-    ``floor(w) + (frac >= 0.5)`` IS HALF_UP — no ``floor(w + 0.5)``,
-    which misrounds values one ulp under a half (e.g.
-    0.49999999999999994). Negatives round away from zero; ``+ 0.0``
-    normalises -0.0 to the +0.0 Spark's BigDecimal path emits."""
-    w = np.asarray(v, dtype=np.float64) * 1e6
-    a = np.abs(w)
-    f = np.floor(a)
-    r = f + (a - f >= 0.5)
-    return (np.where(w < 0.0, -r, r) + 0.0) / 1e6
 
 
 def _collect_head(spark: SparkSession, sf_dir: str, n: int) -> dict:
@@ -388,12 +368,14 @@ def _train_np(spark: SparkSession, sf_dir: str, with_labels: bool = False):
     for mi in range(M):
         for ci in range(c0):
             if present[mi, ci]:
-                cb1[mi, ci] = _round6_np(sums[mi, ci] / cnts[mi, ci])
+                cb1[mi, ci] = round_compat_np(
+                    sums[mi, ci] / cnts[mi, ci], PQ_ROUND
+                )
     out = (codes0, cb1, present, cnts, head)
     if with_labels:
         labels = sorted(lcnt)
         carr = np.stack(
-            [_round6_np(lsum[lv] / lcnt[lv]) for lv in labels]
+            [round_compat_np(lsum[lv] / lcnt[lv], 6) for lv in labels]
         ) if labels else np.zeros((0, DIM))
         return out + (np.asarray(labels, dtype=np.int64), carr)
     return out
@@ -563,7 +545,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vec_id": vid,
                     "packed_lo": lo,
                     "packed_hi": hi,
-                    "mse": _round6_np(dsum / DIM),
+                    "mse": round_compat_np(dsum / DIM, 6),
                 }
             )
 
@@ -673,7 +655,7 @@ def _adc_kernel(per_m, qids, lut, r, with_exact, head, probes=None, labels=None,
                 adc = np.zeros(n)
                 for mi in range(M):
                     adc = adc + lut[qi][mi][code_pos[:, mi]]
-                adc = _round6_np(adc)
+                adc = round_compat_np(adc, 6)
                 keep = vid != qids[qi]
                 if probes is not None:
                     keep &= np.isin(lab_val, probes[qi])
@@ -738,27 +720,6 @@ def _adc_candidates(
             ),
             schema,
         )
-    )
-
-
-def _partition_bounded_topr(adc: DataFrame, dist_col: str, r: int) -> DataFrame:
-    """Pre-reduce the per-query candidate set to top-``r`` PER INPUT
-    PARTITION before any per-query window: the global top-r is always
-    a subset of the union of per-partition top-rs (each candidate
-    competes within its own partition first), so the final
-    ``Window.partitionBy(query_id)`` ranks at most partitions x r rows
-    per query instead of the whole corpus — with few queries the
-    unbounded form funnels all N corpus rows through one task per
-    query. Exact: ties are decided on the rounded distance +
-    neighbor_id in both stages, the same grain the oracle uses."""
-    w_pre = Window.partitionBy("query_id", "_pid").orderBy(
-        dist_col, "neighbor_id"
-    )
-    return (
-        adc.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_prn", F.row_number().over(w_pre))
-        .filter(F.col("_prn") <= r)
-        .drop("_pid", "_prn")
     )
 
 

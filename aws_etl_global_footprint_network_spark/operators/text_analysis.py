@@ -258,9 +258,10 @@ def token_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (side, token) rows, joins the unigram table ONCE on the single
     token key (vocabulary joined, never broadcast — at 100 TB it is
     huge and skew-split by AQE), and a groupBy(bigram) pivots the two
-    marginals back onto one row. sf1 A/B (scripts/ab_pmi.py), one
-    warm session, 2 alternating rounds, cache cleared between runs:
-    two-explode + two-marginal-join form 3.51/3.30 s -> one-join
+    marginals back onto one row. sf1 A/B (``git show
+    cf696a5:scripts/ab_pmi.py``), one warm session, 2 alternating
+    rounds, cache cleared between runs: two-explode +
+    two-marginal-join form 3.51/3.30 s -> one-join
     3.24/3.48 s (the joins were never the bottleneck) -> THIS
     combined form 1.76/1.48 s (the second corpus explode+shuffle
     was). The corpus totals enter as two scalar counts (1-row

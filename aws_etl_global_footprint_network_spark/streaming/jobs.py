@@ -268,12 +268,16 @@ def _sized_state_partitions(spark: SparkSession, n_rows: int) -> int:
     (STREAM_STATE_PARTITIONS=8) keeps scheduling overhead off
     sub-second test runs; past ~200k input rows the cost shifts to
     per-key Python emits inside applyInPandasWithState, which
-    parallelise linearly with state partitions — use every core.
+    parallelise linearly with state partitions — use every core, and
+    never fewer partitions than the toy default (a host with fewer
+    cores than that must not give a larger backlog less parallelism).
     Production sizes this to keyspace x volume (thousands of
     partitions at 100 TB), exactly like batch shuffle partitioning."""
     if n_rows < 200_000:
         return STREAM_STATE_PARTITIONS
-    return int(spark.sparkContext.defaultParallelism)
+    return max(
+        STREAM_STATE_PARTITIONS, int(spark.sparkContext.defaultParallelism)
+    )
 
 
 def transform_with_state_available() -> bool:
@@ -587,8 +591,9 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     this docstring's commit).  User ids must fit float64 exactly
     (< 2^53) because Arrow hands nullable bigint to pandas as
     float64+NaN; testdata ids are < 2^31.  sf1 A/B history
-    (scripts/ab_user_totals.py): per-key state 12.04/9.98 s ->
-    pandas bucket state 7.09/6.50 s -> numpy bucket state (this)."""
+    (``git show cf696a5:scripts/ab_user_totals.py``): per-key state
+    12.04/9.98 s -> pandas bucket state 7.09/6.50 s -> numpy bucket
+    state (this)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

@@ -27,10 +27,6 @@ Usage:
                                      # reference delegates execution
                                      # to DuckDB, so this IS its
                                      # single-node throughput)
-    python bench.py --release-each   # hygiene experiment (round 13):
-                                     # release every scoped persist
-                                     # between headline rows; own
-                                     # sidecar, never round-stamped
     python bench.py --pair --all     # VM-proof committed pair: BOTH
                                      # engines interleaved per query in
                                      # ONE session (Spark_i, Duck_i,
@@ -859,26 +855,11 @@ def main() -> None:
     # record the error per query and keep timing the rest.
     from aws_etl_global_footprint_network_spark.operators import join_accel
 
-    # --release-each (round 13, verdict item 8 — ADDITIVE experiment
-    # flag, default off so the timed default path is unchanged):
-    # release every scoped persist between headline rows to isolate
-    # queries from session-state accumulation; the release time is
-    # paid OUTSIDE each query's timer, mirroring how a fresh-session
-    # run would not charge it either. Measured once per round against
-    # the default mode; adopt nothing unless totals improve.
-    release_each = "--release-each" in sys.argv
-    if release_each:
-        from aws_etl_global_footprint_network_spark.functions.cache import (
-            release_all,
-        )
-
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     layout_write: dict[str, float] = {}
     for name in names:
         join_accel.LAYOUT_WRITE_SEC.pop(name, None)
-        if release_each:
-            release_all()
         t0 = time.perf_counter()
         try:
             n = specs[name].builder(spark, SF_DIR).count()
@@ -1020,11 +1001,6 @@ def main() -> None:
         # an exact-list rerun must never clobber the full-set
         # regression baseline (nor the round-stamped copy below)
         sidecar = os.path.join(here, "bench_details_only.json")
-    if "--release-each" in sys.argv:
-        # the hygiene-experiment mode gets its own sidecar: its rows
-        # are a different measurement protocol than the default warm
-        # session and must never clobber (or be compared against) it
-        sidecar = os.path.join(here, "bench_details_release_each.json")
     # Round-over-round regression visibility (round-6 verdict item 8):
     # compare this run's warm timings against the committed sidecar
     # from the previous run and surface >1.3x warm regressions in-round
@@ -1050,12 +1026,7 @@ def main() -> None:
     with open(sidecar, "w") as fh:
         json.dump(details, fh, indent=1, sort_keys=True)
     rn = _round_no()
-    if (
-        rn is not None
-        and sf_label == 0.1
-        and "--only" not in sys.argv
-        and "--release-each" not in sys.argv
-    ):
+    if rn is not None and sf_label == 0.1 and "--only" not in sys.argv:
         stamped = os.path.join(here, f"bench_details_r{rn:02d}.json")
         with open(stamped, "w") as fh:
             json.dump(details, fh, indent=1, sort_keys=True)

@@ -135,9 +135,8 @@ def test_weighted_mg_merge_keeps_heavy_hitter_superset(pairs, capacity):
 )
 @settings(max_examples=100, deadline=None)
 def test_partition_bounded_topr_contains_global_topr(rows, r, n_parts):
-    """The ADC shortlist pre-reduction (similarity_pq) and the
-    hard-negative pre-reduction keep top-r PER PARTITION before the
-    per-query window. Property: for any partitioning of the
+    """The hard-negative pre-reduction keeps top-r PER PARTITION
+    before the per-query window. Property: for any partitioning of the
     candidates, the union of per-partition top-rs contains the global
     top-r (so the final window over the union is exact)."""
     # rows: (query_id, dist); partition assignment derived from index

@@ -52,7 +52,7 @@ def test_sized_state_partitions_dispatch(spark):
 
     assert _sized_state_partitions(spark, 10_000) == STREAM_STATE_PARTITIONS
     big = _sized_state_partitions(spark, 1_000_000)
-    assert big == spark.sparkContext.defaultParallelism
+    assert big == max(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     assert big >= STREAM_STATE_PARTITIONS
 
 
