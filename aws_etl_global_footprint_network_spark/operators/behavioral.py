@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
-FUNNEL_STEPS = ("view", "click", "purchase")
-
 
 @register(
     "events_funnel",
@@ -447,8 +445,7 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Time-to-convert and LTV-curve constants.
-LAT_QS = (0.5, 0.9, 0.99)
+# LTV-curve constant.
 LTV_MAX_OFFSET = 5
 
 

@@ -83,20 +83,6 @@ MARKET_DATA_RAW_SCHEMA = T.StructType(
     ]
 )
 
-# Calendar dimension (reference: mkt_returns/sql_test_mkt_returns.ipynb:256-261
-# DESCRIBE output; original CSV is a missing blob — regenerated by
-# sources.calendar.build_calendar).
-CALENDAR_SCHEMA = T.StructType(
-    [
-        T.StructField("DATE", T.DateType()),
-        T.StructField("DAY_OF_WEEK", T.LongType()),
-        T.StructField("TEXT_DAY_OF_WEEK", T.StringType()),
-        T.StructField("TEXT_MONTH_OF_YEAR", T.StringType()),
-        T.StructField("IS_HOLIDAY", T.BooleanType()),
-        T.StructField("IS_WORKING_DAY", T.BooleanType()),
-    ]
-)
-
 # Driver test tables (/root/testdata, TESTDATA.md) — names only; parquet
 # carries its own schema.
 TESTDATA_TABLES = (

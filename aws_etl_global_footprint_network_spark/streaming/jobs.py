@@ -15,12 +15,16 @@ streaming and batch semantics agree (the Dataflow-model promise).
 
 from __future__ import annotations
 
-import uuid
+import os
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.width import raw_table_count
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import (
     normalize_nanos,
@@ -70,72 +74,78 @@ class _stream_partitions:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
-def _as_stream_dir(source_path: str) -> str:
-    """The file stream source requires a directory; stage a single
-    parquet file behind a symlink in a temp dir (local-test shim — a
-    real drop zone is already a directory)."""
-    import os
-    import tempfile
+@contextmanager
+def _linked_events(sf_dir: str, copies: int = 1):
+    """A stream source directory holding ``copies`` symlinks to
+    ``<sf_dir>/events.parquet``, removed on exit. The file stream
+    source requires a directory (a real drop zone already is one);
+    two copies model the same file delivered twice."""
+    src = os.path.join(sf_dir, "events.parquet")
+    with tempfile.TemporaryDirectory(prefix="stream_src_") as d:
+        for i in range(copies):
+            os.symlink(src, os.path.join(d, f"delivery_{i + 1}.parquet"))
+        yield d
 
-    if os.path.isdir(source_path):
-        return source_path
-    d = tempfile.mkdtemp(prefix="stream_src_")
-    os.symlink(source_path, os.path.join(d, os.path.basename(source_path)))
-    return d
+
+def _run(spark: SparkSession, writer: DataStreamWriter, partitions: int) -> None:
+    """Run one AvailableNow query to completion: the backlog in
+    micro-batches, then stop. Each run gets its own checkpoint,
+    removed when the run ends; a session-wide
+    ``spark.sql.streaming.checkpointLocation`` would key a named
+    query's checkpoint by its name, and the next run of that query
+    would resume the finished one instead of reading its own source."""
+    with tempfile.TemporaryDirectory(prefix="stream_ckpt_") as ckpt:
+        with _stream_partitions(spark, partitions):
+            (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
 
 
-def _backlog_rows(spark: SparkSession, source_dir: str, schema) -> int:
-    """Backlog row count for state-partition sizing, from the parquet
-    footers of the staged directory (round 13 — the raw_table_count
-    pattern: num_rows IS the count, zero Spark jobs; every
-    run_available_now consumer was paying a count job per build).
-    Falls back to a Spark count when any footer is unreadable."""
-    try:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        files = sorted(glob.glob(os.path.join(source_dir, "*.parquet")))
-        if files:
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        pass
-    return spark.read.schema(schema).parquet(source_dir).count()
+def _drain(
+    spark: SparkSession,
+    out: DataFrame,
+    name: str,
+    output_mode: str,
+    partitions: int = STREAM_STATE_PARTITIONS,
+) -> DataFrame:
+    """Run ``out`` to completion into the memory sink ``name`` and
+    return the sink. The next run of the same query replaces the
+    sink's view, so one sink per query stays reachable; a frame
+    returned earlier keeps its own rows."""
+    writer = out.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _run(spark, writer, partitions)
+    return spark.table(name)
 
 
 def run_available_now(
     spark: SparkSession,
-    source_path: str,
-    schema,
+    sf_dir: str,
     transform,
-    query_name: str,
+    name: str,
     output_mode: str = "complete",
 ) -> DataFrame:
-    """Run a file-source stream to completion (AvailableNow) into a
-    memory sink; return the sink table. AvailableNow processes the
-    backlog in rate-limited micro-batches then stops — the idiom for
-    incremental ingestion jobs that run on a schedule. State
-    partitions size to the backlog (parquet count-star is
-    metadata-only): 8 for toy inputs, every core past 200 k rows —
-    the state shuffle is the parallelism ceiling for the whole
-    streaming aggregation."""
-    source_path = _as_stream_dir(source_path)
-    n_rows = _backlog_rows(spark, source_path, schema)
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(source_path)
-    )
-    out = transform(stream)
-    with _stream_partitions(spark, _sized_state_partitions(spark, n_rows)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+    """Stream ``<sf_dir>/events.parquet`` through ``transform`` to
+    completion (AvailableNow) into a memory sink; return the sink
+    table. AvailableNow processes the backlog in rate-limited
+    micro-batches then stops — the idiom for incremental ingestion
+    jobs that run on a schedule. State partitions size to the backlog
+    (footer row count, no job): 8 for toy inputs, every core past
+    200 k rows — the state shuffle is the parallelism ceiling for the
+    whole streaming aggregation."""
+    schema = read_testdata_raw(spark, sf_dir, "events").schema
+    n_rows = raw_table_count(spark, sf_dir, "events")
+    with _linked_events(sf_dir) as src:
+        stream = spark.readStream.schema(schema).format("parquet").load(src)
+        return _drain(
+            spark,
+            transform(stream),
+            name,
+            output_mode,
+            _sized_state_partitions(spark, n_rows),
         )
-        q.awaitTermination()
-    return spark.table(query_name)
 
 
 @register(
@@ -154,10 +164,6 @@ def streaming_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink holds every window; at scale the sink is a Delta/
     parquet table and the mode is append with watermark-expired
     finalisation."""
-    import os
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_daily_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
@@ -172,13 +178,7 @@ def streaming_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-    )
+    return run_available_now(spark, sf_dir, transform, "stream_daily")
 
 
 @register(
@@ -204,10 +204,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     slide = 2 overlapping windows (Spark materialises the expansion
     the same way the oracle's UNION ALL does). Epoch-aligned day
     boundaries in UTC on both sides."""
-    import os
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
@@ -220,13 +216,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    out = run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-    )
+    out = run_available_now(spark, sf_dir, transform, "stream_slide")
     return out.select(
         F.col("w.start").cast("date").alias("window_start"),
         "event_type",
@@ -235,13 +225,14 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextmanager
 def _staged_stream(
     spark: SparkSession,
     raw: DataFrame,
     n_files: int = 2,
     cols: tuple | None = None,
 ):
-    """Stage the source as n_files parquet files and return a stream
+    """Stage the source as n_files parquet files and yield a stream
     feeding ONE file per micro-batch — forces state to carry across
     batches for any stateful operator under test. Two files is the
     minimum that proves cross-batch carry-over, and every extra batch
@@ -249,18 +240,16 @@ def _staged_stream(
     volume is batches x keys, so the batch count is a direct cost
     knob. ``cols`` projects the staged copy down to what the operator
     reads (cuts staging I/O, the state shuffle width, and the Arrow
-    batches handed to Python)."""
-    import tempfile
-
-    staged = tempfile.mkdtemp(prefix="stream_staged_src_")
+    batches handed to Python). The staged copy is removed on exit."""
     src = raw.select(*cols) if cols else raw
-    src.repartition(n_files).write.mode("overwrite").parquet(staged)
-    return (
-        spark.readStream.schema(src.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(staged)
-    )
+    with tempfile.TemporaryDirectory(prefix="stream_staged_src_") as staged:
+        src.repartition(n_files).write.mode("overwrite").parquet(staged)
+        yield (
+            spark.readStream.schema(src.schema)
+            .format("parquet")
+            .option("maxFilesPerTrigger", 1)
+            .load(staged)
+        )
 
 
 def _sized_state_partitions(spark: SparkSession, n_rows: int) -> int:
@@ -277,79 +266,6 @@ def _sized_state_partitions(spark: SparkSession, n_rows: int) -> int:
         return STREAM_STATE_PARTITIONS
     return max(
         STREAM_STATE_PARTITIONS, int(spark.sparkContext.defaultParallelism)
-    )
-
-
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas (the 4.x arbitrary-state API) drives
-    its state server over protobuf; without google.protobuf in the
-    Python environment the driver worker crashes at init. Gate it."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def first_seen_transform_with_state(
-    spark: SparkSession, stream: DataFrame
-) -> DataFrame:
-    """First-seen dedup via ``transformWithStateInPandas`` — the
-    modern (Spark 4.x) StatefulProcessor API with a typed ValueState.
-    Semantics identical to ``streaming_first_seen_stateful`` below
-    (which runs on the older applyInPandasWithState API available in
-    this image); this is the code path a protobuf-equipped cluster
-    uses. Raises a clear error when the environment cannot run it —
-    gated, per the project's stub policy, rather than crashing inside
-    the streaming engine."""
-    if not transform_with_state_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf, which is"
-            " not installed in this environment; use"
-            " streaming_first_seen_stateful (applyInPandasWithState) instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("first_seen", "min_id bigint, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                min_id, n = self._state.get()
-            else:
-                min_id, n = None, 0
-            for pdf in rows:
-                n += len(pdf)
-                batch_min = int(pdf["event_id"].min())
-                min_id = batch_min if min_id is None else min(min_id, batch_min)
-            self._state.update((min_id, n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_type": [key[1]],
-                    "first_event_id": [min_id],
-                    "n_seen": [n],
-                }
-            )
-
-        def close(self) -> None:
-            # StatefulProcessor lifecycle hook (API-mandated, called
-            # once per task at shutdown): this processor holds no
-            # resources beyond the engine-managed ValueState, so
-            # there is genuinely nothing to release — a no-op, not a
-            # swallowed exception.
-            return
-
-    return stream.groupBy("user_id", "event_type").transformWithStateInPandas(
-        FirstSeen(),
-        outputStructType=(
-            "user_id bigint, event_type string, first_event_id bigint, n_seen bigint"
-        ),
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -401,12 +317,6 @@ def streaming_first_seen_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_firstseen_{uuid.uuid4().hex[:8]}"
-
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        raw_table_count,
-    )
-
     n_rows = raw_table_count(spark, sf_dir, "events")  # footer, no job
     n_buckets = max(STREAM_STATE_PARTITIONS, n_rows // (2 * BUCKET_ROWS))
     _KEY = ["user_id", "event_type"]
@@ -441,36 +351,33 @@ def streaming_first_seen_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
         # their cumulative (cross-batch) state
         yield merged.merge(ba[_KEY], on=_KEY)
 
-    stream = _staged_stream(
-        spark, raw, cols=("user_id", "event_type", "event_id")
-    )
-    bucketed = stream.withColumn(
-        "bucket",
-        F.pmod(F.hash("user_id", "event_type"), F.lit(n_buckets)).cast("int"),
-    )
-    out = bucketed.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, event_type string, first_event_id bigint, n_seen bigint"
-        ),
-        stateStructType="blob binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    with _stream_partitions(spark, _sized_state_partitions(spark, n_rows)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    cols = ("user_id", "event_type", "event_id")
+    with _staged_stream(spark, raw, cols=cols) as stream:
+        bucketed = stream.withColumn(
+            "bucket",
+            F.pmod(F.hash("user_id", "event_type"), F.lit(n_buckets)).cast("int"),
         )
-        q.awaitTermination()
+        out = bucketed.groupBy("bucket").applyInPandasWithState(
+            update,
+            outputStructType=(
+                "user_id bigint, event_type string, first_event_id bigint,"
+                " n_seen bigint"
+            ),
+            stateStructType="blob binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        sink = _drain(
+            spark,
+            out,
+            "stream_firstseen",
+            "update",
+            _sized_state_partitions(spark, n_rows),
+        )
     # A key emits once per micro-batch it appears in; the row with the
     # largest n_seen carries the complete state.
     from pyspark.sql import Window
 
-    sink = spark.table(name)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("n_seen").desc(), F.col("first_event_id")
     )
@@ -506,8 +413,6 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle hash-check a streaming WRITE path end-to-end. No watermark
     here (the staged files arrive in arbitrary order; production sets
     one and accepts late-data finalisation)."""
-    import os
-
     from aws_etl_global_footprint_network_spark.operators.ingestion import (
         drop_table_and_location,
         upsert_partitions,
@@ -517,26 +422,20 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     table = "streaming_daily_upsert_sink"
     drop_table_and_location(spark, table)
 
-    agg = (
-        normalize_nanos(_staged_stream(spark, raw, cols=("ts", "value")))
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("total_value"),
-        )
-    )
-
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_partitions(batch_df, table, "day")
 
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(upsert_batch)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    with _staged_stream(spark, raw, cols=("ts", "value")) as stream:
+        agg = (
+            normalize_nanos(stream)
+            .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("value").alias("total_value"),
+            )
         )
-        q.awaitTermination()
+        writer = agg.writeStream.foreachBatch(upsert_batch).outputMode("update")
+        _run(spark, writer, STREAM_STATE_PARTITIONS)
     return spark.table(table).select(
         "day", "n", round_compat("total_value", 2).alias("total_value")
     )
@@ -599,7 +498,6 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
     _NULL_USER = np.int64(-(2**63))  # sentinel: below any real id
 
     def _agg(u, n, c):
@@ -641,37 +539,30 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     # the per-bucket state must survive and accumulate across the
     # batches for the final totals to be right (pinned by test against
     # the batch aggregate).
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        raw_table_count,
-    )
-
     n_rows = raw_table_count(spark, sf_dir, "events")  # footer, no job
     n_buckets = max(STREAM_STATE_PARTITIONS, n_rows // (2 * BUCKET_ROWS))
-    stream = _staged_stream(spark, raw, cols=("user_id", "value"))
-    bucketed = stream.withColumn(
-        "bucket", F.pmod(F.hash("user_id"), F.lit(n_buckets)).cast("int")
-    )
-    out = bucketed.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, n_events bigint, cents bigint",
-        stateStructType="blob binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    with _stream_partitions(spark, _sized_state_partitions(spark, n_rows)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    with _staged_stream(spark, raw, cols=("user_id", "value")) as stream:
+        bucketed = stream.withColumn(
+            "bucket", F.pmod(F.hash("user_id"), F.lit(n_buckets)).cast("int")
         )
-        q.awaitTermination()
+        out = bucketed.groupBy("bucket").applyInPandasWithState(
+            update,
+            outputStructType="user_id bigint, n_events bigint, cents bigint",
+            stateStructType="blob binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        sink = _drain(
+            spark,
+            out,
+            "stream_state",
+            "update",
+            _sized_state_partitions(spark, n_rows),
+        )
     # Last emitted state per user (a user may appear in several
     # micro-batches; the final row carries the complete total).
     from pyspark.sql import Window
 
-    sink = spark.table(name)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         sink.withColumn("rn", F.row_number().over(w))
@@ -710,16 +601,10 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     them, each side retains only (watermark + 30 min) of events, which
     is the property that makes this runnable on an unbounded feed.
     AvailableNow + memory sink here; the same code targets Kafka."""
-    import os
+    schema = read_testdata_raw(spark, sf_dir, "events").schema
 
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    src = _as_stream_dir(os.path.join(sf_dir, "events.parquet"))
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        stream = (
-            spark.readStream.schema(raw.schema).format("parquet").load(src)
-        )
+    def side(src: str, event_type: str, prefix: str) -> DataFrame:
+        stream = spark.readStream.schema(schema).format("parquet").load(src)
         return (
             normalize_nanos(stream)
             .filter(F.col("event_type") == event_type)
@@ -731,35 +616,27 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark(f"{prefix}_ts", "1 day")
         )
 
-    joined = side("view", "v").join(
-        side("click", "c"),
-        F.expr(
-            "c_user = v_user AND c_ts >= v_ts"
-            " AND c_ts <= v_ts + interval 30 minutes"
-        ),
-    )
-    out = joined.select(
-        F.col("v_user").alias("user_id"),
-        F.col("v_event").alias("view_event_id"),
-        F.col("c_event").alias("click_event_id"),
-        (F.unix_timestamp("c_ts") - F.unix_timestamp("v_ts"))
-        .cast("bigint")
-        .alias("gap_s"),
-    )
-    # deliberately NOT input-sized: an 8-vs-32 A/B at sf1 measured
-    # 3.5 s vs 8.8 s — JVM-side join state pays per-partition store
-    # overhead and gains nothing (the sizing lever only pays where
-    # per-key PYTHON emits parallelise, i.e. applyInPandasWithState)
-    with _stream_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with _linked_events(sf_dir) as src:
+        joined = side(src, "view", "v").join(
+            side(src, "click", "c"),
+            F.expr(
+                "c_user = v_user AND c_ts >= v_ts"
+                " AND c_ts <= v_ts + interval 30 minutes"
+            ),
         )
-        q.awaitTermination()
-    return spark.table(name)
+        out = joined.select(
+            F.col("v_user").alias("user_id"),
+            F.col("v_event").alias("view_event_id"),
+            F.col("c_event").alias("click_event_id"),
+            (F.unix_timestamp("c_ts") - F.unix_timestamp("v_ts"))
+            .cast("bigint")
+            .alias("gap_s"),
+        )
+        # deliberately NOT input-sized: an 8-vs-32 A/B at sf1 measured
+        # 3.5 s vs 8.8 s — JVM-side join state pays per-partition store
+        # overhead and gains nothing (the sizing lever only pays where
+        # per-key PYTHON emits parallelise, i.e. applyInPandasWithState)
+        return _drain(spark, out, "stream_ssj", "append")
 
 
 @register(
@@ -782,39 +659,23 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     while state for keys older than the watermark is reclaimed — the
     bounded-memory streaming dedup contract (unbounded
     dropDuplicates state would OOM an unbounded feed)."""
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    d = tempfile.mkdtemp(prefix="stream_dup_src_")
-    os.symlink(src, os.path.join(d, "delivery_1.parquet"))
-    os.symlink(src, os.path.join(d, "delivery_2.parquet"))
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    stream = spark.readStream.schema(raw.schema).format("parquet").load(d)
-    out = (
-        normalize_nanos(stream)
-        .withWatermark("ts", "1 day")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select(
-            "event_id",
-            "event_type",
-            round_compat("value", 2).alias("value"),
+    schema = read_testdata_raw(spark, sf_dir, "events").schema
+    with _linked_events(sf_dir, copies=2) as src:
+        stream = spark.readStream.schema(schema).format("parquet").load(src)
+        out = (
+            normalize_nanos(stream)
+            .withWatermark("ts", "1 day")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select(
+                "event_id",
+                "event_type",
+                round_compat("value", 2).alias("value"),
+            )
         )
-    )
-    # deliberately NOT input-sized (see streaming_stream_stream_join:
-    # JVM-side state prefers the small fixed partition count; 8-vs-32
-    # A/B at sf1 measured 3.6 s vs 5.0 s here)
-    with _stream_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        # deliberately NOT input-sized (see streaming_stream_stream_join:
+        # JVM-side state prefers the small fixed partition count; 8-vs-32
+        # A/B at sf1 measured 3.6 s vs 5.0 s here)
+        return _drain(spark, out, "stream_dedup", "append")
 
 
 @register(
@@ -856,10 +717,6 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming engine must NOT emit. The oracle encodes exactly that
     boundary, so the row-for-row equality proves both the gap-merge
     and the finalisation semantics."""
-    import os
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
@@ -878,12 +735,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-        output_mode="append",
+        spark, sf_dir, transform, "stream_sess", output_mode="append"
     )
 
 
@@ -906,10 +758,6 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink locally (append+parquet at scale). min_by/max_by are
     merge-capable aggregates, so partial state per (user, bar) flows
     through the state store like any sum."""
-    import os
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
@@ -934,13 +782,7 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-    )
+    return run_available_now(spark, sf_dir, transform, "stream_ohlc")
 
 
 # Share the batch OHLC oracle verbatim (same semantics, same columns).
@@ -970,14 +812,9 @@ def streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique, so merge order cannot change the result), and the
     tombstone filter is a stateless projection on the aggregate
     output."""
-    import os
-
     from aws_etl_global_footprint_network_spark.operators.curation import (
         CDC_DELETE_MOD,
     )
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
-    name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         log = normalize_nanos(stream).select(
@@ -1001,13 +838,7 @@ def streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_final_op")
         )
 
-    return run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-    )
+    return run_available_now(spark, sf_dir, transform, "stream_cdc")
 
 
 _REGISTRY["streaming_cdc_compaction"].oracle = _REGISTRY[
@@ -1042,13 +873,9 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     state), and the downstream aggregation is the only stateful stage.
     Revenue accumulates in exact integer cents, so micro-batch
     accumulation order cannot change the result."""
-    import os
-
-    raw = read_testdata_raw(spark, sf_dir, "events")
     dim = read_testdata(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
@@ -1064,10 +891,4 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_available_now(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        raw.schema,
-        transform,
-        name,
-    )
+    return run_available_now(spark, sf_dir, transform, "stream_enrich")

@@ -7,9 +7,11 @@ revision (arm ``old``) against the working tree (arm ``new``).
 ``--module`` is the repo-relative path of the operator module whose
 builders changed, e.g.
 ``aws_etl_global_footprint_network_spark/operators/similarity_pq.py``.
-Its source at ``--rev`` runs into a throwaway registry; the current
-registry is loaded first, so the modules the old source imports
-register into the current one, not the throwaway one.
+Its source at ``--rev`` registers into a throwaway registry; the
+current registry is loaded first and stays readable, so the modules
+the old source imports register into the current one, and the old
+source can look up current entries (e.g. to share another query's
+oracle).
 
 Each arm runs every query once to warm, then the arms alternate for
 ``--rounds`` rounds, swapping which one runs first each round. Every
@@ -27,6 +29,7 @@ import subprocess
 import sys
 import tempfile
 import time
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -44,7 +47,9 @@ def load_rev_specs(rev: str, module: str, tmp_dir: str) -> dict:
     """Registry entries that ``module`` at ``rev`` registers.
 
     The live registry loads first, so the modules the old source
-    imports register there. The old module stays out of
+    imports register there. While the old module runs, ``register``
+    records into a separate dict and leaves the live entries in place
+    for the old module's lookups. The old module stays out of
     ``sys.modules``, so its functions pickle by value to the workers.
     """
     registry.load_all()
@@ -58,15 +63,19 @@ def load_rev_specs(rev: str, module: str, tmp_dir: str) -> dict:
     path = os.path.join(tmp_dir, os.path.basename(module))
     with open(path, "w") as fh:
         fh.write(src)
-    saved = dict(registry.REGISTRY)
-    registry.REGISTRY.clear()
-    try:
-        spec = importlib.util.spec_from_file_location("_ab_old", path)
+    old: dict = {}
+
+    def register(name, oracle, description="", tags=()):
+        def deco(fn):
+            old[name] = registry.QuerySpec(name, fn, oracle, description, tags)
+            return fn
+
+        return deco
+
+    spec = importlib.util.spec_from_file_location("_ab_old", path)
+    with mock.patch.object(registry, "register", register):
         spec.loader.exec_module(importlib.util.module_from_spec(spec))
-        return dict(registry.REGISTRY)
-    finally:
-        registry.REGISTRY.clear()
-        registry.REGISTRY.update(saved)
+    return old
 
 
 def _run(spark, spec, sf_dir: str) -> tuple[float, list[str]]:

@@ -11,6 +11,37 @@ from aws_etl_global_footprint_network_spark.session import get_spark
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 REFERENCE = "/root/reference"
+# The reference's own market data. Tests marked ``reference`` read it
+# and skip when it is absent.
+REFERENCE_CSV = os.path.join(REFERENCE, "mkt_returns", "data.csv")
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", f"reference: reads {REFERENCE_CSV}; skipped when it is absent"
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if os.path.exists(REFERENCE_CSV):
+        return
+    skip = pytest.mark.skip(reason=f"{REFERENCE_CSV} not present")
+    for item in items:
+        if item.get_closest_marker("reference"):
+            item.add_marker(skip)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    """Name the reference-gated tests when the data is missing. Unlike
+    the session header, these lines also print under ``-q``."""
+    if os.path.exists(REFERENCE_CSV):
+        return []
+    gated = [i.nodeid for i in items if i.get_closest_marker("reference")]
+    if not gated:
+        return []
+    return [f"{REFERENCE_CSV} is missing; {len(gated)} tests skip:"] + [
+        f"  {nodeid}" for nodeid in gated
+    ]
 
 
 @pytest.fixture(scope="session")
@@ -30,6 +61,11 @@ def spark(tmp_path_factory):
     )
 
     release_builds()
+
+
+@pytest.fixture(scope="session")
+def reference_csv():
+    return REFERENCE_CSV
 
 
 @pytest.fixture(scope="session")

@@ -25,21 +25,24 @@ def _load_ab():
 
 
 def test_self_ab_reports_identical_rows(spark, sf_dir, tmp_path, capsys):
+    """Self-A/B at HEAD for a plain module and for streaming/jobs.py,
+    whose import reads other queries' live registry entries."""
     ab = _load_ab()
     live = load_all()
-    old = ab.load_rev_specs(
-        "HEAD",
-        "aws_etl_global_footprint_network_spark/operators/relational.py",
-        str(tmp_path),
-    )
-    new = load_all()
-    # the throwaway registry leaves the live one as it was
-    assert new == live
-    assert old["q1_pricing_summary"].builder is not new["q1_pricing_summary"].builder
-    ab.ab(spark, old, new, ["q1_pricing_summary"], sf_dir, 2)
-    out = capsys.readouterr().out
-    assert out.count("q1_pricing_summary") == 2
-    assert out.count("identical=True") == 2
+    pkg = "aws_etl_global_footprint_network_spark"
+    for module, query in (
+        ("operators/relational.py", "q1_pricing_summary"),
+        ("streaming/jobs.py", "streaming_daily_counts"),
+    ):
+        old = ab.load_rev_specs("HEAD", f"{pkg}/{module}", str(tmp_path))
+        new = load_all()
+        # the throwaway registry leaves the live one as it was
+        assert new == live
+        assert old[query].builder is not new[query].builder
+        ab.ab(spark, old, new, [query], sf_dir, 2)
+        out = capsys.readouterr().out
+        assert out.count(query) == 2
+        assert out.count("identical=True") == 2
 
 
 def test_differing_arm_fails(spark, sf_dir):

@@ -78,22 +78,18 @@ def test_asof_carries_legitimate_null_value(spark):
     assert len(out) == 1 and out[0].price is None
 
 
-def test_flagship_as_pure_sql_text(spark):
+@pytest.mark.reference
+def test_flagship_as_pure_sql_text(spark, reference_csv):
     """EP3: the engine must accept the workload as SQL text. Build the
     notebook's CTE chain in Spark SQL (with our %W expression inlined)
     and compare against the DataFrame form bit-for-bit."""
-    import os
-
     from aws_etl_global_footprint_network_spark.operators.mkt_returns import (
         weekly_returns,
     )
     from aws_etl_global_footprint_network_spark.sources.calendar import build_calendar
     from aws_etl_global_footprint_network_spark.sources.readers import read_market_data
 
-    data_csv = "/root/reference/mkt_returns/data.csv"
-    if not os.path.exists(data_csv):
-        pytest.skip("reference data.csv not present")
-    market = read_market_data(spark, data_csv)
+    market = read_market_data(spark, reference_csv)
     calendar = build_calendar(spark, "2024-12-01", "2025-03-31")
     market.createOrReplaceTempView("tb_market_data")
     calendar.createOrReplaceTempView("tb_calendar")

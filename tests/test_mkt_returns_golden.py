@@ -5,7 +5,6 @@ values embedded in the notebook (SURVEY §6 / BASELINE.md)."""
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
 from pyspark.sql import Window
@@ -18,16 +17,12 @@ from aws_etl_global_footprint_network_spark.operators.mkt_returns import (
 from aws_etl_global_footprint_network_spark.sources.calendar import build_calendar
 from aws_etl_global_footprint_network_spark.sources.readers import read_market_data
 
-DATA_CSV = "/root/reference/mkt_returns/data.csv"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(DATA_CSV), reason="reference data.csv not present"
-)
+pytestmark = pytest.mark.reference
 
 
 @pytest.fixture(scope="module")
-def market(spark):
-    return read_market_data(spark, DATA_CSV)
+def market(spark, reference_csv):
+    return read_market_data(spark, reference_csv)
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +133,7 @@ def test_null_compound_semantics(spark, calendar):
     assert out[("G", "2025-01")] is None
 
 
-def test_inferred_schema_csv_end_to_end(spark, tmp_path):
+def test_inferred_schema_csv_end_to_end(spark, tmp_path, reference_csv):
     """S1's INFERENCE path, end to end: regenerate calendar.csv from
     the calendar builder, read BOTH CSVs back with inferSchema=True
     (the reference reads them with DuckDB inference,
@@ -163,7 +158,7 @@ def test_inferred_schema_csv_end_to_end(spark, tmp_path):
     cal = cal.withColumn("DAY_OF_WEEK", F.col("DAY_OF_WEEK").cast("long"))
 
     market = spark.read.csv(
-        DATA_CSV, header=True, inferSchema=True
+        reference_csv, header=True, inferSchema=True
     ).withColumnRenamed("RETUNR_TYPE", "RETURN_TYPE")
     mtypes = dict(market.dtypes)
     assert mtypes["MARKET_DATE"] == "date", mtypes

@@ -1,10 +1,9 @@
 """Semantic pins for the ml_prep operators beyond oracle parity:
-cluster transitivity, split determinism/stratification, TF-IDF shape,
-and the protobuf gate on the transformWithState variant."""
+cluster transitivity, split determinism/stratification and TF-IDF
+shape."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.registry import load_all
@@ -92,15 +91,3 @@ def test_tfidf_shape_and_rank_contract(spark, sf_dir):
     for doc, ranks in per_doc.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
         assert len(ranks) <= 3
-
-
-def test_transform_with_state_gate(spark):
-    from aws_etl_global_footprint_network_spark.streaming.jobs import (
-        first_seen_transform_with_state,
-        transform_with_state_available,
-    )
-
-    if transform_with_state_available():
-        pytest.skip("protobuf present: gate open, covered by live API")
-    with pytest.raises(RuntimeError, match="protobuf"):
-        first_seen_transform_with_state(spark, None)

@@ -89,8 +89,6 @@ def test_staged_stream_forces_cross_batch_state(spark, sf_dir):
     update-mode stateful query emits a key ONCE PER BATCH it appears
     in — the sink must hold MORE rows than distinct keys, proving at
     least one key's state crossed a batch boundary."""
-    import uuid
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -98,8 +96,8 @@ def test_staged_stream_forces_cross_batch_state(spark, sf_dir):
         read_testdata_raw,
     )
     from aws_etl_global_footprint_network_spark.streaming.jobs import (
+        _drain,
         _staged_stream,
-        _stream_partitions,
     )
 
     raw = read_testdata_raw(spark, sf_dir, "events")
@@ -112,38 +110,22 @@ def test_staged_stream_forces_cross_batch_state(spark, sf_dir):
         state.update((n,))
         yield pd.DataFrame({"user_id": [key[0]], "n": [n]})
 
-    out = (
-        _staged_stream(spark, raw, cols=("user_id", "event_id"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
+    with _staged_stream(spark, raw, cols=("user_id", "event_id")) as stream:
+        out = stream.groupBy("user_id").applyInPandasWithState(
             update,
             outputStructType="user_id bigint, n bigint",
             stateStructType="n bigint",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-    name = f"staged_probe_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sink_rows = spark.table(name).count()
+        sink = _drain(spark, out, "staged_probe", "update")
+    sink_rows = sink.count()
     assert sink_rows > n_keys, (sink_rows, n_keys)
     # and the accumulated final state is still the exact batch total
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
-    final = (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-    )
+    final = sink.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
     exp = {r.user_id: r.cnt for r in raw.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("cnt")).collect()}
     for r in final.collect():

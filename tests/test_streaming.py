@@ -90,3 +90,45 @@ def test_user_totals_stateful_keeps_null_keys(spark, tmp_path):
     out = SPECS["streaming_user_totals_stateful"].builder(spark, str(tmp_path))
     got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
     assert got == {7: (2, 3.25), None: (2, 0.75)}
+
+
+def test_streaming_runs_leave_nothing_behind(spark, sf_dir, tmp_path, monkeypatch):
+    """Every streaming query built twice in one session: the rows
+    repeat, a frame from the first build still collects after the
+    second, and the runs leave no source or checkpoint dirs and no
+    extra memory-sink views. The session-wide checkpoint root is set
+    as a long-lived session would set it; a named query that fell
+    back to it would resume the previous run's checkpoint."""
+    import os
+    import tempfile
+
+    tmp_root = tmp_path / "tmp"
+    ckpt_root = tmp_path / "checkpoints"
+    tmp_root.mkdir()
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
+    conf = "spark.sql.streaming.checkpointLocation"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, str(ckpt_root))
+
+    def temp_views() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    def rows(df) -> list[str]:
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    names = [n for n, s in SPECS.items() if "streaming" in s.tags]
+    try:
+        first = {n: SPECS[n].builder(spark, sf_dir) for n in names}
+        views = temp_views()
+        second = {n: rows(SPECS[n].builder(spark, sf_dir)) for n in names}
+        assert temp_views() <= views
+        for n in names:
+            assert rows(first[n]) == second[n], n
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+    assert [p for p in os.listdir(tmp_root) if p.startswith("stream_")] == []
+    assert os.listdir(ckpt_root) == []
