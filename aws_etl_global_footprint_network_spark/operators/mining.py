@@ -1,7 +1,7 @@
 """Round-7 mining operators ([EXT] — LLM-data-pipeline surface,
 SURVEY §0/§7.6 extensions).
 
-Eleven families, each fully distributed and oracle-paired:
+Eleven families, each oracle-paired:
 
 - ``triangle_count_copurchase``: triangle counting on the part
   co-purchase graph with the degree-orientation trick — the classic
@@ -36,6 +36,10 @@ Eleven families, each fully distributed and oracle-paired:
 
 Scale posture is noted per operator; no operator broadcasts a
 corpus-cardinality relation or sorts the corpus through one task.
+All run as Spark jobs except the bounded-round graph loops (k-core
+and BFS here, label propagation in ``analytics_r8c``): they finish on
+the driver in numpy when their co-purchase graph has at most
+``kernels.LOCAL_EDGE_CAP`` edges, and run distributed past it.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.cache import (
     CacheScope,
     cut_lineage,
@@ -868,6 +873,28 @@ KCORE_K = 85    # a third below the co-purchase median degree (~119):
 KCORE_ROUNDS = 6
 
 
+def _kcore_local(nodes, ui, vi) -> dict:
+    """The bounded peel of ``kcore_copurchase`` over an indexed edge
+    list (``kernels.edge_index``): each round drops every edge with an
+    endpoint of degree below KCORE_K, exactly the distributed round's
+    two semi joins; returns the surviving nodes and their in-core
+    degrees."""
+    import numpy as np
+
+    n = len(nodes)
+
+    def degree(ui, vi):
+        return np.bincount(ui, minlength=n) + np.bincount(vi, minlength=n)
+
+    for _ in range(KCORE_ROUNDS):
+        keep = degree(ui, vi) >= KCORE_K
+        both = keep[ui] & keep[vi]
+        ui, vi = ui[both], vi[both]
+    deg = degree(ui, vi)
+    alive = deg > 0
+    return {"l_partkey": nodes[alive], "core_degree": deg[alive]}
+
+
 def _kcore_oracle() -> str:
     # Every round's edge set is MATERIALIZED: each e_i is referenced
     # twice by the next round's degree union (and once by its join),
@@ -924,6 +951,15 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs and is deterministic in both engines by
     construction.)
 
+    Driver branch (``kernels.bounded_collect``): under
+    ``kernels.LOCAL_EDGE_CAP`` edges (sf0.1: 1,196,000) the memoized
+    edge frame is pulled once as Arrow and the 6 peel rounds run as
+    numpy bincounts and masks on the driver (``_kcore_local``), then
+    ship back as one local frame: one build job instead of one per
+    round (warm sf0.01 on 4 cores: 3.4 s -> 0.25 s; sf0.1: ~6 s ->
+    0.6 s). The rows are identical to the distributed peel below,
+    which runs past the cap exactly as before.
+
     Keep-set broadcast (round-9): the surviving-node table is one
     bigint column and only SHRINKS as the peel proceeds, so ONE
     up-front distinct-node count decides the whole loop — under the
@@ -951,7 +987,16 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         _log_dispatch,
     )
 
-    edges = _copurchase_edges(spark, sf_dir).transform(cut_lineage)
+    memo = _copurchase_edges(spark, sf_dir)
+    probe = kernels.bounded_collect(memo, kernels.LOCAL_EDGE_CAP, "kcore_edges")
+    if probe is not None:
+        import pandas as pd
+
+        return spark.createDataFrame(
+            pd.DataFrame(_kcore_local(*kernels.edge_index(probe))),
+            schema="l_partkey bigint, core_degree bigint",
+        )
+    edges = memo.transform(cut_lineage)
     # Dispatch bound (round-10): graph nodes are l_partkey values, so
     # the part table's row count upper-bounds n_nodes — and a parquet
     # count-star is metadata-only (footer row counts, no scan). The
@@ -1980,6 +2025,28 @@ def next_order_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_ROUNDS = 4
 
 
+def _bfs_local(nodes, ui, vi) -> dict:
+    """``bfs_hops_copurchase``'s BFS_ROUNDS frontier expansions over an
+    indexed edge list (``kernels.edge_index``) from the minimum node:
+    each round's frontier is the not-yet-visited neighbours of the
+    previous one, so a node's hop is its shortest-hop distance. An
+    edge-free graph gives the single ``(None, 0)`` row that ``MIN``
+    over no rows gives."""
+    import numpy as np
+
+    if len(nodes) == 0:
+        return {"l_partkey": [None], "hop": [0]}
+    s = np.concatenate([ui, vi])  # directed adjacency: u -> v and v -> u
+    d = np.concatenate([vi, ui])
+    hop = np.full(len(nodes), -1, dtype=np.int32)
+    hop[0] = 0  # nodes is sorted: index 0 is the minimum node
+    for i in range(1, BFS_ROUNDS + 1):
+        reached = np.unique(d[hop[s] == i - 1])
+        hop[reached[hop[reached] < 0]] = i
+    seen = hop >= 0
+    return {"l_partkey": nodes[seen], "hop": hop[seen]}
+
+
 def _bfs_oracle() -> str:
     # Levels chain like the k-core oracle: every l_i is MATERIALIZED
     # because level i+1 references it in both the frontier join and
@@ -2034,8 +2101,25 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic by construction — the frontier of round i is
     exactly the nodes at shortest-hop distance i, independent of
     execution order. Source = MIN node key (a 1-row broadcast), hop
-    cap = {BFS_ROUNDS}."""
+    cap = {BFS_ROUNDS}.
+
+    Driver branch (``kernels.bounded_collect``): under
+    ``kernels.LOCAL_EDGE_CAP`` edges the memoized edge frame is pulled
+    once as Arrow and the same frontier expansion runs as numpy masks
+    on the driver (``_bfs_local``): one build job instead of several
+    per round (warm sf0.01 on 4 cores: 1.3 s -> 0.1 s), identical
+    rows, including the one ``(NULL, 0)`` row of an edge-free graph
+    (``MIN`` over no rows).
+    Past the cap the distributed rounds above run unchanged."""
     edges = _copurchase_edges(spark, sf_dir, min_support=TRI_MIN_SUPPORT)
+    probe = kernels.bounded_collect(edges, kernels.LOCAL_EDGE_CAP, "bfs_edges")
+    if probe is not None:
+        import pandas as pd
+
+        return spark.createDataFrame(
+            pd.DataFrame(_bfs_local(*kernels.edge_index(probe))),
+            schema="l_partkey bigint, hop int",
+        )
     fwd = edges.select(F.col("u").alias("s"), F.col("v").alias("d"))
     rev = edges.select(F.col("v").alias("s"), F.col("u").alias("d"))
     dir_e = fwd.unionAll(rev).transform(cut_lineage)

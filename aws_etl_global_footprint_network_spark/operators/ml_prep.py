@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.cache import cut_lineage
 from aws_etl_global_footprint_network_spark.functions.compat import (
     round_compat,
@@ -208,28 +209,16 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Edge count below which components resolve DRIVER-SIDE (round-12
-# width dispatch): a verified near-dup pair graph is a tiny fraction
-# of the corpus (sf1: 8 edges; even 1% of a 10^9-doc corpus pairs up
-# to ~10^7 edges = a 160 MB Arrow pull — past this cap), while every
-# Pregel round costs 2 joins + a groupBy + a convergence count + a
-# lineage cut ~= 1-2 s of fixed job machinery REGARDLESS of size
-# (measured: 8 edges took ~8 s through the loop at sf1). Union-find
-# with path halving on the driver is ~1M unions/s in plain Python,
-# so the cap keeps the local branch under ~1 s while bounding the
-# collect at ~16 MB of (u, v) longs. Same measured-cap pattern as
-# the rank dispatchers; decisions land in DISPATCH_LOG.
-CC_LOCAL_EDGE_CAP = 1_000_000
-
-
-def _local_components(u, v):
-    """Driver-side union-find (path-halving) over int64 numpy edge
-    arrays; returns (nodes, min-label roots) as numpy arrays."""
+def _local_components(nodes, ui, vi):
+    """Driver-side union-find (path-halving) over an indexed edge list
+    (``kernels.edge_index``); returns each node's min-label root.
+    Plain Python at ~1M unions/s: a verified near-dup pair graph is a
+    tiny fraction of the corpus (sf1: 8 edges), while every Pregel
+    round costs 2 joins + a groupBy + a convergence count + a lineage
+    cut ~= 1-2 s of fixed job machinery regardless of size."""
     import numpy as np
 
-    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
     parent = np.arange(len(nodes))
-    ui, vi = idx[: len(u)], idx[len(u):]
 
     def find(x: int) -> int:
         while parent[x] != x:
@@ -249,7 +238,7 @@ def _local_components(u, v):
     )
     # nodes is sorted ascending, so the min-index root IS the
     # min-node-id label of the component
-    return nodes, nodes[roots]
+    return nodes[roots]
 
 
 def connected_components(
@@ -259,14 +248,15 @@ def connected_components(
     ``(u, v)`` -> ``(node, cluster_id)`` where cluster_id is the
     smallest node id in the component.
 
-    Width dispatch (round 12): the edge list is probed with a
-    ``limit(cap + 1)`` Arrow collect — ONE bounded pass, no separate
-    count job. If the graph fits (<= CC_LOCAL_EDGE_CAP edges) the
-    components resolve with a driver-side union-find and ship back as
-    one Arrow batch: identical labels, none of the per-round job
-    machinery that dominates tiny graphs (sf1's 8-edge graph spent
-    ~8 s in the loop, ~0.1 s local). Past the cap the probe's rows
-    are discarded and the distributed path below runs.
+    Width dispatch (round 12): ``kernels.bounded_collect`` pulls the
+    edge list as one Arrow table when it holds at most
+    ``kernels.LOCAL_EDGE_CAP`` edges (``local_cap`` overrides it; any
+    cap below the edge count forces the distributed path). The
+    components then resolve with a driver-side union-find and ship
+    back as one Arrow batch: identical labels, none of the per-round
+    job machinery that dominates tiny graphs (sf1's 8-edge graph
+    spent ~8 s in the loop, ~0.1 s local). Past the cap the
+    distributed path below runs.
 
     Distributed path — Pregel-style: each round every node adopts the
     minimum label among itself, its neighbours, AND its current
@@ -282,33 +272,22 @@ def connected_components(
     the same bounded pattern as any Pregel superstep barrier."""
     import pandas as pd
 
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        _log_dispatch,
-    )
-
-    cap = CC_LOCAL_EDGE_CAP if local_cap is None else local_cap
+    cap = kernels.LOCAL_EDGE_CAP if local_cap is None else local_cap
     spark = edges.sparkSession
     # node-id type is preserved (long doc ids here, string names in
     # entity resolution): numpy's sort order on int64 and on Python
     # strings both match Spark's F.least / binary-collation LEAST,
     # so the min-label contract is identical on either branch
     node_t = edges.schema["u"].dataType.simpleString()
-    probe = (
-        edges.select("u", "v").limit(cap + 1).toArrow() if cap > 0 else None
-    )
-    if probe is not None and probe.num_rows <= cap:
-        _log_dispatch("cc_edges", probe.num_rows, cap, "local-union-find")
-        nodes, labels = _local_components(
-            probe["u"].to_numpy(zero_copy_only=False),
-            probe["v"].to_numpy(zero_copy_only=False),
+    probe = kernels.bounded_collect(edges.select("u", "v"), cap, "cc_edges")
+    if probe is not None:
+        nodes, ui, vi = kernels.edge_index(probe)
+        out = pd.DataFrame(
+            {"node": nodes, "cluster_id": _local_components(nodes, ui, vi)}
         )
-        out = pd.DataFrame({"node": nodes, "cluster_id": labels})
         return spark.createDataFrame(
             out, schema=f"node {node_t}, cluster_id {node_t}"
         )
-    _log_dispatch(
-        "cc_edges", cap + 1 if probe is not None else -1, cap, "pregel"
-    )
     # checkpointed once: the symmetric edge list is joined in EVERY
     # round, and each round's eager localCheckpoint would re-execute
     # the caller's (possibly expensive) edge pipeline otherwise
@@ -484,45 +463,34 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     there; re-add a cut every few rounds if PR_ITERS grows).
 
     Width dispatch (round 13, the connected_components precedent):
-    the verified pair set is probed with a limit(cap+1) Arrow collect;
-    under CC_LOCAL_EDGE_CAP the 3-round power iteration is a few
-    numpy array ops on the driver — the per-round 2-join + groupBy +
-    crossJoin machinery (and the edge localCheckpoint) costs ~2 s of
-    fixed job latency regardless of graph size, while this graph is a
-    tiny fraction of the corpus by construction. Per-round ranks are
-    rounded at 1e-8 on every path (round_compat mirror: HALF_UP on
-    the exact binary value), which is the SAME grain that already
-    pins the Spark-vs-DuckDB contribution-summation order — the
-    driver path adds a third summation order under the same
-    absorption. Past the cap the probe rows are discarded and the
+    ``kernels.bounded_collect`` pulls the verified pair set when it
+    holds at most ``kernels.LOCAL_EDGE_CAP`` pairs, and the 3-round
+    power iteration is a few numpy array ops on the driver — the
+    per-round 2-join + groupBy + crossJoin machinery (and the edge
+    localCheckpoint) costs ~2 s of fixed job latency regardless of
+    graph size, while this graph is a tiny fraction of the corpus by
+    construction. Per-round ranks are rounded at 1e-8 on every path
+    (round_compat mirror: HALF_UP on the exact binary value), which
+    is the SAME grain that already pins the Spark-vs-DuckDB
+    contribution-summation order — the driver path adds a third
+    summation order under the same absorption. Past the cap the
     distributed loop below runs unchanged."""
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        _log_dispatch,
-    )
     from aws_etl_global_footprint_network_spark.operators.dedup import (
         dedup_ngram_jaccard,
     )
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    probe = pairs.limit(CC_LOCAL_EDGE_CAP + 1).toArrow()
-    if probe.num_rows <= CC_LOCAL_EDGE_CAP:
+    probe = kernels.bounded_collect(
+        pairs.toDF("u", "v"), kernels.LOCAL_EDGE_CAP, "pagerank_edges"
+    )
+    if probe is not None:
         import numpy as np
         import pandas as pd
 
-        _log_dispatch(
-            "pagerank_edges",
-            probe.num_rows,
-            CC_LOCAL_EDGE_CAP,
-            "local-power-iter",
-        )
-        a = probe["doc_a"].to_numpy(zero_copy_only=False).astype(np.int64)
-        b = probe["doc_b"].to_numpy(zero_copy_only=False).astype(np.int64)
+        nodes, ai, bi = kernels.edge_index(probe)
         # symmetric edge list (u -> v), exactly the distributed shape
-        u = np.concatenate([a, b])
-        v = np.concatenate([b, a])
-        nodes, ui = np.unique(u, return_inverse=True)
-        vi = np.searchsorted(nodes, v)  # endpoints of u cover all of v
-
+        ui = np.concatenate([ai, bi])
+        vi = np.concatenate([bi, ai])
         n = len(nodes)
         if n == 0:
             return spark.createDataFrame(
@@ -538,9 +506,6 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             pd.DataFrame({"doc_id": nodes, "pagerank": r}),
             schema="doc_id bigint, pagerank double",
         )
-    _log_dispatch(
-        "pagerank_edges", CC_LOCAL_EDGE_CAP + 1, CC_LOCAL_EDGE_CAP, "pregel"
-    )
     # checkpointed once: every power-iteration round's eager
     # localCheckpoint would otherwise re-execute the whole verified-
     # pair pipeline (shingle self-join + Jaccard verify) for the edge

@@ -155,11 +155,12 @@ def test_partition_bounded_topr_contains_global_topr(rows, r, n_parts):
         assert global_topr <= union_q, (q, global_topr, union_q)
 
 
-def test_pagerank_local_branch_matches_pregel_branch(spark, sf_dir):
+def test_pagerank_local_branch_matches_pregel_branch(spark, sf_dir, monkeypatch):
     """Round-13 pin: the driver power iteration (under
-    CC_LOCAL_EDGE_CAP) and the distributed 3-round loop must produce
-    row-identical pageranks — same symmetric edge construction, same
-    per-round 1e-8 rounding grain."""
+    kernels.LOCAL_EDGE_CAP) and the distributed 3-round loop must
+    produce row-identical pageranks — same symmetric edge
+    construction, same per-round 1e-8 rounding grain."""
+    from aws_etl_global_footprint_network_spark.functions import kernels
     from aws_etl_global_footprint_network_spark.operators import ml_prep
 
     local = sorted(
@@ -168,15 +169,11 @@ def test_pagerank_local_branch_matches_pregel_branch(spark, sf_dir):
             ml_prep.pagerank_neardup_graph(spark, sf_dir).collect(),
         )
     )
-    saved = ml_prep.CC_LOCAL_EDGE_CAP
-    ml_prep.CC_LOCAL_EDGE_CAP = -1  # force the distributed loop
-    try:
-        dist = sorted(
-            map(
-                tuple,
-                ml_prep.pagerank_neardup_graph(spark, sf_dir).collect(),
-            )
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", -1)  # distributed loop
+    dist = sorted(
+        map(
+            tuple,
+            ml_prep.pagerank_neardup_graph(spark, sf_dir).collect(),
         )
-    finally:
-        ml_prep.CC_LOCAL_EDGE_CAP = saved
+    )
     assert local and local == dist

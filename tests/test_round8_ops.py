@@ -136,9 +136,15 @@ def test_cut_lineage_backend_toggle(spark, tmp_path):
     assert spark.sparkContext.getCheckpointDir() is None
 
 
-def test_kcore_result_backend_independent(spark, sf_dir_mid, tmp_path):
+def test_kcore_result_backend_independent(spark, sf_dir_mid, tmp_path, monkeypatch):
     # sf0.01: the sf0.001 co-purchase graph is too sparse to keep a
-    # non-empty k-core, which would make the equality check vacuous
+    # non-empty k-core, which would make the equality check vacuous.
+    # The edge cap is forced under the graph so both runs take the
+    # distributed peel, whose lineage cuts are what the checkpoint
+    # backend changes.
+    from aws_etl_global_footprint_network_spark.functions import kernels
+
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", -1)
     sf_dir = sf_dir_mid
     want = sorted(
         map(tuple, SPECS["kcore_copurchase"].builder(spark, sf_dir).collect())
@@ -308,9 +314,12 @@ def test_kcore_over_cap_disk_branch_same_result(spark, sf_dir_mid, monkeypatch):
     """The over-cap regime (shuffle semi joins + DISK_ONLY lineage
     cuts — the branch the sf10 probe OOM'd before round 11) must give
     the identical core, pinned by forcing the dispatch cap under the
-    sf0.01 node count."""
-    from aws_etl_global_footprint_network_spark.functions import ranking
+    sf0.01 node count. The edge cap is forced under the graph for
+    both runs, so the reference is the broadcast peel and the other
+    run the shuffle peel, not the driver peel twice."""
+    from aws_etl_global_footprint_network_spark.functions import kernels, ranking
 
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", -1)
     want = sorted(
         map(tuple, SPECS["kcore_copurchase"].builder(spark, sf_dir_mid).collect())
     )
