@@ -45,12 +45,18 @@ class CacheScope:
         self._dfs.clear()
 
 
+def release_scopes() -> None:
+    """Unpersist every live scope, keeping the cross-query memoized
+    builds (basket arrays, co-purchase edges) warm."""
+    for name in list(_LIVE):
+        _LIVE.pop(name).release()
+
+
 def release_all() -> None:
     """Unpersist every live scope AND every cross-query memoized build
     (test teardown / session shutdown) — the single 'release
     everything persisted by the engine' entry point."""
-    for name in list(_LIVE):
-        _LIVE.pop(name).release()
+    release_scopes()
     # late import: keeps this module import-light (baskets pulls in
     # sources.readers and the operator constants); the call only
     # happens at teardown, never on the hot path

@@ -7,16 +7,21 @@ components, PageRank) each cost a few jobs per round in Spark, and
 that fixed job machinery dominates their time on graphs that fit in
 driver memory. ``bounded_collect`` pulls such a graph to the driver
 as one Arrow table when it is provably under a cap, and tells the
-caller to run the distributed loop otherwise.
+caller to run the distributed loop otherwise. ``local_frame`` hands
+such a driver result back to Spark as a local scan that collects with
+no job.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable, Mapping
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
 
 from aws_etl_global_footprint_network_spark.functions.ranking import _log_dispatch
 
@@ -82,3 +87,27 @@ def edge_index(table: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     v = table["v"].to_numpy(zero_copy_only=False)
     idx, nodes = pd.factorize(np.concatenate([u, v]), sort=True)
     return nodes, idx[: len(u)], idx[len(u):]
+
+
+def local_frame(
+    spark: SparkSession, data: Mapping | Iterable[tuple], schema: str
+) -> DataFrame:
+    """A driver-side result as a DataFrame over one Arrow table: a
+    ``LocalTableScan`` that collects without a Spark job.
+
+    ``data`` is either columns by name (sequences or numpy arrays) or
+    an iterable of row tuples in ``schema`` order; ``schema`` is a DDL
+    string whose types the result keeps (an int64 column under
+    ``digit int`` comes back as int). ``createDataFrame`` sends a row
+    list, and an empty pandas frame, through a pickled RDD that a
+    Python worker decodes in a job at collect time (0.2-0.25 s warm
+    on a 4-core host); an Arrow table it plans as a local relation,
+    empty or not (under 0.02 s)."""
+    struct = _parse_datatype_string(schema)
+    if isinstance(data, Mapping):
+        cols = [data[name] for name in struct.names]
+    else:
+        rows = list(data)
+        cols = list(zip(*rows)) if rows else [()] * len(struct.names)
+    table = pa.Table.from_arrays([pa.array(c) for c in cols], names=struct.names)
+    return spark.createDataFrame(table, struct)

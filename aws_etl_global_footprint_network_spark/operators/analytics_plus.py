@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.kernels import local_frame
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 
@@ -247,9 +248,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # COUNT(*) over digits): one corpus scan instead of two subtrees
     # (round 13 — the separate count aggregate re-scanned orders)
     n = obs.agg(F.sum("cnt").cast("double").alias("total"))
-    expect = spark.createDataFrame(
-        [(d,) for d in range(1, 10)], "digit int"
-    ).withColumn(
+    expect = local_frame(spark, {"digit": range(1, 10)}, "digit int").withColumn(
         "p",
         F.log(F.lit(1.0) + F.lit(1.0) / F.col("digit")) / F.log(F.lit(10.0)),
     )

@@ -856,11 +856,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     e0 = _copurchase_edges(spark, sf_dir, min_support=LPA_MIN_SUPPORT)
     probe = kernels.bounded_collect(e0, kernels.LOCAL_EDGE_CAP, "lpa_edges")
     if probe is not None:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(_lpa_local(*kernels.edge_index(probe))),
-            schema="community bigint, n_members bigint",
+        return kernels.local_frame(
+            spark,
+            _lpa_local(*kernels.edge_index(probe)),
+            "community bigint, n_members bigint",
         )
     scope = CacheScope("label_propagation_communities")
     edges = scope.persist(

@@ -896,11 +896,26 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-bounded cents take a cheap event_type-partitioned window
     over the aggregated value table; a genuinely continuous value
     column trips the cap and routes through the distributed-rank
-    recipe instead — never a single-task window either way."""
+    recipe instead — never a single-task window either way.
+
+    One exchange when the parquet footer proves the raw rows (and so
+    the value table) at most ``ADAPTIVE_WINDOW_CAP``: the rows are
+    hash-partitioned on event_type BEFORE the value grouping, and the
+    grouping, the cumulative window and the per-type close all run
+    on that one partitioning (3 jobs and 6 stages at sf0.001 -> 2 jobs
+    and 3 stages). The bound is what makes that safe: it caps the rows
+    any event_type task receives. Past it (only an HLL estimate under
+    the cap, or the distributed recipe) the value table keeps its own
+    (event_type, x) exchange with partial aggregation before it, so no
+    handful of event_type tasks ever receives unbounded raw rows."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
     from aws_etl_global_footprint_network_spark.functions.ranking import (
+        ADAPTIVE_WINDOW_CAP,
         adaptive_cumsum,
         hll_dispatch_estimate,
+    )
+    from aws_etl_global_footprint_network_spark.functions.width import (
+        value_table_rows_bound,
     )
 
     e = (
@@ -912,21 +927,10 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )
-    v = e.groupBy("event_type", "x").agg(
-        F.sum(F.when(~F.col("we"), 1).otherwise(0)).alias("n1v"),
-        F.count(F.lit(1)).alias("t"),
-    )
     # distinct (type, x) <= raw rows: when the footer row count is
     # already under the cap the window branch is proved for free
     # (round 13, width.value_table_rows_bound); only past it does the
     # HLL scan run — same branch at every scale, one job fewer here
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        ADAPTIVE_WINDOW_CAP,
-    )
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        value_table_rows_bound,
-    )
-
     est = value_table_rows_bound(sf_dir, "events", ADAPTIVE_WINDOW_CAP)
     if est is None:
         est = hll_dispatch_estimate(
@@ -934,6 +938,12 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.approx_count_distinct(F.struct("event_type", "x"))
             ).first()[0]
         )
+    else:
+        e = e.repartition("event_type")
+    v = e.groupBy("event_type", "x").agg(
+        F.sum(F.when(~F.col("we"), 1).otherwise(0)).alias("n1v"),
+        F.count(F.lit(1)).alias("t"),
+    )
     c = adaptive_cumsum(
         v, "event_type", [F.col("x")], {"cb": "t"},
         CacheScope("mann_whitney_u"), n_rows=est,

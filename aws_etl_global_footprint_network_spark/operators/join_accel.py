@@ -131,12 +131,13 @@ def bloom_words_relation(spark: SparkSession, words: list[int]) -> DataFrame:
     constant as a literal (the round-12 pair measured the literal form
     at 40 s/query at sf1, ~all of it plan handling)."""
     import numpy as np
-    import pandas as pd
+
+    from aws_etl_global_footprint_network_spark.functions.kernels import local_frame
 
     w = np.asarray(words, dtype=np.int64)
     nz = np.nonzero(w)[0]
-    return spark.createDataFrame(
-        pd.DataFrame({"w_idx": nz.astype(np.int32), "w_bits": w[nz]})
+    return local_frame(
+        spark, {"w_idx": nz, "w_bits": w[nz]}, "w_idx int, w_bits bigint"
     )
 
 

@@ -990,11 +990,10 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo = _copurchase_edges(spark, sf_dir)
     probe = kernels.bounded_collect(memo, kernels.LOCAL_EDGE_CAP, "kcore_edges")
     if probe is not None:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(_kcore_local(*kernels.edge_index(probe))),
-            schema="l_partkey bigint, core_degree bigint",
+        return kernels.local_frame(
+            spark,
+            _kcore_local(*kernels.edge_index(probe)),
+            "l_partkey bigint, core_degree bigint",
         )
     edges = memo.transform(cut_lineage)
     # Dispatch bound (round-10): graph nodes are l_partkey values, so
@@ -2114,11 +2113,10 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _copurchase_edges(spark, sf_dir, min_support=TRI_MIN_SUPPORT)
     probe = kernels.bounded_collect(edges, kernels.LOCAL_EDGE_CAP, "bfs_edges")
     if probe is not None:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(_bfs_local(*kernels.edge_index(probe))),
-            schema="l_partkey bigint, hop int",
+        return kernels.local_frame(
+            spark,
+            _bfs_local(*kernels.edge_index(probe)),
+            "l_partkey bigint, hop int",
         )
     fwd = edges.select(F.col("u").alias("s"), F.col("v").alias("d"))
     rev = edges.select(F.col("v").alias("s"), F.col("u").alias("d"))

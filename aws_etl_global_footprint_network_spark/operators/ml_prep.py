@@ -270,8 +270,6 @@ def connected_components(
     cluster: ``checkpoint`` to durable storage). The per-round
     convergence count is a driver-side scalar — one long per round,
     the same bounded pattern as any Pregel superstep barrier."""
-    import pandas as pd
-
     cap = kernels.LOCAL_EDGE_CAP if local_cap is None else local_cap
     spark = edges.sparkSession
     # node-id type is preserved (long doc ids here, string names in
@@ -282,11 +280,10 @@ def connected_components(
     probe = kernels.bounded_collect(edges.select("u", "v"), cap, "cc_edges")
     if probe is not None:
         nodes, ui, vi = kernels.edge_index(probe)
-        out = pd.DataFrame(
-            {"node": nodes, "cluster_id": _local_components(nodes, ui, vi)}
-        )
-        return spark.createDataFrame(
-            out, schema=f"node {node_t}, cluster_id {node_t}"
+        return kernels.local_frame(
+            spark,
+            {"node": nodes, "cluster_id": _local_components(nodes, ui, vi)},
+            f"node {node_t}, cluster_id {node_t}",
         )
     # checkpointed once: the symmetric edge list is joined in EVERY
     # round, and each round's eager localCheckpoint would re-execute
@@ -485,7 +482,6 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if probe is not None:
         import numpy as np
-        import pandas as pd
 
         nodes, ai, bi = kernels.edge_index(probe)
         # symmetric edge list (u -> v), exactly the distributed shape
@@ -493,18 +489,15 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         vi = np.concatenate([bi, ai])
         n = len(nodes)
         if n == 0:
-            return spark.createDataFrame(
-                [], "doc_id bigint, pagerank double"
-            )
+            return kernels.local_frame(spark, [], "doc_id bigint, pagerank double")
         deg = np.bincount(ui, minlength=n).astype(np.float64)
         r = round_compat_np(np.full(n, 1.0 / n), PR_ROUND)
         for _ in range(PR_ITERS):
             contrib = np.zeros(n)
             np.add.at(contrib, vi, r[ui] / deg[ui])
             r = round_compat_np(0.15 / n + PR_DAMP * contrib, PR_ROUND)
-        return spark.createDataFrame(
-            pd.DataFrame({"doc_id": nodes, "pagerank": r}),
-            schema="doc_id bigint, pagerank double",
+        return kernels.local_frame(
+            spark, {"doc_id": nodes, "pagerank": r}, "doc_id bigint, pagerank double"
         )
     # checkpointed once: every power-iteration round's eager
     # localCheckpoint would otherwise re-execute the whole verified-

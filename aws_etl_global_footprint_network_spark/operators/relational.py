@@ -876,68 +876,62 @@ def weekly_vs_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order drift between the two formulations (and between
     engines) collapses to exactly 0.0.
 
-    One-scan shape (round-9 verdict item 7 — two full plans by
-    design, but they can share one scan+shuffle): ``logs`` is
-    repartitioned on (user_id, event_type) and PERSISTED, and both
-    formulations build on the cached frame (plain subtree identity
-    is not enough for ReusedExchange here — each branch prunes a
-    different column set from the scan, so the exchanges differ
-    textually). Downstream, everything is exchange-free: the
-    cumulative window and the week-end ``lead`` share one Window
-    pass, the ``lag`` reuses the same partitioning, the grouped
-    aggregate's (u, t, yw) clustering is satisfied by the (u, t)
-    partitioning, and the final join broadcasts the grouped side.
-    Week ends come from ``lead(year_week)`` over the SAME window as
-    the running sum (year_week is monotone in ts, so last-in-week =
-    next row changes week) instead of a per-week row_number, which
-    would have forced a second, finer partitioning. sf1 A/B, one
-    warm session, two alternating rounds: old 3-exchange rn-based
-    plan 5.01/3.99 s -> 3.64/2.20 s, rows identical."""
-    from aws_etl_global_footprint_network_spark.functions.cache import (
-        CacheScope,
-    )
-
-    scope = CacheScope("weekly_vs_window_equivalence")
+    One exchange: ``logs`` is hash-partitioned on (user_id,
+    event_type) once, and every window below is satisfied by that
+    partitioning, so the whole query is one scan stage and one
+    window stage. The cumulative sum and the week-end ``lead`` share
+    one Window over (user_id, event_type) ordered by (ts, event_id);
+    the grouped form is ``SUM(lr) OVER (PARTITION BY user_id,
+    event_type, year_week)`` (a finer clustering the coarser hash
+    partitioning already satisfies) instead of a GROUP BY joined back
+    to the week ends, which planned a second, finer exchange, a
+    broadcast and a persist of ``logs`` (5 jobs and 9 stages at
+    sf0.001, now 2 jobs and 3 stages; sf0.01 same-session A/B on a
+    4-core host: 0.62-0.99 s -> 0.40-0.55 s, rows identical). Week ends
+    come from ``lead(year_week)`` over the running sum's window
+    (year_week is monotone in ts, so last-in-week = next row changes
+    week) instead of a per-week row_number. The oracle's inner join
+    drops NULL keys, so rows with a NULL user_id, event_type or
+    year_week are filtered out AFTER the ``lag``: they still sit
+    between their neighbours' week ends, as in the oracle's
+    ``week_ends``."""
     ev = _t(spark, sf_dir, "events")
-    logs = scope.persist(
-        ev.select(
-            "user_id",
-            "event_type",
-            "event_id",
-            "ts",
-            year_week(F.col("ts").cast("date")).alias("year_week"),
-            F.log(F.lit(1) + F.col("value") / 1000).alias("lr"),
-        ).repartition("user_id", "event_type")
-    )
+    logs = ev.select(
+        "user_id",
+        "event_type",
+        "event_id",
+        "ts",
+        year_week(F.col("ts").cast("date")).alias("year_week"),
+        F.log(F.lit(1) + F.col("value") / 1000).alias("lr"),
+    ).repartition("user_id", "event_type")
     w_cum = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    w_week = Window.partitionBy("user_id", "event_type", "year_week")
     cum = logs.select(
         "user_id",
         "event_type",
         "year_week",
         F.sum("lr").over(w_cum).alias("s"),
         F.lead("year_week").over(w_cum).alias("next_yw"),
+        (F.exp(F.sum("lr").over(w_week)) - F.lit(1)).alias("wc"),
     )
     w_weeks = Window.partitionBy("user_id", "event_type").orderBy("year_week")
-    week_ends = (
-        cum.filter(
-            F.col("next_yw").isNull() | (F.col("next_yw") != F.col("year_week"))
-        )
-        .select(
-            "user_id",
-            "event_type",
-            "year_week",
-            "s",
-            F.lag("s").over(w_weeks).alias("prev_s"),
-        )
-    )
-    grouped = logs.groupBy("user_id", "event_type", "year_week").agg(
-        (F.exp(F.sum("lr")) - F.lit(1)).alias("wc")
+    week_ends = cum.filter(
+        F.col("next_yw").isNull() | (F.col("next_yw") != F.col("year_week"))
+    ).select(
+        "user_id",
+        "event_type",
+        "year_week",
+        "wc",
+        "s",
+        F.lag("s").over(w_weeks).alias("prev_s"),
     )
     windowed = F.exp(
         F.col("s") - F.coalesce(F.col("prev_s"), F.lit(0.0))
     ) - F.lit(1)
-    return grouped.join(
-        week_ends, ["user_id", "event_type", "year_week"]
+    return week_ends.filter(
+        F.col("user_id").isNotNull()
+        & F.col("event_type").isNotNull()
+        & F.col("year_week").isNotNull()
     ).select(
         "user_id",
         "event_type",

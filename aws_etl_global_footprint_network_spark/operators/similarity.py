@@ -22,6 +22,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.vectors import (
     as_double_array,
     dot,
@@ -1126,6 +1127,6 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(
                 (int(lv), pos + 1, float(carr[li, pos]), sizes[int(lv)])
             )
-    return spark.createDataFrame(
-        rows, "cluster int, pos int, centroid_val double, n_members bigint"
+    return kernels.local_frame(
+        spark, rows, "cluster int, pos int, centroid_val double, n_members bigint"
     )

@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
 from aws_etl_global_footprint_network_spark.functions.compat import (
     round_compat,
@@ -480,7 +481,8 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
                             int(cnts[mi, ci]),
                         )
                     )
-    return spark.createDataFrame(
+    return kernels.local_frame(
+        spark,
         rows,
         "subspace int, code int, pos int, centroid_val double,"
         " n_members bigint",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
@@ -318,6 +319,6 @@ def matryoshka_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_rows.append(
             (int(d), int(ov), (ov * 20000) / 1000000.0)
         )
-    return spark.createDataFrame(
-        out_rows, "dim int, overlap_pairs bigint, overlap_at_k double"
+    return kernels.local_frame(
+        spark, out_rows, "dim int, overlap_pairs bigint, overlap_at_k double"
     )

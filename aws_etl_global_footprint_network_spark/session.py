@@ -95,6 +95,15 @@ def get_spark(
         # (sources.readers.read_testdata) — same ns->us truncation
         # DuckDB applies.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark 4 wraps every DataFrame and Column call to record its
+        # Python call site for error messages: an active-session lookup,
+        # a conf read and a JVM origin set and clear per call, thousands
+        # of py4j round trips per build (a warm mann_whitney_u build:
+        # 0.18 s with it, 0.09 s without). An AnalysisException then
+        # lacks its Python call-site section; pass this key as "true" in
+        # ``extra_conf`` to get it back. PySpark reads it once per
+        # process, at the first wrapped call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

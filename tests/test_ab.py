@@ -53,3 +53,23 @@ def test_differing_arm_fails(spark, sf_dir):
     )
     with pytest.raises(SystemExit, match="MISMATCH in q1_pricing_summary"):
         ab.ab(spark, {spec.name: spec}, {spec.name: short}, [spec.name], sf_dir, 1)
+
+
+def test_run_keeps_memoized_builds_warm(spark, sf_dir):
+    """Each arm starts with no live scope but with the shared builds
+    still cached, so a graph A/B does not time the edge build."""
+    from aws_etl_global_footprint_network_spark.functions import baskets
+    from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
+    from aws_etl_global_footprint_network_spark.operators.mining import (
+        _copurchase_edges,
+    )
+
+    ab = _load_ab()
+    edges = _copurchase_edges(spark, sf_dir)
+    edges.count()
+    scoped = CacheScope("ab_probe").persist(spark.range(3))
+    memo = dict(baskets._BUILD_MEMO)
+    ab._run(spark, load_all()["kcore_copurchase"], sf_dir)
+    assert not scoped.is_cached
+    assert baskets._BUILD_MEMO == memo
+    assert edges.is_cached

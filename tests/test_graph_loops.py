@@ -7,7 +7,10 @@
   only on the distributed branch;
 - BFS and label propagation return the same rows on both branches;
 - on an edge-free graph every branch of the six graph ops matches its
-  DuckDB oracle.
+  DuckDB oracle, and every driver branch's result collects with no
+  Spark job;
+- pagerank's driver branch sends mass along the edges, as the
+  distributed branch does.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ import pytest
 from aws_etl_global_footprint_network_spark.functions import kernels, ranking
 from aws_etl_global_footprint_network_spark.registry import load_all
 from tests.oracle_harness import compare, duck_connection
+from tests.test_fixed_cost import collect_jobs
 
 SPECS = load_all()
 
@@ -85,6 +89,33 @@ def test_driver_loop_matches_distributed(spark, sf_dir_mid, name, monkeypatch):
     assert local and local == dist
 
 
+# a star around doc 1 with a path hanging off one leaf: degrees 3, 1,
+# 1, 2, 2, 1, so ranks differ by node and by which way mass flows
+STAR_PATH = [(1, 2), (1, 3), (1, 4), (4, 5), (5, 6)]
+
+
+def test_pagerank_sees_edge_direction(spark, sf_dir, monkeypatch):
+    """sf0.001's near-dup graph gives every node the same rank, so it
+    cannot tell mass sent along an edge from mass sent back to its
+    source. On a star-plus-path pair set it can: the ranks differ, and
+    the driver branch equals the distributed one row for row."""
+    from aws_etl_global_footprint_network_spark.operators import dedup
+
+    monkeypatch.setattr(
+        dedup,
+        "dedup_ngram_jaccard",
+        lambda spark, sf_dir: kernels.local_frame(
+            spark, STAR_PATH, "doc_a bigint, doc_b bigint"
+        ),
+    )
+    local = _rows(spark, "pagerank_neardup_graph", sf_dir)
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", -1)
+    dist = _rows(spark, "pagerank_neardup_graph", sf_dir)
+    assert [r[0] for r in local] == [1, 2, 3, 4, 5, 6]
+    assert len({r[1] for r in local}) > 1, local
+    assert local == dist
+
+
 @pytest.fixture(scope="module")
 def edge_free_dir(tmp_path_factory, sf_dir):
     """sf0.001 with only the first lineitem of each order (no two
@@ -141,9 +172,13 @@ def test_edge_free_graph_matches_oracle(spark, edge_free_dir, name, forced, monk
     con = duck_connection(edge_free_dir)
     ranking.DISPATCH_LOG.clear()
     try:
-        res = compare(name, SPECS[name].builder(spark, edge_free_dir), SPECS[name].oracle, con)
+        df = SPECS[name].builder(spark, edge_free_dir)
+        res = compare(name, df, SPECS[name].oracle, con)
         probes = [d for d in ranking.DISPATCH_LOG if d["kind"].endswith("_edges")]
     finally:
         ranking.DISPATCH_LOG.clear()
     assert res.ok, (res.detail, res.mismatches[:5])
     assert all(d["n_rows"] == 0 for d in probes), probes
+    if not forced and name != "triangle_count_copurchase":
+        # a driver result is a local scan: collecting it runs no job
+        assert collect_jobs(spark, df)[1] == 0
