@@ -49,6 +49,14 @@ BAL_OFFSET_CENTS = 1_000_000
 AB_WINDOW_US = 7 * 86_400 * 1_000_000
 
 
+def weekend(ts):
+    """Saturday or Sunday, never NULL: an event with a NULL ``ts``
+    counts as a weekday, as the oracles' ``CASE WHEN isodow(..) IN
+    (6, 7) THEN 1 ELSE 0`` does (``isin`` alone gives NULL, which the
+    weekday and weekend branches both drop)."""
+    return F.coalesce(F.dayofweek(ts.cast("date")).isin(1, 7), F.lit(False))
+
+
 @register(
     "ab_test_conversion",
     f"""
@@ -661,7 +669,7 @@ def welch_mean_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.dayofweek(F.col("ts").cast("date")).isin(1, 7).alias("we"),
+            weekend(F.col("ts")).alias("we"),
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )
@@ -923,7 +931,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.dayofweek(F.col("ts").cast("date")).isin(1, 7).alias("we"),
+            weekend(F.col("ts")).alias("we"),
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )
@@ -1054,7 +1062,7 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.dayofweek(F.col("ts").cast("date")).isin(1, 7).alias("we"),
+            weekend(F.col("ts")).alias("we"),
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )

@@ -820,7 +820,10 @@ def weekly_compound_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def compound_evolution_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    # NULL ts last, as in DuckDB's default ORDER BY
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        F.col("ts").asc_nulls_last(), "event_id"
+    )
     return ev.select(
         "event_id",
         "user_id",
@@ -891,10 +894,11 @@ def weekly_vs_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from ``lead(year_week)`` over the running sum's window
     (year_week is monotone in ts, so last-in-week = next row changes
     week) instead of a per-week row_number. The oracle's inner join
-    drops NULL keys, so rows with a NULL user_id, event_type or
-    year_week are filtered out AFTER the ``lag``: they still sit
-    between their neighbours' week ends, as in the oracle's
-    ``week_ends``."""
+    drops NULL keys, so rows with a NULL user_id or event_type are
+    filtered out AFTER the ``lag``: they still sit between their
+    neighbours' week ends, as in the oracle's ``week_ends``. A NULL
+    year_week (a NULL ts) sorts after every dated week there, so it is
+    dropped before the ``lag``."""
     ev = _t(spark, sf_dir, "events")
     logs = ev.select(
         "user_id",
@@ -904,7 +908,11 @@ def weekly_vs_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         year_week(F.col("ts").cast("date")).alias("year_week"),
         F.log(F.lit(1) + F.col("value") / 1000).alias("lr"),
     ).repartition("user_id", "event_type")
-    w_cum = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    # NULL ts last, as in DuckDB's default ORDER BY: a NULL-ts event
+    # then adds to no running sum of a dated event
+    w_cum = Window.partitionBy("user_id", "event_type").orderBy(
+        F.col("ts").asc_nulls_last(), "event_id"
+    )
     w_week = Window.partitionBy("user_id", "event_type", "year_week")
     cum = logs.select(
         "user_id",
@@ -915,8 +923,12 @@ def weekly_vs_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.exp(F.sum("lr").over(w_week)) - F.lit(1)).alias("wc"),
     )
     w_weeks = Window.partitionBy("user_id", "event_type").orderBy("year_week")
+    # A NULL year_week sorts last in the oracle's LAG, so it precedes no
+    # week end: dropping it before the lag gives the same prev_s and
+    # keeps the lag on the sort the week sum already made.
     week_ends = cum.filter(
-        F.col("next_yw").isNull() | (F.col("next_yw") != F.col("year_week"))
+        (F.col("next_yw").isNull() | (F.col("next_yw") != F.col("year_week")))
+        & F.col("year_week").isNotNull()
     ).select(
         "user_id",
         "event_type",
@@ -929,9 +941,7 @@ def weekly_vs_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s") - F.coalesce(F.col("prev_s"), F.lit(0.0))
     ) - F.lit(1)
     return week_ends.filter(
-        F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("year_week").isNotNull()
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     ).select(
         "user_id",
         "event_type",

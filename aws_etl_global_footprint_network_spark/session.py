@@ -13,6 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "aws_etl_global_footprint_network_spark"
+# Holds pyspark_graft_worker.py, the Python workers' entry module.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -104,10 +107,45 @@ def get_spark(
         # ``extra_conf`` to get it back. PySpark reads it once per
         # process, at the first wrapped call.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # The compiled-class cache (whole-stage codegen, projections,
+        # predicates) is an LRU of 100 classes by default. One pass of
+        # the 9-query analyst loop generates 121, so a cyclic pass
+        # missed on every lookup and recompiled 53-56 classes per warm
+        # pass (about 0.4 s of Janino, a sixth of the pass; 46-49 per
+        # pass of the ETL loop). At 4,096 a warm rerun compiles none.
+        # The whole registry, swept twice in one session (local[2]):
+        # the first sweep compiles 3,409 classes at sf0.001 and 3,377
+        # at sf0.01, the second recompiles 185 and 174 of them (4,751
+        # at sf0.001 with 100 entries). Metaspace after the sf0.001
+        # sweeps: 233 MB against 207 MB with 100 entries. A static
+        # conf, read once when the JVM first generates code: a JVM
+        # started elsewhere keeps its own size.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python workers start through pyspark_graft_worker, which
+        # stops the per-task re-read of pyspark.zip's and the spark-core
+        # jar's zip directories (0.18-0.25 s per task). The worker
+        # module, not spark.python.daemon.module: the daemon process
+        # keeps its pyspark.daemon name, which is how tools find it.
+        .config("spark.python.worker.module", "pyspark_graft_worker")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    # The daemon imports its worker module from the workers' path; put
+    # the repository root first, keeping any path the caller set, so a
+    # session started from any directory finds pyspark_graft_worker.
+    conf[_WORKER_PATH] = os.pathsep.join(
+        p for p in (REPO_ROOT, conf.get(_WORKER_PATH)) if p
+    )
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of
+    ``CodegenMetrics.METRIC_COMPILATION_TIME``. A lookup that hits the
+    compiled-class cache compiles nothing, so the delta of this count
+    across a run is that run's cache misses."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

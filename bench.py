@@ -46,7 +46,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aws_etl_global_footprint_network_spark.registry import load_all
-from aws_etl_global_footprint_network_spark.session import get_spark
+from aws_etl_global_footprint_network_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -858,8 +858,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     layout_write: dict[str, float] = {}
+    # classes Janino compiled during each timed query (headline and
+    # rotation): compiled-class cache misses the sf0.001 warm-up left
+    compiles: dict[str, int] = {}
     for name in names:
         join_accel.LAYOUT_WRITE_SEC.pop(name, None)
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         try:
             n = specs[name].builder(spark, SF_DIR).count()
@@ -868,6 +872,7 @@ def main() -> None:
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
         timings[name] = round(time.perf_counter() - t0, 3)
+        compiles[name] = codegen_compiles(spark) - c0
         # Layout-demonstrating queries report their one-time physical
         # write separately (amortised at load in a real warehouse —
         # the shared-build pricing model): the query number is the
@@ -909,6 +914,7 @@ def main() -> None:
                         print(f"# rot warmup {name} failed: {exc}",
                               file=sys.stderr)
             for name in chunk:
+                c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
                 try:
                     n = specs[name].builder(spark, SF_DIR).count()
@@ -923,6 +929,7 @@ def main() -> None:
                           file=sys.stderr)
                     continue
                 rotation[name] = round(time.perf_counter() - t0, 3)
+                compiles[name] = codegen_compiles(spark) - c0
                 print(f"# rot {name}: {rotation[name]:.3f}s ({n} rows)",
                       file=sys.stderr)
 
@@ -946,6 +953,7 @@ def main() -> None:
     details = {
         "queries": timings,
         "shared_build_prime_sec": prime_sec,
+        "codegen_compiles": compiles,
         "query_flags": query_flags(
             specs, [*timings, *rotation] if rotation else list(timings)
         ),

@@ -20,6 +20,12 @@ persist under the same ``CacheScope`` names; the memoized shared
 builds (basket arrays, co-purchase edges) stay warm, so a graph
 query's arms are timed without re-paying the edge build. Every round compares the
 sorted rows of the two arms and exits non-zero on the first mismatch.
+
+Each round line also prints the classes each arm compiled. The
+compiled-class cache holds both arms' classes, so an arm that
+generates the same code as the other compiles nothing and runs with
+the other arm's classes: read a 0 next to a nonzero count as that
+reuse, which the alternating order spreads over both arms.
 """
 
 from __future__ import annotations
@@ -42,7 +48,10 @@ from aws_etl_global_footprint_network_spark import registry  # noqa: E402
 from aws_etl_global_footprint_network_spark.functions.cache import (  # noqa: E402
     release_scopes,
 )
-from aws_etl_global_footprint_network_spark.session import get_spark  # noqa: E402
+from aws_etl_global_footprint_network_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def load_rev_specs(rev: str, module: str, tmp_dir: str) -> dict:
@@ -80,13 +89,16 @@ def load_rev_specs(rev: str, module: str, tmp_dir: str) -> dict:
     return old
 
 
-def _run(spark, spec, sf_dir: str) -> tuple[float, list[str]]:
+def _run(spark, spec, sf_dir: str) -> tuple[float, list[str], int]:
+    """Seconds, repr-sorted rows and classes compiled of one run."""
     release_scopes()
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     rows = spec.builder(spark, sf_dir).collect()
+    dt = time.perf_counter() - t0
     # repr keys: rows mixing None with values still sort, and NaN
     # compares equal to itself
-    return time.perf_counter() - t0, sorted(repr(tuple(r)) for r in rows)
+    return dt, sorted(repr(tuple(r)) for r in rows), codegen_compiles(spark) - c0
 
 
 def ab(
@@ -105,7 +117,8 @@ def ab(
             same = res["old"][1] == res["new"][1]
             print(
                 f"round {i} {name}: old={res['old'][0]:.2f}s"
-                f" new={res['new'][0]:.2f}s identical={same}",
+                f" new={res['new'][0]:.2f}s identical={same}"
+                f" compiles old={res['old'][2]} new={res['new'][2]}",
                 flush=True,
             )
             if not same:
@@ -122,11 +135,6 @@ def main() -> None:
     args = ap.parse_args()
     queries = args.queries.split(",")
 
-    # Python workers import the package by reference: give them the
-    # repo root whatever the caller's working directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
-    )
     with tempfile.TemporaryDirectory(prefix="ab_") as tmp_dir:
         old = load_rev_specs(args.rev, args.module, tmp_dir)
         new = registry.load_all()

@@ -1,6 +1,7 @@
 """scripts/ab.py, the same-session A/B harness: a module loaded from a
-git revision reproduces the working tree's rows, and an arm whose rows
-differ fails the comparison."""
+git revision reproduces the working tree's rows, each round prints the
+classes each arm compiled, and an arm whose rows differ fails the
+comparison."""
 
 from __future__ import annotations
 
@@ -43,6 +44,8 @@ def test_self_ab_reports_identical_rows(spark, sf_dir, tmp_path, capsys):
         out = capsys.readouterr().out
         assert out.count(query) == 2
         assert out.count("identical=True") == 2
+        # both arms generate the same code: the warm-up compiled it all
+        assert out.count("compiles old=0 new=0") == 2, out
 
 
 def test_differing_arm_fails(spark, sf_dir):

@@ -10,7 +10,8 @@ nodes in the planned query.
 - driver results (``kernels.local_frame``) collect with no job;
 - on a copy of sf0.001 with NULL user_id and event_type keys, the
   re-planned compound-return and rank-sum queries match their DuckDB
-  oracles.
+  oracles; on a copy with NULL ts, so do the weekday/weekend
+  statistics and the compound-return windows.
 """
 
 from __future__ import annotations
@@ -103,25 +104,33 @@ def test_kcore_driver_result_collects_without_jobs(spark, sf_dir):
     assert jobs == 0
 
 
-@pytest.fixture(scope="module")
-def null_key_dir(tmp_path_factory, sf_dir):
-    """sf0.001 with user_id NULL on every 97th event and event_type
-    NULL on every 89th (11 and 12 of the 1,000 events). The other
-    tables are linked unchanged."""
-    out = tmp_path_factory.mktemp("null_keys")
+def nulled_events_copy(out, sf_dir: str, every: dict[str, int]) -> str:
+    """A copy of ``sf_dir`` whose events have ``col`` NULL on every
+    ``every[col]``-th row. The other tables are linked unchanged."""
     for name in os.listdir(sf_dir):
         if name != "events.parquet":
             os.symlink(os.path.join(sf_dir, name), out / name)
     ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     i = np.arange(ev.num_rows)
-    for col, every in (("user_id", 97), ("event_type", 89)):
+    for col, k in every.items():
         values = ev[col]
-        nulled = pc.if_else(i % every == 0, pa.scalar(None, values.type), values)
+        nulled = pc.if_else(i % k == 0, pa.scalar(None, values.type), values)
         ev = ev.set_column(ev.schema.get_field_index(col), col, nulled)
     pq.write_table(ev, out / "events.parquet")
+    return str(out)
+
+
+@pytest.fixture(scope="module")
+def null_key_dir(tmp_path_factory, sf_dir):
+    """sf0.001 with user_id NULL on every 97th event and event_type
+    NULL on every 89th (11 and 12 of the 1,000 events)."""
+    out = nulled_events_copy(
+        tmp_path_factory.mktemp("null_keys"), sf_dir, {"user_id": 97, "event_type": 89}
+    )
+    ev = pq.read_table(os.path.join(out, "events.parquet"))
     assert ev["user_id"].null_count == 11
     assert ev["event_type"].null_count == 12
-    return str(out)
+    return out
 
 
 @pytest.mark.parametrize(
@@ -131,4 +140,31 @@ def null_key_dir(tmp_path_factory, sf_dir):
 def test_null_keys_match_oracle(spark, null_key_dir, name):
     con = duck_connection(null_key_dir)
     res = compare(name, SPECS[name].builder(spark, null_key_dir), SPECS[name].oracle, con)
+    assert res.ok, (res.detail, res.mismatches[:5])
+
+
+@pytest.fixture(scope="module")
+def null_ts_dir(tmp_path_factory, sf_dir):
+    """sf0.001 with ts NULL on every 83rd event (13 of the 1,000)."""
+    out = nulled_events_copy(tmp_path_factory.mktemp("null_ts"), sf_dir, {"ts": 83})
+    assert pq.read_table(os.path.join(out, "events.parquet"))["ts"].null_count == 13
+    return out
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "welch_mean_test",
+        "mann_whitney_u",
+        "ks_two_sample",
+        "compound_evolution_by_user",
+        "weekly_vs_window_equivalence",
+        "weekly_compound_by_user",
+    ],
+)
+def test_null_ts_matches_oracle(spark, null_ts_dir, name):
+    """A NULL-ts event is a weekday in the weekend statistics and sorts
+    last in the compound-return windows, as in the oracles."""
+    con = duck_connection(null_ts_dir)
+    res = compare(name, SPECS[name].builder(spark, null_ts_dir), SPECS[name].oracle, con)
     assert res.ok, (res.detail, res.mismatches[:5])
