@@ -544,7 +544,10 @@ def top3_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # NULL ts last, as in DuckDB's default ORDER BY
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc_nulls_last(), "event_id"
+    )
     prev = F.lag("value").over(w)
     return ev.select(
         "event_id",
@@ -570,9 +573,10 @@ def events_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential left-to-right accumulation: identical fold order in
     both engines, so values match before rounding."""
     ev = _t(spark, sf_dir, "events")
+    # NULL ts last, as in DuckDB's default ORDER BY
     w = (
         Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
+        .orderBy(F.col("ts").asc_nulls_last(), "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return ev.select(

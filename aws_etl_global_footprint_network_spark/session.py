@@ -128,6 +128,28 @@ def get_spark(
         # keeps its pyspark.daemon name, which is how tools find it.
         .config("spark.python.worker.module", "pyspark_graft_worker")
     )
+    if master == "local" or master.startswith("local["):
+        # Streaming checkpoints (offsets, commits, metadata, state
+        # deltas) go through Hadoop's FileSystem API instead of
+        # FileContext. Without Hadoop's native library the local
+        # filesystem forks a process per call that needs one:
+        # FileContext's rename resolves the link status of its target
+        # through a forked `readlink` (about 4 ms against 0.4 ms for a
+        # plain status), and each created file's permission is a forked
+        # `chmod` (about 4 ms). A 100-byte atomic checkpoint write took
+        # 65 ms through FileContext and 23 ms through FileSystem
+        # (medians, local[2], 4-core host); a warm perfbench etl_ingest
+        # pass forked 248 `readlink`s, and none after.
+        # It is the same LocalFileSystem, so the .crc checksums are
+        # still written and verified, and its rename is rename(2),
+        # atomic even when it replaces a file. A cluster master keeps
+        # Spark's default: FileContext's rename-with-overwrite is what
+        # keeps a checkpoint commit atomic on HDFS.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     conf = dict(extra_conf or {})
     # The daemon imports its worker module from the workers' path; put
     # the repository root first, keeping any path the caller set, so a

@@ -132,9 +132,9 @@ def run_available_now(
     table. AvailableNow processes the backlog in rate-limited
     micro-batches then stops — the idiom for incremental ingestion
     jobs that run on a schedule. State partitions size to the backlog
-    (footer row count, no job): 8 for toy inputs, every core past
-    200 k rows — the state shuffle is the parallelism ceiling for the
-    whole streaming aggregation."""
+    (footer row count, no job): 8, or the core count if lower, for toy
+    inputs, every core past 200 k rows — the state shuffle is the
+    parallelism ceiling for the whole streaming aggregation."""
     schema = read_testdata_raw(spark, sf_dir, "events").schema
     n_rows = raw_table_count(spark, sf_dir, "events")
     with _linked_events(sf_dir) as src:
@@ -253,20 +253,23 @@ def _staged_stream(
 
 
 def _sized_state_partitions(spark: SparkSession, n_rows: int) -> int:
-    """Size streaming state partitions to the input. The toy default
-    (STREAM_STATE_PARTITIONS=8) keeps scheduling overhead off
-    sub-second test runs; past ~200k input rows the cost shifts to
-    per-key Python emits inside applyInPandasWithState, which
-    parallelise linearly with state partitions — use every core, and
-    never fewer partitions than the toy default (a host with fewer
-    cores than that must not give a larger backlog less parallelism).
-    Production sizes this to keyspace x volume (thousands of
-    partitions at 100 TB), exactly like batch shuffle partitioning."""
+    """Size streaming state partitions to the input and the cores.
+    Under ~200k input rows the toy default (STREAM_STATE_PARTITIONS=8)
+    keeps scheduling overhead off sub-second runs, capped at the core
+    count: each state partition pays a mkdir, a delta file and a
+    checksum file in every batch, and on local[2] eight of them ran as
+    four waves (the stream_daily micro-batch: 9 tasks, 3 at two
+    partitions). Past that the cost shifts to per-key Python emits
+    inside applyInPandasWithState, which parallelise linearly with
+    state partitions — use every core, and never fewer partitions than
+    the toy default (a host with fewer cores than that must not give a
+    larger backlog less parallelism). Production sizes this to keyspace
+    x volume (thousands of partitions at 100 TB), exactly like batch
+    shuffle partitioning."""
+    cores = int(spark.sparkContext.defaultParallelism)
     if n_rows < 200_000:
-        return STREAM_STATE_PARTITIONS
-    return max(
-        STREAM_STATE_PARTITIONS, int(spark.sparkContext.defaultParallelism)
-    )
+        return min(STREAM_STATE_PARTITIONS, cores)
+    return max(STREAM_STATE_PARTITIONS, cores)
 
 
 @register(

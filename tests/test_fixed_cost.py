@@ -8,10 +8,11 @@ nodes in the planned query.
   footer proves its value table under the window cap, and keeps its
   partial aggregate below the first Exchange when it does not;
 - driver results (``kernels.local_frame``) collect with no job;
+- a warm read of a test table, ``.schema`` included, runs no job;
 - on a copy of sf0.001 with NULL user_id and event_type keys, the
   re-planned compound-return and rank-sum queries match their DuckDB
   oracles; on a copy with NULL ts, so do the weekday/weekend
-  statistics and the compound-return windows.
+  statistics and the ``ORDER BY ts`` windows that sort NULLs last.
 """
 
 from __future__ import annotations
@@ -28,21 +29,30 @@ import pytest
 
 from aws_etl_global_footprint_network_spark.functions import kernels, width
 from aws_etl_global_footprint_network_spark.registry import load_all
+from aws_etl_global_footprint_network_spark.sources.readers import (
+    read_testdata,
+    read_testdata_raw,
+)
 from tests.oracle_harness import compare, duck_connection
 
 SPECS = load_all()
 
 
-def collect_jobs(spark, df) -> tuple[list, int]:
-    """``df.collect()`` and the number of Spark jobs it ran."""
+def jobs_run(spark, fn) -> tuple[object, int]:
+    """``fn()`` and the number of Spark jobs it ran."""
     sc = spark.sparkContext
-    group = f"collect_jobs_{uuid.uuid4().hex}"
+    group = f"jobs_run_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        rows = df.collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def collect_jobs(spark, df) -> tuple[list, int]:
+    """``df.collect()`` and the number of Spark jobs it ran."""
+    return jobs_run(spark, df.collect)
 
 
 def planned(df) -> str:
@@ -104,6 +114,28 @@ def test_kcore_driver_result_collects_without_jobs(spark, sf_dir):
     assert jobs == 0
 
 
+def test_warm_raw_read_runs_no_job(spark, sf_dir, tmp_path):
+    """The streaming builders read the raw events schema on every run;
+    a memoized read answers it without the ``parquet at`` schema job.
+    A rewritten file (new mtime) is read afresh."""
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    path, d = tmp_path / "events.parquet", str(tmp_path)
+    pq.write_table(events, path)
+    first, jobs = jobs_run(spark, lambda: read_testdata_raw(spark, d, "events"))
+    assert jobs >= 1  # the count sees the cold read's schema job
+    schema, jobs = jobs_run(spark, lambda: read_testdata_raw(spark, d, "events").schema)
+    assert jobs == 0
+    assert schema == first.schema
+    assert dict(read_testdata(spark, d, "events").dtypes)["ts"] == "timestamp"
+
+    pq.write_table(events.slice(0, 10), path)
+    os.utime(path, (1, 1))
+    fresh = read_testdata_raw(spark, d, "events")
+    assert fresh is not first
+    assert fresh.count() == 10
+    assert read_testdata(spark, d, "events").count() == 10
+
+
 def nulled_events_copy(out, sf_dir: str, every: dict[str, int]) -> str:
     """A copy of ``sf_dir`` whose events have ``col`` NULL on every
     ``every[col]``-th row. The other tables are linked unchanged."""
@@ -160,11 +192,14 @@ def null_ts_dir(tmp_path_factory, sf_dir):
         "compound_evolution_by_user",
         "weekly_vs_window_equivalence",
         "weekly_compound_by_user",
+        "events_lag_delta",
+        "events_running_sum",
     ],
 )
 def test_null_ts_matches_oracle(spark, null_ts_dir, name):
     """A NULL-ts event is a weekday in the weekend statistics and sorts
-    last in the compound-return windows, as in the oracles."""
+    last in the compound-return, lag and running-sum windows, as in the
+    oracles."""
     con = duck_connection(null_ts_dir)
     res = compare(name, SPECS[name].builder(spark, null_ts_dir), SPECS[name].oracle, con)
     assert res.ok, (res.detail, res.mismatches[:5])

@@ -6,6 +6,9 @@ a future edit cannot silently fall back to the slow shape."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.registry import load_all
@@ -50,10 +53,27 @@ def test_sized_state_partitions_dispatch(spark):
         _sized_state_partitions,
     )
 
-    assert _sized_state_partitions(spark, 10_000) == STREAM_STATE_PARTITIONS
+    cores = spark.sparkContext.defaultParallelism
+    # a toy backlog: no more state partitions than cores (each pays
+    # its own checkpoint files in every batch)
+    assert _sized_state_partitions(spark, 10_000) == min(STREAM_STATE_PARTITIONS, cores)
     big = _sized_state_partitions(spark, 1_000_000)
-    assert big == max(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    assert big == max(STREAM_STATE_PARTITIONS, cores)
     assert big >= STREAM_STATE_PARTITIONS
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_daily_counts", "streaming_first_seen_stateful"]
+)
+def test_state_partitions_do_not_change_results(spark, sf_dir, monkeypatch, name):
+    """One state partition and eight give the same rows."""
+    from aws_etl_global_footprint_network_spark.streaming import jobs
+
+    rows = []
+    for n in (1, 8):
+        monkeypatch.setattr(jobs, "STREAM_STATE_PARTITIONS", n)
+        rows.append(Counter(map(tuple, SPECS[name].builder(spark, sf_dir).collect())))
+    assert rows[0] and rows[0] == rows[1]
 
 
 def test_adaptive_ntile_dispatch(spark, sf_dir, monkeypatch):
