@@ -209,9 +209,9 @@ def hll_dispatch_estimate(est: int | None) -> int | None:
 
 DISPATCH_LOG: list[dict] = []  # every adaptive dispatch appends its
 # decision here (kind, measured n_rows, cap, branch taken). Driver-side
-# and tiny (a handful of entries per query); scripts/bench_sf10.py
+# and tiny (a handful of entries per query); bench.py's per-query timer
 # drains it per query to record which branch REAL data selected at each
-# scale — the scale-evidence artifact the round-10 verdict asked for.
+# scale (scripts/bench_sf10.py writes it to BENCH_sf10.json).
 
 
 def _log_dispatch(kind: str, n_rows: int, cap: int, branch: str) -> None:
@@ -232,7 +232,6 @@ def adaptive_cumsum(
     sums: dict[str, str],
     scope: CacheScope,
     inclusive: bool = False,
-    window_cap: int | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Cardinality-adaptive running sums over a value-GROUPED table
@@ -241,7 +240,7 @@ def adaptive_cumsum(
     ``df`` must already be aggregated to one row per (group, order) —
     the callers' value tables.  Its size is therefore the value
     cardinality, not the row count of the raw relation.  When the
-    table is provably domain-bounded (``<= window_cap`` rows — cents,
+    table is provably domain-bounded (``<= ADAPTIVE_WINDOW_CAP`` rows — cents,
     quantities, scores), a plain window partitioned by ``group_col``
     over it is exact and fuses into the caller's single downstream
     job (no persist, no extra action); the single-task-per-group
@@ -258,7 +257,7 @@ def adaptive_cumsum(
     estimates batch into one agg.  When omitted, the value table is
     persisted and counted exactly (one extra job + a cache
     generation)."""
-    cap = ADAPTIVE_WINDOW_CAP if window_cap is None else window_cap
+    cap = ADAPTIVE_WINDOW_CAP
     if n_rows is None:
         df = scope.persist(df)
         n_rows = df.count()

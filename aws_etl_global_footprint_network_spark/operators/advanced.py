@@ -480,7 +480,7 @@ def scd2_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semi-structured ingestion through the VARIANT type (Spark 4):"
     " parse_json -> variant_get typed extraction + try_variant_get"
     " missing-path NULL contract, aggregated by extracted key",
-    tags=("projection", "json", "variant", "json-parse-floor"),
+    tags=("projection", "json", "variant", "json-parse-floor", "headline"),
 )
 def variant_props_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark-4-native path for semi-structured columns: VARIANT
@@ -548,7 +548,7 @@ MAP_MIN_COUNT = 14
     " exploded back to rows — the oracle checks the identical"
     " relation computed map-free, so the MAP round-trip must be"
     " lossless",
-    tags=("functions", "map", "agg"),
+    tags=("functions", "map", "agg", "headline"),
 )
 def map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises Spark's MAP column type end-to-end on real data:

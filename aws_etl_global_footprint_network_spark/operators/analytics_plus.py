@@ -73,7 +73,7 @@ from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
     " the remainder rank tie-breaks on (linenumber, qty) because the"
     " synthetic lineitem reuses linenumbers within an order, and rows"
     " identical on the full grain are interchangeable in the output",
-    tags=("analytics", "finance"),
+    tags=("analytics", "finance", "headline"),
 )
 def proration_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic financial-allocation pattern: floor the
@@ -149,7 +149,7 @@ def proration_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     " at least one order, per customer — the month_idx - ROW_NUMBER()"
     " constant-difference trick; all-integer, windows partitioned by"
     " customer",
-    tags=("analytics", "window"),
+    tags=("analytics", "window", "headline"),
 )
 def gap_islands_order_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-month streaks per customer: distinct order months
@@ -226,7 +226,7 @@ _BENFORD = {d: f"ln(1.0 + 1.0/{d}) / ln(10.0)" for d in range(1, 10)}
     " expected first-digit distribution with per-digit chi-square"
     " terms; the first digit is taken from the cents-integer's string"
     " form (no float log10 edge cases), result is 9 rows",
-    tags=("analytics", "dq"),
+    tags=("analytics", "dq", "headline"),
 )
 def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fabricated-data screen: genuine financial amounts follow
@@ -289,7 +289,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first-order Markov transition matrix over per-user event"
     " sequences: P(next event type | event type); LEAD ordered by"
     " (ts, event_id) so the sequence is total and engine-independent",
-    tags=("analytics", "behavioral"),
+    tags=("analytics", "behavioral", "headline"),
 )
 def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral-model primitive: one window shuffle on user_id to
@@ -342,7 +342,7 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     " per user (median filter / robust smoothing); the bounded frame"
     " is materialised as a sorted 7-element array, so the median is"
     " integer-cents arithmetic with ONE final division",
-    tags=("analytics", "timeseries"),
+    tags=("analytics", "timeseries", "headline"),
 )
 def rolling_median_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median filtering (robust trend extraction) as a BOUNDED-frame
@@ -421,7 +421,7 @@ def rolling_median_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     " median + median-absolute-deviation (MAD) in integer cents, flag"
     " |x - med| > 3 * 1.4826 * MAD (the normal-consistency robust"
     " z-score); two exact percentile passes, bounds joined back",
-    tags=("analytics", "dq"),
+    tags=("analytics", "dq", "headline"),
 )
 def mad_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection: mean/stddev z-scores are themselves
@@ -508,7 +508,7 @@ def mad_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "offline CUSUM changepoint per user: the split k maximising"
     " |n*S_k - k*S_n| (the mean-shift statistic cleared of divisions"
     " — ALL integer cents, exact in any engine); earliest-k tie-break",
-    tags=("analytics", "timeseries"),
+    tags=("analytics", "timeseries", "headline"),
 )
 def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where did each user's spending level shift? The classic CUSUM
@@ -601,7 +601,7 @@ BASKET_TOP = 25
     " confidence(a->b) and lift from integer counts; pair generation"
     " is the per-basket self-join (bounded by items-per-order, never"
     " all-parts-squared), ties broken by part ids",
-    tags=("analytics", "behavioral", "shared-build"),
+    tags=("analytics", "behavioral", "shared-build", "headline"),
 )
 def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association-rule mining, the Apriori candidate-pair step: each
@@ -729,7 +729,7 @@ DIFF_INS_OFFSET = 1_000_000_000
     f"{DIFF_DEL_MOD}, +1-cent updates %{DIFF_UPD_MOD}, key-offset"
     f" inserts %{DIFF_INS_MOD}) via one full outer join on the key;"
     " all-integer output",
-    tags=("analytics", "lakehouse", "dq"),
+    tags=("analytics", "lakehouse", "dq", "headline"),
 )
 def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The table-diff primitive behind replication validation and
@@ -799,7 +799,7 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     " gap between a user's consecutive events of that type (LAG over"
     " (user, type) on integer microseconds, (ts, event_id) total"
     " order), plus the max gap — the SLA/heartbeat-monitoring query",
-    tags=("analytics", "timeseries"),
+    tags=("analytics", "timeseries", "headline"),
 )
 def event_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heartbeat monitoring: a p95 inter-arrival gap blowing out is
@@ -845,7 +845,7 @@ def event_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     " scale-safely (range repartition + per-partition row_number +"
     " broadcast offsets + per-value min for tie sharing) — never the"
     " single-task global window the SQL form implies",
-    tags=("analytics", "ml-prep", "scale"),
+    tags=("analytics", "ml-prep", "scale", "headline"),
 )
 def percent_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The feature-engineering transform behind rank-gauss / quantile
@@ -920,7 +920,7 @@ BAG_TOP = 20
     " Spark's exceptAll/intersectAll): multiset difference and"
     f" intersection of part keys between first and second lineitems,"
     f" per-key multiplicities, top-{BAG_TOP} by (count, op, key)",
-    tags=("relational", "setops"),
+    tags=("relational", "setops", "headline"),
 )
 def bag_set_ops_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ALL variants the DISTINCT set ops miss: EXCEPT ALL keeps
@@ -994,7 +994,7 @@ def bag_set_ops_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
     " intercept and r^2 from the five integer sufficient statistics"
     " (n, Sx, Sy, Sxy, Sxx, Syy) — one combinable groupBy, exact"
     " integer aggregation, two float divisions rounded both sides",
-    tags=("analytics", "timeseries", "agg"),
+    tags=("analytics", "timeseries", "agg", "headline"),
 )
 def spend_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed regression the way it scales: never materialise a
@@ -1092,7 +1092,7 @@ ACF_MAX_LAG = 7
     f" at lags 1..{ACF_MAX_LAG}: lagged pairs by CALENDAR day (gap-"
     "aware shifted-copy equi-join, not rank adjacency), Pearson r"
     " from exact integer sufficient statistics",
-    tags=("analytics", "timeseries", "agg"),
+    tags=("analytics", "timeseries", "agg", "headline"),
 )
 def acf_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonality detection at corpus scale: pair each day's count

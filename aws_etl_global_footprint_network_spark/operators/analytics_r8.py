@@ -75,7 +75,7 @@ NA_CENSOR_MONTHS = 3  # same right-censoring rule as the KM operator
     " (months first->last order), right-censored like the KM twin:"
     " H(t) = SUM(d_i/n_i), Var = SUM(d_i/n_i^2), both as cumulative"
     " windows over the calendar-bounded tenure table",
-    tags=("behavioral", "stats", "timeseries"),
+    tags=("behavioral", "stats", "timeseries", "headline"),
 )
 def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The estimator pair to kaplan_meier_churn: KM multiplies
@@ -199,7 +199,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     " exact (n, sum, sum-of-squares) sufficient statistics in one"
     " groupBy, between/within sums of squares and F from the k-row"
     " reduce — the k-sample generalization of welch_mean_test",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fisher's one-way analysis of variance at corpus scale: F =
@@ -364,7 +364,7 @@ def anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     " document quality raters (char-count vs token-count gates):"
     " chance-corrected agreement from one 2x2 confusion pass —"
     " the label-audit primitive for LLM annotation pipelines",
-    tags=("text", "stats", "governance"),
+    tags=("text", "stats", "governance", "headline"),
 )
 def cohens_kappa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annotation-quality auditing at corpus scale: kappa =
@@ -441,7 +441,7 @@ def cohens_kappa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     " re-aggregated from the cell table, per-cell p*ln(p/(px*py))"
     " terms summed over the bounded cell set — the dependence-"
     "screening primitive feature selection runs at scale",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def mutual_information_cats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MI needs exactly what chi-square needs — the contingency table
@@ -571,7 +571,7 @@ def urgent_score_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     " classifier-evaluation sweep (PR curve) as one bounded-grid"
     " fanout + combinable conditional aggregate — how a data-quality"
     " model's operating point is chosen over a 100 TB corpus",
-    tags=("ml-prep", "stats", "agg"),
+    tags=("ml-prep", "stats", "agg", "headline"),
 )
 def threshold_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier evaluation without per-row ranking: confusion
@@ -692,7 +692,7 @@ def threshold_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     " full windows only), weekly seasonal = per-ISO-weekday mean of"
     " the detrended series, residual = remainder — all sufficient"
     " sums exact integers, three rounded divisions",
-    tags=("temporal", "stats", "timeseries"),
+    tags=("temporal", "stats", "timeseries", "headline"),
 )
 def seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The moving-average decomposition every forecasting pipeline
@@ -845,7 +845,7 @@ def seasonal_daily_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     " of all pairwise slopes (29.3% breakdown point vs OLS's 0) over"
     " the calendar-bounded daily series, intercept = median residual"
     " at the fitted slope — gap-aware via calendar day differences",
-    tags=("temporal", "stats", "timeseries"),
+    tags=("temporal", "stats", "timeseries", "headline"),
 )
 def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The robust companion to spend_trend_ols: OLS flips sign under
@@ -950,7 +950,7 @@ TVF_KEY_CAP = 300  # bounded output: parts under this key only
     " sequence() generation, unioned into one typed relation — the"
     " generator surface ETL uses for array flattening and date/index"
     " spines",
-    tags=("functions", "tvf"),
+    tags=("functions", "tvf", "headline"),
 )
 def tvf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generator/TVF surface in one hash-checked relation:
@@ -1037,7 +1037,7 @@ def tvf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     " + one exclusive cumulative count — ties get the standard 0.5"
     " credit automatically, no per-row rank ever materialises; Gini"
     " coefficient = 2*AUC - 1 from the same statistic",
-    tags=("ml-prep", "stats", "agg"),
+    tags=("ml-prep", "stats", "agg", "headline"),
 )
 def auc_roc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The companion to threshold_pr_curve: the PR sweep evaluates
@@ -1130,7 +1130,7 @@ def auc_roc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     " the"
     " corpus-health diagnostic (natural text ~ -1; spam/boilerplate"
     " bends the tail)",
-    tags=("text", "stats", "corpus"),
+    tags=("text", "stats", "corpus", "headline"),
 )
 def zipf_slope_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus linguistics at scale: token frequencies from one
@@ -1247,7 +1247,7 @@ def zipf_slope_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     " pre-check before pooled-variance tests; exact doubled-scale"
     " medians located from value-grouped cumulative counts (no"
     " per-group sort buffers), then the anova_f_oneway machinery",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def brown_forsythe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance homogeneity without fragile normality assumptions
@@ -1384,7 +1384,7 @@ PBA_WINDOW_US = 1_800_000_000  # 30-minute attribution lookback
     " last, 20% across the middles (largest-remainder in exact"
     " milli-credits) over view/click touches in the preceding 30"
     " minutes — all-integer credit accounting, zero float drift",
-    tags=("behavioral", "attribution", "temporal"),
+    tags=("behavioral", "attribution", "temporal", "headline"),
 )
 def position_based_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multi-touch member of the attribution family (last_touch_
@@ -1511,7 +1511,7 @@ _ANN_SQL = REGISTRY["ann_cosine_topk"].oracle
     " top-k: majority vote of neighbor labels per query (count desc,"
     " label tie-break) vs the query's own label — the eval loop that"
     " validates an embedding space before it curates data",
-    tags=("similarity", "ml-prep", "eval"),
+    tags=("similarity", "ml-prep", "eval", "headline"),
 )
 def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composes the exact ANN operator into a classifier eval: the
@@ -1593,7 +1593,7 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     " DCG = sum gain/log2(rank+1) per query, normalized by the ideal"
     " ordering of the same gains — the standard graded retrieval"
     " metric, here over binary gains on the bounded top-k relation",
-    tags=("similarity", "retrieval", "eval"),
+    tags=("similarity", "retrieval", "eval", "headline"),
 )
 def ndcg_label_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality eval on the same composed machinery as
@@ -1690,7 +1690,7 @@ def ndcg_label_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     " Markov chain, per current state: how predictable the next"
     " action is — the information-theoretic summary of the"
     " markov_event_transitions matrix, from the bounded cell table",
-    tags=("behavioral", "stats", "sequence"),
+    tags=("behavioral", "stats", "sequence", "headline"),
 )
 def conditional_entropy_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence predictability at corpus scale: transitions come from
@@ -1759,7 +1759,7 @@ def conditional_entropy_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     " traffic: centered calendar window via the gap-aware shifted"
     " self-join (full windows only), exact int64 sufficient sums per"
     " window, one rounded division — the local elasticity series",
-    tags=("temporal", "stats", "timeseries"),
+    tags=("temporal", "stats", "timeseries", "headline"),
 )
 def rolling_regression_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-window regression without windowed float state: each
@@ -1854,7 +1854,7 @@ def rolling_regression_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     " chi-square over the bounded contingency table normalized to"
     " [0,1] by n*(min(r,c)-1) — the magnitude companion to the"
     " chi-square significance test and the MI dependence screen",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def cramers_v_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Effect size, not just significance: chi-square grows linearly
@@ -1942,7 +1942,7 @@ def cramers_v_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     " rejects? chi2 = (n10-n01)^2/(n10+n01) over the discordant"
     " cells — marginal-homogeneity audit for paired annotators,"
     " complementing Cohen's kappa (agreement magnitude)",
-    tags=("text", "stats", "governance"),
+    tags=("text", "stats", "governance", "headline"),
 )
 def mcnemar_rater_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kappa says HOW MUCH two raters agree; McNemar says whether
@@ -2011,7 +2011,7 @@ FIT_TOP = 25
     " step (market_basket_rules mines pairs) — per-order ordered"
     " triple fanout bounded by basket size choose 3, one combinable"
     f" groupBy, top-{FIT_TOP} by (support, keys)",
-    tags=("mining", "agg", "shared-build"),
+    tags=("mining", "agg", "shared-build", "headline"),
 )
 def frequent_itemset_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extends the pair-mining operator one lattice level up: each

@@ -82,7 +82,7 @@ from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
     " value-grouped counts + one exclusive cumulative count; exact"
     " integer doubled rank sums, tie correction in DECIMAL(38,0)"
     " (t^3 overflows int64 at corpus scale)",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA's rank-based sibling (anova_f_oneway compares
@@ -200,7 +200,7 @@ def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     " (char gate, token gate, stopword-presence gate) — multi-rater"
     " chance-corrected agreement where Cohen's kappa stops at two;"
     " one corpus pass to exact integer pair-agreement counts",
-    tags=("text", "stats", "governance"),
+    tags=("text", "stats", "governance", "headline"),
 )
 def fleiss_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa (cohens_kappa_labels) is defined for exactly two
@@ -281,7 +281,7 @@ CAL_BINS = 10
     f" score auc_roc_score ranks: {CAL_BINS} exact integer-arithmetic"
     " equal-width bins, per-bin mean predicted probability vs"
     " observed rate and the absolute gap (the ECE summand)",
-    tags=("mlprep", "stats", "agg"),
+    tags=("mlprep", "stats", "agg", "headline"),
 )
 def calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUC (auc_roc_score) measures RANKING quality; calibration
@@ -368,7 +368,7 @@ CCF_MAX_LAG = 7
     " does view traffic lead purchases? Pearson per lag from exact"
     " integer sufficient sums over the bounded daily table"
     " (acf_daily_counts' two-series sibling)",
-    tags=("temporal", "stats", "agg"),
+    tags=("temporal", "stats", "agg", "headline"),
 )
 def ccf_views_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACF operator autocorrelates one series; the CCF checks
@@ -455,7 +455,7 @@ def ccf_views_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     " INCLUDING zero-order customers (left join + COUNT(col) null"
     " semantics) — the double-aggregation histogram every CRM"
     " segmentation starts from",
-    tags=("relational", "agg"),
+    tags=("relational", "agg", "headline"),
 )
 def customer_orders_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13's trap is the zeros: an inner join silently drops
@@ -505,7 +505,7 @@ Q17_BRAND = "Brand#23"
     " classic correlated AVG subquery (quantity below 20% of the"
     " part's own average), decorrelated on the Spark side into a"
     " per-part aggregate join; brand-filtered, exact-cents close",
-    tags=("relational", "subquery", "agg"),
+    tags=("relational", "subquery", "agg", "headline"),
 )
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle states the correlated subquery verbatim; executing
@@ -594,7 +594,7 @@ STUMP_BINS = 20
     f" {STUMP_BINS}-bin equal-width threshold on order totalprice"
     " against the order-status label — the inner loop of tree"
     " building as ONE corpus pass + a bounded cumulative close",
-    tags=("mlprep", "stats", "agg"),
+    tags=("mlprep", "stats", "agg", "headline"),
 )
 def stump_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tree learners scan candidate thresholds for the split that

@@ -83,7 +83,7 @@ _VARIANT_SQL = f"CAST({_H60_USER} % 2 AS INT)"
     " midpoint) as the covariate, theta = cov(x,y)/var(x) pooled,"
     " adjusted metric y - theta(x - xbar) per variant — the industry"
     " workhorse for cutting experiment runtimes",
-    tags=("diagnostics", "analytics", "stats"),
+    tags=("diagnostics", "analytics", "stats", "headline"),
 )
 def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw A/B readout (ab_test_conversion) wastes power on
@@ -218,7 +218,7 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     " x integer-microsecond pre/post boundary: mean event spend per"
     " 2x2 cell from one corpus pass, DiD = (T_post-T_pre) -"
     " (C_post-C_pre) — the parallel-trends causal readout",
-    tags=("diagnostics", "analytics", "stats"),
+    tags=("diagnostics", "analytics", "stats", "headline"),
 )
 def diff_in_diff_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED adjusts a randomized experiment; DiD is the
@@ -331,7 +331,7 @@ ATE_BINS = 5
     " per-stratum treated-vs-control POST-period spend difference —"
     " the blocking estimator whose n-weighted sum is the stratified"
     " ATE",
-    tags=("diagnostics", "analytics", "stats"),
+    tags=("diagnostics", "analytics", "stats", "headline"),
 )
 def stratified_ate_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratification is the nonparametric cousin of CUPED: instead
@@ -431,7 +431,7 @@ SN_SEASON_DAYS = 7
     f" total with the value {SN_SEASON_DAYS} days earlier, score"
     " MAE / sMAPE / MAPE over the overlap — the baseline every"
     " forecasting pipeline must beat before it ships",
-    tags=("temporal", "analytics", "agg"),
+    tags=("temporal", "analytics", "agg", "headline"),
 )
 def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast evaluation without a model: the seasonal-naive
@@ -518,7 +518,7 @@ GT_TOP = 25
     " r* = (r+1)N_(r+1)/N_r,"
     " and each count class's probability-mass share — the classical"
     " LM smoothing estimate (r=1's mass is the unseen-event estimate)",
-    tags=("text", "stats", "agg"),
+    tags=("text", "stats", "agg", "headline"),
 )
 def good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unigram/bigram LM operators use add-k smoothing;
@@ -647,7 +647,7 @@ def _kr_sql(i_expr: str) -> str:
     " are dropped before the bucket join (they carry no near-dup"
     f" signal and make it quadratic); pairs sharing >="
     f" {WIN_MIN_SHARED} fingerprints, top-{WIN_TOP}",
-    tags=("dedup", "text"),
+    tags=("dedup", "text", "headline"),
 )
 def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash samples a RANDOM sketch of each doc; winnowing
@@ -824,7 +824,7 @@ def _lpa_round_sql(prev: str, out: str) -> str:
     f" fully deterministic), community sizes top-{LPA_TOP} — the"
     " cheap-and-cheerful communities baseline next to"
     " connected-components and PageRank",
-    tags=("graph", "mining", "shared-build"),
+    tags=("graph", "mining", "shared-build", "headline"),
 )
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous LPA is a bounded-round Pregel pattern like the

@@ -63,7 +63,7 @@ from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
     " ((k-1)[k*sum C_j^2 - (sum C_j)^2] / [k*sum R_i - sum R_i^2])"
     " from one exact-integer corpus pass — McNemar's k-rater"
     " generalisation, completing the rater-audit family",
-    tags=("text", "stats", "governance"),
+    tags=("text", "stats", "governance", "headline"),
 )
 def cochran_q_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fleiss' kappa (same three raters) measures agreement
@@ -149,7 +149,7 @@ KT_BINS = 5
     " totalprice bucket: concordant/discordant pair counts computed"
     " from the BOUNDED RxC contingency cells (never row pairs), tie"
     " corrections from the marginals in DECIMAL(38,0)",
-    tags=("stats", "agg", "diagnostics"),
+    tags=("stats", "agg", "diagnostics", "headline"),
 )
 def kendall_tau_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman (spearman_rank_corr) needs full rankings; for two
@@ -284,7 +284,7 @@ TUKEY_K = 1.5
     " nation: exact interpolated quartiles, 1.5*IQR fences, outlier"
     " counts and rates — the robust data-profiling sibling of the"
     " z-score and MAD operators",
-    tags=("diagnostics", "stats", "percentile"),
+    tags=("diagnostics", "stats", "percentile", "headline"),
 )
 def tukey_fences_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """z-scores (supplier_balance_zscore) assume normality and MAD
@@ -371,7 +371,7 @@ PH_DELTA_CENTS = 0.0
     " maximised over days (deterministic earliest-day tie-break) —"
     " the sequential change detector complementing the CUSUM"
     " operator's fixed-split scan",
-    tags=("temporal", "stats"),
+    tags=("temporal", "stats", "headline"),
 )
 def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM (cusum_changepoint) scans split points retrospectively;
@@ -444,7 +444,7 @@ TRI_TOP = 25
     " markov_event_transitions (order 1) and"
     " conditional_entropy_markov — two LEADs + one combinable"
     f" groupBy, top-{TRI_TOP} deterministic",
-    tags=("behavioral", "mining", "window"),
+    tags=("behavioral", "mining", "window", "headline"),
 )
 def event_type_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session models need more than bigram transitions; the trigram
@@ -510,7 +510,7 @@ def event_type_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     " present in every treatment, within-block midranks (block size"
     " = k event types, a domain constant), chi-square close from the"
     " per-treatment rank sums",
-    tags=("stats", "diagnostics", "agg"),
+    tags=("stats", "diagnostics", "agg", "headline"),
 )
 def friedman_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis compares INDEPENDENT groups; Friedman is its
@@ -638,7 +638,7 @@ def _hits_edges_sql() -> str:
     " 'gateway' items lead TO rank as authorities — the directional"
     f" complement of PageRank's undirected prestige; top-{HITS_TOP}"
     " by authority",
-    tags=("graph", "mining", "shared-build"),
+    tags=("graph", "mining", "shared-build", "headline"),
 )
 def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (pagerank_neardup_graph) scores undirected prestige;

@@ -52,7 +52,7 @@ RCTE_MAX_DEPTH = 8  # fixed walk depth: the cost model is rounds x
     f" cap {RCTE_MAX_DEPTH} reached in 2 doubling rounds instead of 8"
     " linear ones; the oracle derives the identical capped depths from"
     " ROW_NUMBER, pinning jumping == window on this shape",
-    tags=("relational", "recursive", "window", "job-latency-floor"),
+    tags=("relational", "recursive", "window", "job-latency-floor", "headline"),
 )
 def recursive_cte_order_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """List ranking by pointer jumping (Wyllie's algorithm), seeded at
@@ -161,7 +161,7 @@ LAT_TOP = 2
     " top3_parts_per_brand states as a window) — Catalyst"
     " decorrelates it to a ranked join, which the plan gate verifies"
     " never degenerates into a nested loop",
-    tags=("relational", "subquery", "window"),
+    tags=("relational", "subquery", "window", "headline"),
 )
 def lateral_top2_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LATERAL keyword is how SQL users state per-row subtables;
@@ -220,7 +220,7 @@ UDTF_DOC_CAP = 200  # bounded demo slice: the UDTF row path is the
     " the same split relationally (string_split + unnest) — API"
     " coverage for the one lateral-generator surface plain UDFs"
     " can't express",
-    tags=("text", "udf"),
+    tags=("text", "udf", "headline"),
 )
 def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDTFs return RELATIONS per input row — the Spark-4 API for
@@ -275,7 +275,7 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     " bitmap_count summed per bucket) — the roaring-bitmap recipe"
     " that replaces count(distinct)'s Expand at warehouse scale;"
     " bitmaps are exact, so the oracle is plain COUNT(DISTINCT)",
-    tags=("agg", "scale"),
+    tags=("agg", "scale", "headline"),
 )
 def bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count(distinct) plans an Expand + two-phase distinct;
@@ -324,7 +324,7 @@ HLL_REL_ERR = 0.05
     " scale answer (partial sketches merge without rescanning);"
     " hashable contract = exact count + relative-error bound, the"
     " approx_distinct_parts recipe",
-    tags=("agg", "approx", "scale"),
+    tags=("agg", "approx", "scale", "headline"),
 )
 def hll_union_region_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The point of sketch aggregates is MERGEABILITY: nation-level
@@ -391,7 +391,7 @@ def hll_union_region_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     " against an oracle that states the same argmax explicitly"
     " (count DESC, value ASC) — pinning the built-in's tie rule"
     " cross-engine",
-    tags=("agg",),
+    tags=("agg", "headline"),
 )
 def mode_brand_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DuckDB's mode() leaves ties unspecified, so the oracle states

@@ -59,7 +59,7 @@ TC_TOP = 25
     " sensitive-attribute (market segment) distribution and the"
     " global one — groups ranked by worst closeness; bounded"
     " group x category cell table, exact integer counts",
-    tags=("governance", "stats", "agg"),
+    tags=("governance", "stats", "agg", "headline"),
 )
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity bounds group SIZE and l-diversity bounds distinct
@@ -159,7 +159,7 @@ SA_Z = 2.0
     " seasonal_decompose_daily trend + weekday components) exceeds"
     f" {SA_Z} sample standard deviations — the alerting consumer of"
     " the decomposition, on the same bounded daily table",
-    tags=("temporal", "diagnostics", "stats"),
+    tags=("temporal", "diagnostics", "stats", "headline"),
 )
 def seasonal_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A decomposition is diagnostics; the operational question is
@@ -259,7 +259,7 @@ def _ql_tf_sql(t: str) -> str:
     " ranking function next to BM25 (bm25_topk) and RRF — per-doc"
     " log P(q given d) with corpus-frequency smoothing, corpus stats"
     " as a 1-row broadcast, rounded-score deterministic top-k",
-    tags=("retrieval", "text"),
+    tags=("retrieval", "text", "headline"),
 )
 def dirichlet_ql_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (bm25_topk) ranks by tf-idf saturation; query-likelihood
@@ -356,7 +356,7 @@ def dirichlet_ql_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     " [0,1] variant) — the antitrust-standard concentration index"
     " complementing gini_revenue_concentration; two combinable"
     " aggregations, per-segment totals joined back BY KEY",
-    tags=("analytics", "agg", "diagnostics"),
+    tags=("analytics", "agg", "diagnostics", "headline"),
 )
 def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini (gini_revenue_concentration) measures inequality of the
@@ -438,7 +438,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     " complementing z-score (supplier_balance_zscore) and quantile"
     " normalization; global stats as ONE 1-row broadcast, exact"
     " interpolated quantiles, deterministic 1000-row projection",
-    tags=("mlprep", "stats"),
+    tags=("mlprep", "stats", "headline"),
 )
 def feature_scaling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completes the scaler family: z-score assumes normality,

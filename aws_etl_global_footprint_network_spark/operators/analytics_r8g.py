@@ -63,7 +63,7 @@ def _er_pairs_oracle() -> str:
     " components) -> canonical entity per cluster — the record-"
     " linkage pipeline composed from the repo's fuzzy-pair and"
     f" components kernels; multi-member entities top-{ER_TOP}",
-    tags=("dedup", "mlprep", "iterative", "graph"),
+    tags=("dedup", "mlprep", "iterative", "graph", "headline"),
 )
 def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record linkage is pair detection + CLUSTERING + survivorship:
@@ -153,7 +153,7 @@ _AB_WINDOW_US = 7 * 24 * 3600 * 1_000_000  # the A/B op's 7-day window
     " scaled control) walking DOWN the score — the standard eval"
     " for incrementality targeting, on the A/B op's salted split"
     " and 7-day conversion window",
-    tags=("diagnostics", "analytics", "mlprep"),
+    tags=("diagnostics", "analytics", "mlprep", "headline"),
 )
 def qini_uplift_by_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ATE answers 'does the treatment work on average'; uplift
@@ -290,7 +290,7 @@ GDPR_MOD = 97  # deterministic ~1% forget-set: c_custkey % 97 == 0
     " (customer -> orders -> lineitem via semi joins), per-table"
     " deleted / remaining counts and shares — the blast-radius"
     " report every deletion pipeline runs before executing",
-    tags=("governance", "relational"),
+    tags=("governance", "relational", "headline"),
 )
 def gdpr_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion compliance is a CASCADE problem: forgetting a
@@ -379,7 +379,7 @@ def _dd_edges_sql() -> str:
     " parameters (the k-core threshold, the triangle support floor,"
     " skew salting) — node degrees from one pair-grain groupBy,"
     " bounded log-bin histogram close",
-    tags=("graph", "diagnostics", "agg", "shared-build"),
+    tags=("graph", "diagnostics", "agg", "shared-build", "headline"),
 )
 def degree_distribution_log_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every graph-operator parameter in this repo (KCORE_K, the

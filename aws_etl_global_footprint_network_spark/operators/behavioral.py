@@ -347,7 +347,7 @@ DECAY_HALF_LIFE_DAYS = 7
     f" {DECAY_HALF_LIFE_DAYS}-day half-life anchored at the corpus max"
     " timestamp — the feature-store scoring pass behind churn/LTV"
     " features",
-    tags=("mlprep", "agg", "temporal"),
+    tags=("mlprep", "agg", "temporal", "headline"),
 )
 def decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decay anchor is a scalar subquery — Catalyst executes it as
@@ -401,7 +401,7 @@ TOUCH_TYPES = ("view", "click", "signup")
     " user's most recent prior touchpoint (view/click/signup; none ->"
     " 'direct'), aggregated to channel revenue — an as-of join feeding"
     " an aggregate",
-    tags=("behavioral", "asof", "agg"),
+    tags=("behavioral", "asof", "agg", "headline"),
 )
 def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of (purchase <- latest touch at-or-before) then a tiny
@@ -482,7 +482,7 @@ LTV_MAX_OFFSET = 5
     " first purchase at-or-after it, latency percentiles"
     " (p50/p90/p99 days) over exact integer microseconds with ONE"
     " division per quantile; single-row result",
-    tags=("behavioral", "analytics"),
+    tags=("behavioral", "analytics", "headline"),
 )
 def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The time-to-event query behind activation dashboards: both
@@ -580,7 +580,7 @@ def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     " cohorting is integer epoch-day arithmetic (the corpus spans 30"
     " days, so day is the natural grain) and cents stay integers"
     " until one rounded division",
-    tags=("behavioral", "analytics"),
+    tags=("behavioral", "analytics", "headline"),
 )
 def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The marketing-finance curve: does a cohort's cumulative revenue
@@ -665,7 +665,7 @@ WAU_DAYS = 7
     f"daily and trailing-{WAU_DAYS}-day distinct active users plus"
     " the DAU/WAU stickiness ratio — sliding DISTINCT via the"
     " explode-to-cover-days recipe, never a windowed COUNT DISTINCT",
-    tags=("behavioral", "time", "agg"),
+    tags=("behavioral", "time", "agg", "headline"),
 )
 def sliding_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window DISTINCT does not decompose into window frames
@@ -767,7 +767,7 @@ KM_CENSOR_MONTHS = 3
     f" within {KM_CENSOR_MONTHS} months of the corpus horizon;"
     " product-limit estimator via the EXP(SUM(LN))"
     " cumulative-window identity",
-    tags=("behavioral", "stats", "timeseries"),
+    tags=("behavioral", "stats", "timeseries", "headline"),
 )
 def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survival analysis at warehouse scale: per-customer tenure
@@ -893,7 +893,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     " comparison (month m vs month m-12 via integer month-index"
     " shifted join — a 12-row LAG would silently misalign across"
     " gap months); exact-cents sums, one rounded ratio",
-    tags=("behavioral", "time", "agg"),
+    tags=("behavioral", "time", "agg", "headline"),
 )
 def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The seasonal sibling of orders_monthly_growth (MoM): YoY must

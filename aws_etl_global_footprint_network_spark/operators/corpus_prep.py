@@ -121,7 +121,7 @@ def _mode_count_sql(arr: str) -> str:
     " fraction per document with a keep flag — the repetition half of"
     " the Rae et al. quality rules (the length/symbol half is"
     " text_quality_stats)",
-    tags=("text", "mlprep", "filter"),
+    tags=("text", "mlprep", "filter", "headline"),
 )
 def repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(read_testdata(spark, sf_dir, "documents"))
@@ -512,7 +512,7 @@ LM_KEEP_THRESHOLD = -4.5
     " flag — documents of rare/garbage tokens score low. Uses"
     " avg(ln c) - ln(total) == avg(ln(c/total)), so the corpus total"
     " enters once as a scalar",
-    tags=("text", "mlprep", "filter"),
+    tags=("text", "mlprep", "filter", "headline"),
 )
 def unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-and-score in one plan: the vocabulary is a token-keyed
@@ -582,7 +582,7 @@ CHUNK_STRIDE = 48
     f"-token windows, stride {CHUNK_STRIDE} (overlap"
     f" {CHUNK_W - CHUNK_STRIDE}), each chunk's exact text pinned by"
     " md5 — the chunker every RAG ingestion pipeline runs",
-    tags=("text", "mlprep", "reshape"),
+    tags=("text", "mlprep", "reshape", "headline"),
 )
 def chunk_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-side explode: sequence(0, n_chunks-1) -> slice — the output
@@ -666,7 +666,7 @@ DUP_FRAC_MAX = 0.5
     " shared across documents, per-document duplicated fraction and"
     " the longest contiguous duplicated span — the exact-substring"
     " dedup signal (Lee et al.) complementing whole-document MinHash",
-    tags=("dedup", "text", "mlprep"),
+    tags=("dedup", "text", "mlprep", "headline"),
 )
 def dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed exact-substring detection without suffix arrays:
@@ -792,7 +792,7 @@ DSIR_TARGET_LANG = "en"
     " corpus LM (add-one smoothing, shared vocabulary) — the"
     " data-selection score used to resample a raw corpus toward a"
     " target domain",
-    tags=("text", "mlprep", "filter"),
+    tags=("text", "mlprep", "filter", "headline"),
 )
 def dsir_importance_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same scale shape as unigram_lm_score: the vocabulary (token ->

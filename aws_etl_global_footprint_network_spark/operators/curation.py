@@ -70,7 +70,7 @@ CDC_DELETE_MOD = 11
     " wins, a trailing delete tombstones the key. One hash shuffle on"
     " the key via max_by aggregation, no window, no per-key sort: the"
     " Debezium/Delta CDF apply step as a single Catalyst plan",
-    tags=("cdc", "merge", "scale"),
+    tags=("cdc", "merge", "scale", "headline"),
 )
 def cdc_apply_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction as one aggregation: ``max_by(payload, seq)`` picks
@@ -140,7 +140,7 @@ COMPACT_TARGET_BYTES = 256 * 1024
     " warehouse-maintenance job, computed with per-partition windows"
     " bounded by files-per-partition (12 here), never a global sort;"
     " all-integer arithmetic, no float hazard",
-    tags=("layout", "maintenance", "scale"),
+    tags=("layout", "maintenance", "scale", "headline"),
 )
 def file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The window partitions by table-partition (year) and orders by
@@ -207,7 +207,7 @@ WS_MOD = 4_294_967_296
     " proportionally likelier, no sequential pass, fully reproducible;"
     " executed as TakeOrderedAndProject (distributed partial top-k),"
     " never a global sort",
-    tags=("sampling", "mlprep", "scale"),
+    tags=("sampling", "mlprep", "scale", "headline"),
 )
 def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-ES reduces weighted sampling to a plain top-k, which Spark
@@ -265,7 +265,7 @@ ENTROPY_LOW_NATS = 3.0
     " identity — one shuffle on (doc, token), no per-doc sort;"
     " low-entropy docs (boilerplate, keyword stuffing) flagged on the"
     " rounded value so both engines gate identically",
-    tags=("text", "quality", "mlprep"),
+    tags=("text", "quality", "mlprep", "headline"),
 )
 def token_entropy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The identity form matters at scale: computing H from p ln p
@@ -336,7 +336,7 @@ def _bigrams_sql() -> str:
     " fluency signal one rung above the unigram scorer; count tables"
     " are JOINED on the gram key (they scale with the corpus),"
     " only the scalar token total is broadcast",
-    tags=("text", "lm", "mlprep"),
+    tags=("text", "lm", "mlprep", "headline"),
 )
 def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three shuffles total (bigram counts, unigram counts, the
@@ -436,7 +436,7 @@ def _hn_oracle() -> str:
     " (above the band) and random noise (below it) both excluded;"
     " band filter + ranking decided on the rounded score so both"
     " engines cut the same set",
-    tags=("similarity", "mlprep"),
+    tags=("similarity", "mlprep", "headline"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same scan shape as ann_cosine_topk (broadcast bounded anchor
@@ -530,7 +530,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     " ingest-batch mixture-shift monitor; the out-of-support tail is"
     " folded into a scalar so everything computes on the joined"
     " (source, token) count rows, never a dense vocabulary",
-    tags=("text", "quality", "mlprep", "scale"),
+    tags=("text", "quality", "mlprep", "scale", "headline"),
 )
 def source_jsd_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count tables joined on their natural keys (they scale with the
@@ -609,7 +609,7 @@ NOVELTY_N = 3
     " document — the diversity/templating signal dual to span-level"
     " dup detection; gram doc-counts are JOINED on the gram key (the"
     " gram table scales with the corpus), one shuffle each way",
-    tags=("text", "quality", "mlprep", "scale"),
+    tags=("text", "quality", "mlprep", "scale", "headline"),
 )
 def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate-only formulation (round-10): a gram with nd == 1
@@ -797,7 +797,7 @@ def _sem_oracle(nref: int | None = None) -> str:
     " within cells at any corpus size; output = the dropped vectors."
     " Comparisons decided on rounded grains so both engines drop the"
     " identical set",
-    tags=("dedup", "similarity", "mlprep", "scale"),
+    tags=("dedup", "similarity", "mlprep", "scale", "headline"),
 )
 def semantic_dedup_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered wrapper; see ``_semantic_dedup_drop``."""
@@ -948,7 +948,7 @@ N_SHARDS = 8
     " mass; the global rank uses the distributed-rank recipe (range"
     " repartition + per-partition rank + broadcast offsets), never a"
     " single-task window; all-integer output",
-    tags=("mlprep", "layout", "scale"),
+    tags=("mlprep", "layout", "scale", "headline"),
 )
 def shard_assignment_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shuffle-to-shards step that fixes straggler shards in a
@@ -1037,7 +1037,7 @@ def _hrw_sql() -> str:
     " output: adding a shard moves only ~1/(n+1) of the keys"
     " (n_moved_if_add_one), vs ~all keys for mod-N routing; map-only"
     " per doc, weights never materialise beyond the argmax",
-    tags=("layout", "scale"),
+    tags=("layout", "scale", "headline"),
 )
 def rendezvous_shard_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HRW beats mod-N exactly where a 100 TB corpus lives: shard

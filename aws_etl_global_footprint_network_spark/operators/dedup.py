@@ -64,7 +64,7 @@ SIMHASH_BITS = 60
     FROM documents GROUP BY text
     """,
     "exact dedup: one representative (min id) per identical text",
-    tags=("dedup",),
+    tags=("dedup", "headline"),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: groupBy on the text hash — Spark shuffles hashed keys,
@@ -298,7 +298,7 @@ def _minhash_oracle() -> str:
     _minhash_oracle(),
     f"MinHash({MINHASH_K})+LSH({MINHASH_BANDS} bands) candidate pairs,"
     f" verified at exact Jaccard >= {JACCARD_THRESHOLD}",
-    tags=("dedup", "lsh"),
+    tags=("dedup", "lsh", "headline"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via MinHash banding, verified with exact Jaccard.
@@ -408,7 +408,7 @@ def _simhash_oracle() -> str:
     "dedup_simhash",
     _simhash_oracle(),
     f"{SIMHASH_BITS}-bit SimHash fingerprint per document",
-    tags=("dedup",),
+    tags=("dedup", "headline"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-aggregated fingerprint: bit j of the hash votes +1/-1 per
@@ -554,7 +554,7 @@ def _embedding_dedup_oracle() -> str:
     " at the near-dup cosine threshold, then a keep/drop decision —"
     " every vector that matches a lower-id vector is dropped in favor"
     " of its lowest-id partner (the canonical keeper)",
-    tags=("dedup", "similarity"),
+    tags=("dedup", "similarity", "headline"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fifth dedup family: near-duplicate detection by embedding

@@ -93,7 +93,7 @@ def weekend(ts):
     " = first purchase within 7 days of the user's first event"
     " (integer-microsecond window); two-proportion pooled z-statistic"
     " from exact integer counts, single-row result",
-    tags=("diagnostics", "analytics"),
+    tags=("diagnostics", "analytics", "headline"),
 )
 def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The experimentation readout shape: one shuffle on user_id
@@ -204,7 +204,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     " as re-identification risk with the row-suppression rate; floor"
     " division on integer cents buckets the balance identically in"
     " both engines",
-    tags=("diagnostics", "dq", "privacy"),
+    tags=("diagnostics", "dq", "privacy", "headline"),
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The release-gating privacy audit: every row whose
@@ -272,7 +272,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     " that decides broadcast vs shuffle vs salt BEFORE the join runs;"
     " all-integer, exactness pinned against a real bounded join in"
     " tests",
-    tags=("diagnostics", "planning"),
+    tags=("diagnostics", "planning", "headline"),
 )
 def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What a cost-based optimizer does with column statistics, as an
@@ -349,7 +349,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     " ratio — the number that decides whether a key needs salting or"
     " AQE skew handling; counts are exact integers, the p99 is the"
     " shared interpolated-percentile-of-integers grain",
-    tags=("diagnostics", "planning"),
+    tags=("diagnostics", "planning", "headline"),
 )
 def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pre-flight skew check behind ``salted_join_revenue``'s
@@ -419,7 +419,7 @@ DP_DENOM = float(1 << 52)
     " noise via the inverse CDF over a DETERMINISTIC md5-uniform (so"
     " the release is engine- and rerun-identical; swap the hash for a"
     " CSPRNG draw in production); constant-size result",
-    tags=("diagnostics", "privacy"),
+    tags=("diagnostics", "privacy", "headline"),
 )
 def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The private-release aggregation shape: the exact groupBy runs
@@ -502,7 +502,7 @@ BOOT_K_HI = 38
     " from exact int64 partial sums, 90% interval as order statistics"
     " — the distributed-resampling pattern (explode xB + combinable"
     " agg), no per-replicate data movement",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Poisson bootstrap is THE way to bootstrap at cluster
@@ -633,7 +633,7 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     " weekend spend per event type: t statistic and"
     " Welch-Satterthwaite degrees of freedom entirely from"
     " conditional integer sufficient statistics in ONE groupBy",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def welch_mean_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed hypothesis testing without materialising either
@@ -782,7 +782,7 @@ def welch_mean_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     " observed counts vs expected = row_total * col_total / N, the"
     " per-cell (O-E)^2/E contributions (client sums terms and looks"
     " up the (R-1)(C-1)-df critical value)",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def chisq_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical independence testing from ONE contingency pass:
@@ -882,7 +882,7 @@ def chisq_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     " event type, computed RANK-FREE from value-grouped counts and"
     " an exclusive cumulative count (tie-corrected normal"
     " approximation) — no per-row rank is ever materialised",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scale trick: U needs rank SUMS, not ranks. Group both
@@ -1033,7 +1033,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     " INTEGER cross-multiplied max over value-grouped cumulative"
     " counts (one division at the end), plus the"
     " sqrt(n1*n2/(n1+n2))-scaled statistic",
-    tags=("diagnostics", "stats", "agg"),
+    tags=("diagnostics", "stats", "agg", "headline"),
 )
 def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distribution-difference member of the two-sample trio
@@ -1164,7 +1164,7 @@ L_DIVERSITY = 3
     " DISTINCT sensitive values (market segment) — a k-anonymous"
     " group whose members all share one sensitive value still leaks"
     " it (the homogeneity attack k-anonymity misses)",
-    tags=("diagnostics", "dq", "privacy"),
+    tags=("diagnostics", "dq", "privacy", "headline"),
 )
 def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity's complement (Machanavajjhala et al.): a group of
@@ -1254,7 +1254,7 @@ PSI_BINS = 10
     " statistics), both halves count per bin, per-bin"
     " (p-q)*ln(p/q) contributions — the standard score-drift"
     " monitor, emitted at cell grain like the chi-square operator",
-    tags=("diagnostics", "stats", "drift"),
+    tags=("diagnostics", "stats", "drift", "headline"),
 )
 def psi_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The model-monitoring drift readout: bin edges come from the

@@ -168,27 +168,6 @@ def bloom_prune(
     return out.filter(cond).select(probe.columns)
 
 
-def bloom_might_contain(key, words: list[int], bits: int):
-    """Membership test column against a literal bitmap — the SMALL-
-    bitmap form (<= BLOOM_MIN_BITS): zero joins, the words ride the
-    plan as one ArrayType literal (a single numpy-backed py4j
-    transfer; a Python list would build CreateArray of bits/32
-    scalar literals, one JVM call each). Kept for unit-level checks
-    and tiny builds; the registered operator always uses
-    ``bloom_prune`` — Catalyst cost on this literal grows with the
-    bitmap (~12 s plan-side at 2^21 bits) while the relation form
-    stays flat."""
-    import numpy as np
-
-    arr = F.lit(np.asarray(words, dtype=np.int64))
-    test = F.lit(True)
-    for i in range(BLOOM_HASHES):
-        pos = F.pmod(F.xxhash64(key, F.lit(i)), F.lit(bits))
-        word = F.element_at(arr, (pos / 32).cast("int") + 1)
-        test = test & (word.bitwiseAND(_bit_mask(pos)) != 0)
-    return test
-
-
 @register(
     "bloom_semi_join_prune",
     f"""
@@ -209,7 +188,7 @@ def bloom_might_contain(key, words: list[int], bits: int):
     " the false positives — the result is EXACTLY the plain semi join"
     " (the oracle), the bitmap only changes where the work happens;"
     " revenue in exact integer cents (engine-order-independent)",
-    tags=("join", "bloom", "scale"),
+    tags=("join", "bloom", "scale", "headline"),
 )
 def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pattern pays off when the key SET outgrows broadcast but the
@@ -358,7 +337,7 @@ def _sessions_sql() -> str:
     " exploded onto an hourly bucket grid, equi-joined on the bucket,"
     " exact-overlap filtered and pair-deduped (oracle: the plain"
     " non-equi overlap join)",
-    tags=("join", "temporal", "scale"),
+    tags=("join", "temporal", "scale", "headline"),
 )
 def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The non-equi overlap predicate would plan as a nested loop; the
@@ -476,7 +455,7 @@ FUZZY_MAX_DIST = 1
     " neighborhood blocking (equi join on deletion variants) + exact"
     " levenshtein verify — never the quadratic compare (oracle: the"
     " direct pairwise join over the bounded distinct-name set)",
-    tags=("join", "text", "scale"),
+    tags=("join", "text", "scale", "headline"),
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SymSpell blocking: two strings within edit distance 1 share at

@@ -78,7 +78,7 @@ def _morton_sql(a: str, b: str) -> str:
     f" {ZFILES} files, emitting each file's min/max in BOTH dimensions"
     " — the per-file skipping bounds a lakehouse OPTIMIZE ZORDER"
     " write would produce",
-    tags=("layout", "agg"),
+    tags=("layout", "agg", "headline"),
 )
 def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The emitted (file_id, pk/sk min-max) table IS the proof of the

@@ -173,7 +173,7 @@ def _copurchase_edges(
     f" sharing >= {TRI_MIN_SUPPORT} orders are adjacent):"
     " degree-oriented wedge join + closing-edge join, per-node"
     f" triangle counts, top-{TRI_TOP}",
-    tags=("graph", "analytics", "shared-build"),
+    tags=("graph", "analytics", "shared-build", "headline"),
 )
 def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standard distributed triangle kernel: orient every edge
@@ -282,7 +282,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-market-segment Gini coefficient of customer order revenue"
     " (income-inequality / revenue-concentration analytics), exact"
     " integer-cents arithmetic with one final division",
-    tags=("analytics", "scale"),
+    tags=("analytics", "scale", "headline"),
 )
 def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini via the sorted-rank identity
@@ -478,7 +478,7 @@ def _bitext_oracle() -> str:
     f" source/target corpora, csls = 2*cos - mean-top-{BT_K}"
     f" neighborhood similarities on both sides, top-{BT_TOP} matches"
     f" per query",
-    tags=("similarity", "mining"),
+    tags=("similarity", "mining", "headline"),
 )
 def bitext_margin_csls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin/CSLS scoring corrects cosine's hubness problem in
@@ -645,7 +645,7 @@ def _bpe_oracle() -> str:
     " corpus word vocabulary: adjacent-symbol pair counting, argmax"
     " merge selection (count desc, pair asc tie-break), left-to-right"
     " non-overlapping merge application",
-    tags=("text", "tokenizer", "iterative"),
+    tags=("text", "tokenizer", "iterative", "headline"),
 )
 def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inner loop of tokenizer training, expressed at vocabulary
@@ -780,7 +780,7 @@ def _simhash_pairs_oracle() -> str:
     f" {SIMHASH_BANDS} bands x {SIMHASH_BAND_BITS} bits banding over"
     f" DISTINCT fingerprints, exact bit_count(xor) verify at Hamming"
     f" <= {HAMMING_MAX} (recall 1.0 by pigeonhole at that radius)",
-    tags=("dedup", "lsh"),
+    tags=("dedup", "lsh", "headline"),
 )
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded index over SimHash fingerprints (Manku et al.'s
@@ -932,7 +932,7 @@ def _kcore_oracle() -> str:
     " of the part co-purchase graph: iteratively drop nodes below"
     " degree k, report the surviving subgraph's nodes and in-core"
     " degrees",
-    tags=("graph", "iterative", "shared-build"),
+    tags=("graph", "iterative", "shared-build", "headline"),
 )
 def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The density-filter companion to connected components and
@@ -1086,7 +1086,7 @@ QN_BUCKETS = 20
     " bucket is mapped to the pooled cross-type bucket mean — the"
     " batch-effect-removal transform (quantile normalization) at"
     " bucket grain",
-    tags=("analytics", "ml-prep", "scale"),
+    tags=("analytics", "ml-prep", "scale", "headline"),
 )
 def quantile_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization (the bioinformatics/feature-prep
@@ -1295,7 +1295,7 @@ def _pca_oracle() -> str:
     f" rounds, corpus projected onto PC1, top-{PCA_TOP} scores —"
     " moment aggregation is the only corpus pass; the eigensolve is"
     " bounded-size arithmetic",
-    tags=("similarity", "ml-prep", "linalg", "iterative"),
+    tags=("similarity", "ml-prep", "linalg", "iterative", "headline"),
 )
 def pca_power_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed-linear-algebra recipe behind PCA whitening and
@@ -1448,7 +1448,7 @@ def _bpe_apply_oracle() -> str:
     " learned BPE merges (same argmax chain as bpe_merge_step, applied"
     " through the final iteration) and report per-source token/char"
     " compression — the apply half of tokenizer training",
-    tags=("text", "tokenizer", "iterative"),
+    tags=("text", "tokenizer", "iterative", "headline"),
 )
 def bpe_apply_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn-then-apply at vocabulary grain: the merge chain is the
@@ -1622,7 +1622,7 @@ EWMA_SPIKE_MULT = 2.0
     f" moving average (r=1/2, {EWMA_WINDOW}-row trailing window) via"
     " the rescaled-cumsum identity, spike flag where today's spend"
     f" exceeds {EWMA_SPIKE_MULT}x the prior smoothed level",
-    tags=("analytics", "timeseries"),
+    tags=("analytics", "timeseries", "headline"),
 )
 def ewma_spend_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential smoothing WITHOUT recursion: the EWMA weighted
@@ -1722,7 +1722,7 @@ LINK_TOP = 30
     "link prediction on the co-purchase affinity graph: Jaccard"
     " neighbor-set similarity of NON-adjacent part pairs sharing a"
     f" common neighbor, top-{LINK_TOP} predicted edges",
-    tags=("graph", "analytics", "shared-build"),
+    tags=("graph", "analytics", "shared-build", "headline"),
 )
 def jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic common-neighbors link predictor (Liben-Nowell &
@@ -1837,7 +1837,7 @@ II_MIN_CO = 2
     f" co/sqrt(f_a*f_b) over distinct co-purchase counts (>= "
     f"{II_MIN_CO} shared orders), top-{II_TOP_PER_ITEM} neighbors"
     " per item — the 'customers also bought' scoring kernel",
-    tags=("graph", "mlprep", "analytics", "shared-build"),
+    tags=("graph", "mlprep", "analytics", "shared-build", "headline"),
 )
 def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic neighborhood recommender (Sarwar et al., item-based
@@ -1960,7 +1960,7 @@ SEQ_MIN_COUNT = 2
     " between each customer's CONSECUTIVE orders (part in order k ->"
     f" part in order k+1), count floor {SEQ_MIN_COUNT},"
     f" top-{SEQ_TOP_PER_ITEM} next items per antecedent",
-    tags=("graph", "mlprep", "behavioral", "shared-build"),
+    tags=("graph", "mlprep", "behavioral", "shared-build", "headline"),
 )
 def next_order_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What do customers buy NEXT? Unlike ``item_item_cosine_topk``
@@ -2086,7 +2086,7 @@ def _bfs_oracle() -> str:
     f"{TRI_MIN_SUPPORT} part co-purchase graph from the minimum-key"
     " node: per-node shortest hop distance — the reachability/radius"
     " primitive of the graph family",
-    tags=("graph", "iterative", "shared-build"),
+    tags=("graph", "iterative", "shared-build", "headline"),
 )
 def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frontier-expansion BFS, the fourth member of the bounded-round

@@ -241,17 +241,15 @@ def _local_components(nodes, ui, vi):
     return nodes[roots]
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, local_cap: int | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Min-label propagation over an undirected edge list
     ``(u, v)`` -> ``(node, cluster_id)`` where cluster_id is the
     smallest node id in the component.
 
     Width dispatch (round 12): ``kernels.bounded_collect`` pulls the
     edge list as one Arrow table when it holds at most
-    ``kernels.LOCAL_EDGE_CAP`` edges (``local_cap`` overrides it; any
-    cap below the edge count forces the distributed path). The
+    ``kernels.LOCAL_EDGE_CAP`` edges (tests force the distributed path
+    by patching that cap below the edge count). The
     components then resolve with a driver-side union-find and ship
     back as one Arrow batch: identical labels, none of the per-round
     job machinery that dominates tiny graphs (sf1's 8-edge graph
@@ -270,14 +268,15 @@ def connected_components(
     cluster: ``checkpoint`` to durable storage). The per-round
     convergence count is a driver-side scalar — one long per round,
     the same bounded pattern as any Pregel superstep barrier."""
-    cap = kernels.LOCAL_EDGE_CAP if local_cap is None else local_cap
     spark = edges.sparkSession
     # node-id type is preserved (long doc ids here, string names in
     # entity resolution): numpy's sort order on int64 and on Python
     # strings both match Spark's F.least / binary-collation LEAST,
     # so the min-label contract is identical on either branch
     node_t = edges.schema["u"].dataType.simpleString()
-    probe = kernels.bounded_collect(edges.select("u", "v"), cap, "cc_edges")
+    probe = kernels.bounded_collect(
+        edges.select("u", "v"), kernels.LOCAL_EDGE_CAP, "cc_edges"
+    )
     if probe is not None:
         nodes, ui, vi = kernels.edge_index(probe)
         return kernels.local_frame(
@@ -591,7 +590,7 @@ def _corpus_pipeline_oracle() -> str:
     " hash) -> near-dup drop (MinHash-LSH pairs whose lower id"
     " survived) -> deterministic train/test split — one declarative"
     " plan, every stage reusing the standalone operators' semantics",
-    tags=("mlprep", "dedup", "text"),
+    tags=("mlprep", "dedup", "text", "headline"),
 )
 def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What a user actually runs before training: the whole prep
@@ -792,7 +791,7 @@ CURRICULUM_PHASES = 4
     " difficulty proxy (mean token length), with a deterministic md5"
     " shuffle key for intra-phase ordering — the data-ordering half of"
     " curriculum learning schedules",
-    tags=("mlprep", "ranking"),
+    tags=("mlprep", "ranking", "headline"),
 )
 def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phases come from :func:`adaptive_ntile` (windowed under the measured 200k-row cap;
@@ -877,7 +876,7 @@ LIFT_BUCKETS = 10
     " (has >= 1 URGENT-priority order), cumulative capture and lift"
     " vs the base rate"
     " — the standard targeting-model evaluation readout",
-    tags=("mlprep", "analytics", "agg"),
+    tags=("mlprep", "analytics", "agg", "headline"),
 )
 def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The gains-chart shape every targeting/propensity pipeline
@@ -985,7 +984,7 @@ FH_DIM = 32
     " buckets — a fixed-dimension sparse representation with NO"
     " vocabulary table, the unbiased signed variant; sparse"
     " (doc, dim, weight) triples, zero-weight cells dropped",
-    tags=("mlprep", "text"),
+    tags=("mlprep", "text", "headline"),
 )
 def feature_hashing_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-free vectorization — the property that matters at

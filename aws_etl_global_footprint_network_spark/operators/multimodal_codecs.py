@@ -214,7 +214,7 @@ def resize_thumbnails(media: DataFrame) -> DataFrame:
     "neighbor half-size thumbnail; the oracle recomputes the resampled"
     " pixel sum from the generative text formula, so the hash gate"
     " verifies actual decoded content",
-    tags=("multimodal", "image"),
+    tags=("multimodal", "image", "headline"),
 )
 def image_resize_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_testdata(spark, sf_dir, "documents")
@@ -337,7 +337,7 @@ def extract_audio_features(audio: DataFrame) -> DataFrame:
     " sample rate / duration come from the actual header and the"
     " energy (integer sum of squares) and peak from the PCM samples —"
     " all hash-checked against the generative formula",
-    tags=("multimodal", "audio"),
+    tags=("multimodal", "audio", "headline"),
 )
 def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_testdata(spark, sf_dir, "documents")
@@ -462,7 +462,7 @@ def sample_frames(videos: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     "video frame sampling: toy container demux + every-Nth-frame"
     " key-frame selection; sampled frames run the real PNG decoder and"
     " the oracle recomputes each decoded frame's pixel sum",
-    tags=("multimodal", "video"),
+    tags=("multimodal", "video", "headline"),
 )
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_testdata(spark, sf_dir, "documents").filter(
@@ -553,7 +553,7 @@ def _phash_oracle() -> str:
     " the downsampled mean, integer compare); the oracle recomputes"
     " every bit from the generative pixel formula, so the hash gate"
     " verifies actual decoded content end-to-end",
-    tags=("multimodal", "image", "dedup"),
+    tags=("multimodal", "image", "dedup", "headline"),
 )
 def image_phash_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fingerprint that bridges the multimodal and dedup families:

@@ -129,7 +129,7 @@ def _exact_dominance(cand: DataFrame, max_broadcast: int) -> DataFrame:
     " prune + exact dominance filter on the bounded candidate set);"
     " the oracle independently derives the same set via per-price min"
     " + strict prefix min — no arithmetic, exact parity",
-    tags=("analytics", "skyline"),
+    tags=("analytics", "skyline", "headline"),
 )
 def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase distributed skyline; see module docstring. The final

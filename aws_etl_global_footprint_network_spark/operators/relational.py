@@ -50,7 +50,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     "TPC-H Q1-style pricing summary: pushdown filter + 8-agg groupBy",
-    tags=("agg", "filter"),
+    tags=("agg", "filter", "headline"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: map-side partial aggregation on 2 low-cardinality keys
@@ -85,7 +85,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderkey LIMIT 10
     """,
     "join + group + ordered limit (top-k via TakeOrderedAndProject)",
-    tags=("join", "agg", "topk"),
+    tags=("join", "agg", "topk", "headline"),
 )
 def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: lineitem is pre-aggregated to one row per orderkey
@@ -122,7 +122,7 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_custkey
     """,
     "left outer join preserving customers with zero orders",
-    tags=("join",),
+    tags=("join", "headline"),
 )
 def customer_order_stats_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -208,7 +208,7 @@ def nation_region_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     "TPC-H Q5-style star join: local supplier revenue by nation",
-    tags=("join", "agg"),
+    tags=("join", "agg", "headline"),
 )
 def regional_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5's region restriction reaches the facts only transitively
@@ -287,7 +287,7 @@ def regional_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderpriority
     """,
     "grouped count(distinct)",
-    tags=("agg",),
+    tags=("agg", "headline"),
 )
 def priority_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -397,7 +397,7 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
     """,
     "ROLLUP with GROUPING() indicators",
-    tags=("agg",),
+    tags=("agg", "headline"),
 )
 def rollup_lineitem_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -516,7 +516,7 @@ def set_except_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM part) WHERE rn <= 3
     """,
     "top-k per group via row_number (deterministic tie-break)",
-    tags=("window",),
+    tags=("window", "headline"),
 )
 def top3_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
@@ -607,7 +607,7 @@ def events_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions GROUP BY user_id, session_id
     """,
     "gap-based sessionization: lag + running flag-sum + per-session agg",
-    tags=("window", "agg", "sessionize"),
+    tags=("window", "agg", "sessionize", "headline"),
 )
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: one shuffle on user_id serves both windows and the final
@@ -789,7 +789,7 @@ def events_year_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, event_type, strftime(ts, '%Y-%W')
     """,
     "the reference's log-compound aggregate (A4) on the events table",
-    tags=("agg", "time", "flagship"),
+    tags=("agg", "time", "flagship", "headline"),
 )
 def weekly_compound_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature EXP(SUM(LN(1+r)))-1
@@ -820,7 +820,7 @@ def weekly_compound_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
     "the reference's cumulative compound window (W1) on events",
-    tags=("window", "time", "flagship"),
+    tags=("window", "time", "flagship", "headline"),
 )
 def compound_evolution_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

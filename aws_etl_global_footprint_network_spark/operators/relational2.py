@@ -442,7 +442,7 @@ EQUI_DEPTH_BINS = 10
     " boundaries of part retail price (each bin holds the same row"
     " count ±1) — the optimizer/UI statistic equi-width histograms"
     " can't give you on skewed data",
-    tags=("agg", "stats", "ranking"),
+    tags=("agg", "stats", "ranking", "headline"),
 )
 def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact NTILE via :func:`adaptive_ntile`: a plain window when
@@ -495,7 +495,7 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     " part + supplier), aggregated to region x brand revenue — the"
     " canonical warehouse ETL shape; revenue in exact integer cents"
     " (engine-order-independent)",
-    tags=("join", "agg", "star"),
+    tags=("join", "agg", "star", "headline"),
 )
 def star_denormalize_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Catalyst plan, six joins: the true dimensions
@@ -563,7 +563,7 @@ DQ_RULES = (
     " quantity/discount/tax policy), aggregated to per-rule counts and"
     " rates — the expectation-suite pattern (Deequ/Great Expectations)"
     " as one Spark plan",
-    tags=("quality", "agg"),
+    tags=("quality", "agg", "headline"),
 )
 def dq_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All rules evaluate in ONE scan of the joined fact table
@@ -631,7 +631,7 @@ WINSOR_HI = 0.95
     " clipped to them — the outlier-robust aggregate (two passes:"
     " bounds, then clip+mean; bounds broadcast back, 25 rows); clip"
     " decided on the shared rounded grain in both engines",
-    tags=("agg", "stats", "robust"),
+    tags=("agg", "stats", "robust", "headline"),
 )
 def winsorized_acctbal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's exact ``percentile`` aggregate sorts within each group
@@ -690,7 +690,7 @@ IVM_DELTA_MOD = 10
     " (counts and exact-cents sums re-add, avg derives) — the"
     " materialized-view refresh that touches only the delta, verified"
     " against the full recompute (the oracle)",
-    tags=("agg", "incremental", "scale"),
+    tags=("agg", "incremental", "scale", "headline"),
 )
 def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The merge is a second groupBy over the union of two partial
@@ -741,7 +741,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     " reaches zero drop from the view — the delete/update half of"
     " materialized-view refresh, verified against the direct"
     " aggregate over the surviving rows",
-    tags=("agg", "incremental", "cdc", "scale"),
+    tags=("agg", "incremental", "cdc", "scale", "headline"),
 )
 def incremental_agg_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The other half of IVM: inserts add partials, deletes SUBTRACT
@@ -807,7 +807,7 @@ Q21_TOP = 25
     " supplier had a return (the lone-fault pattern); oracle keeps the"
     " correlated-subquery form, the Spark plan uses the aggregate"
     f" rewrite; top-{Q21_TOP} by count",
-    tags=("relational", "subquery"),
+    tags=("relational", "subquery", "headline"),
 )
 def lone_fault_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic doubly-correlated pattern (TPC-H Q21's shape on
@@ -915,7 +915,7 @@ IVM_JOIN_CUST_MOD = 11   # customers with c_custkey % 11 == 0 are the delta
     " (dA><B + A><dB + dA><dB unioned onto the stored base join) —"
     " the view-refresh algebra for joins, verified against the"
     " direct full join (the oracle); exact-cents revenue by nation",
-    tags=("join", "incremental", "scale"),
+    tags=("join", "incremental", "scale", "headline"),
 )
 def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized JOIN views refresh by the product rule, not by
@@ -991,7 +991,7 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     " sqrt((1-r_xz^2)(1-r_yz^2)) from the three pairwise"
     " correlations of one grouped pass — the confounder-adjusted"
     " association readout",
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "headline"),
 )
 def partial_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Does price relate to quantity beyond what discount explains?
@@ -1078,7 +1078,7 @@ def partial_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     " exclusive cumulative counts (the doubled-rank integers"
     " 2*cb + t + 1), joined back by VALUE key, then Pearson on the"
     " integer rank sums — no per-row rank window ever runs",
-    tags=("agg", "stats", "rank-grain-floor"),
+    tags=("agg", "stats", "rank-grain-floor", "headline"),
 )
 def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monotone association at corpus scale: Spearman is Pearson on

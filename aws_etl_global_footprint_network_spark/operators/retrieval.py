@@ -107,7 +107,7 @@ _SCORE_SQL = " + ".join(f"({_bm25_contrib_sql(t)})" for t in QUERY_TERMS)
     f" fixed query {QUERY_TERMS}; per-term tf is a map-side array fold"
     " (no explode), corpus stats are a broadcast 1-row aggregate, and"
     " the cut is ORDER BY rounded score + doc_id LIMIT k",
-    tags=("text", "retrieval"),
+    tags=("text", "retrieval", "headline"),
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranked retrieval without an index: per-document tf for a short
@@ -170,7 +170,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"inverted-index build primitive: posting-list stats (df, cf,"
     f" doc-id range) per token, top-{POSTINGS_TOP} by document"
     " frequency — one tokenize + one groupBy-on-token shuffle",
-    tags=("text", "retrieval"),
+    tags=("text", "retrieval", "headline"),
 )
 def inverted_postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index-build shape: map-side tokenize/explode, one shuffle
@@ -260,7 +260,7 @@ RRF_QUERY_VEC = 7
     f" for query vector {RRF_QUERY_VEC} over docs that have embeddings;"
     " rrf = sum over rankers of 1/(k + rank), absent rank contributes"
     f" 0 (rank sentinel 0); fused top-{RRF_TOPK}",
-    tags=("text", "retrieval", "similarity"),
+    tags=("text", "retrieval", "similarity", "headline"),
 )
 def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RAG-stack retrieval shape: a lexical ranker and a dense

@@ -183,7 +183,7 @@ def _extra_bits_sql(nref: int) -> str:
     FROM ranked WHERE rank <= {TOPK}
     """,
     f"brute-force cosine top-{TOPK} for the first {N_QUERIES} query vectors",
-    tags=("similarity",),
+    tags=("similarity", "headline"),
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: broadcast the (small) query set against the corpus —
@@ -404,7 +404,7 @@ def band_candidate_pairs(bands: DataFrame, id_col: str = "vec_id") -> DataFrame:
     f"sign-LSH ({LSH_BANDS} bands x {BITS_PER_BAND} bits) near-dup"
     f" pairs on the twin-augmented corpus, verified at cosine >="
     f" {LSH_PAIR_THRESHOLD}",
-    tags=("similarity", "lsh"),
+    tags=("similarity", "lsh", "headline"),
 )
 def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection LSH: bucket join replaces the all-pairs
@@ -691,7 +691,7 @@ def _adaptive_lsh_pairs(
     f" bits ({BITS_PER_BAND}+log2(n/{ADAPTIVE_NREF}) per band,"
     f" Hamming-1 probes on the extra bits), verified at cosine >="
     f" {LSH_PAIR_THRESHOLD}",
-    tags=("similarity", "lsh"),
+    tags=("similarity", "lsh", "headline"),
 )
 def ann_lsh_pairs_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_lsh_pairs`` with the geometry law from its docstring
@@ -793,7 +793,7 @@ def ivf_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "nearest-centroid assignment (IVF coarse quantization): every"
     " vector routed to its closest label centroid",
-    tags=("similarity", "ivf"),
+    tags=("similarity", "ivf", "headline"),
 )
 def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF probe path: centroids (tiny) broadcast against the
@@ -1036,7 +1036,7 @@ def _kmeans_oracle() -> str:
     " label-centroid init, with per-round rounding keeping both"
     " engines on identical centroids — final centroids + cluster"
     " sizes",
-    tags=("similarity", "ivf", "iterative"),
+    tags=("similarity", "ivf", "iterative", "headline"),
 )
 def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd iteration as bounded partial-statistics passes (round

@@ -27,10 +27,10 @@ Four operators, each oracle-paired:
   RERANK_R — the FAISS refine pipeline; measured recall@5 0.84 at
   sf0.1 on the isotropic (worst-case) corpus.
 
-Scale posture: codebooks are M·K = 128 rows (broadcast); training is
-one equi-join + argmin aggregate (MIN(STRUCT(d, code)), map-side
-partial) + grouped mean per round (the Lloyd shape); encoding is
-map-only against the broadcast codebook; ADC
+Scale posture: codebooks are M·K = 256 cells; training is one Arrow
+partial-statistics pass closed on the driver (the numpy kernel path
+below), one argmin + grouped mean per round (the Lloyd shape);
+encoding is map-only against the driver codebook; ADC
 search joins the code table to a broadcast LUT on (subspace, code) —
 all equi-joins, no pairwise vector math on the corpus side. Compose
 with the IVF coarse quantizer (``ivf_topk_probe``) to prune which
@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.functions import kernels
-from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
 from aws_etl_global_footprint_network_spark.functions.compat import (
     round_compat,
     round_compat_np,
@@ -127,100 +126,6 @@ def _pq_prefix_sql() -> str:
         FROM d1) WHERE rn = 1)"""
 
 
-# -------------------------------------------------------------- Spark
-def _subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, m, sv): each vector split into M SUBDIM-dim pieces —
-    map-only (explode of a constant-length sequence, then slice)."""
-    emb = spread(read_testdata(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double_array("embedding").alias("e")
-    )
-    return emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(M - 1))).alias("m"),
-        "e",
-    ).select(
-        "vec_id",
-        "m",
-        F.slice(F.col("e"), F.col("m") * SUBDIM + 1, SUBDIM).alias("sv"),
-    )
-
-
-def _sq_sub(a: str, b: str):
-    """Squared distance between two SUBDIM-element arrays, unrolled to
-    a flat SUBDIM-term expression (round 12): ``aggregate(zip_with)``
-    lambdas are interpreted per element (the round-11 LSH projection
-    lesson), while the unrolled sum whole-stage-codegens. Bit-exact
-    vs the fold: the fold's seed step computes 0.0 + t1 == t1 (t1 is
-    a square, so never -0.0) and both accumulate strictly left to
-    right. Only used at SUBDIM (= 4) terms — far under the janino
-    64 KB method limit that bit the 88-plane unroll."""
-    terms = [
-        (F.element_at(a, i) - F.element_at(b, i))
-        * (F.element_at(a, i) - F.element_at(b, i))
-        for i in range(1, SUBDIM + 1)
-    ]
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = expr + t
-    return expr
-
-
-def _assign(subv: DataFrame, cb: DataFrame) -> DataFrame:
-    """Nearest-codebook-entry per (vec_id, m): equi-join on subspace
-    against the broadcast codebook, then argmin via
-    ``MIN(STRUCT(d, code))`` — a partially-aggregating groupBy
-    (round 12) instead of the former row_number window, which sorted
-    all N·M·K distance rows through an exchange. Struct comparison is
-    lexicographic on (d, code), exactly the window's ORDER BY d, code
-    rank-1 row, so the result is identical; the aggregate combines
-    map-side and never materialises a global sort (guide §2.3)."""
-    d = subv.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "code", _sq_sub("sv", "c").alias("d")
-    )
-    return (
-        d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d", "code")).alias("b"))
-        .select(
-            "vec_id", "m", F.col("b.code").alias("code"), F.col("b.d").alias("d")
-        )
-    )
-
-
-def _trained_codebook(
-    subv: DataFrame, scope: CacheScope | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(cb1, asg0): one Lloyd refinement of the seed codebook. The
-    seed is the first K vectors' subvectors — deterministic, no RNG —
-    and the refined centroids are grouped means rounded at PQ_ROUND so
-    both engines sit on bit-identical codebooks.
-
-    ``scope`` (round 12): every ADC consumer references cb1 at least
-    twice (corpus assignment + query LUT), and the unpersisted M·K-row
-    frame re-executed the whole training chain per reference — the
-    dominant cost of the ADC queries at sf0.1 (pq_adc_rerank_topk
-    ~4.1 s, of which <0.7 s was the actual search). Persisting the
-    256-row codebook in the caller's CacheScope runs training once."""
-    cb0 = subv.filter(F.col("vec_id") < K).select(
-        "m", F.col("vec_id").alias("code"), F.col("sv").alias("c")
-    )
-    asg0 = _assign(subv, cb0).select("vec_id", "m", "code")
-    upd = asg0.join(subv, ["vec_id", "m"]).select(
-        "m", "code", F.posexplode("sv").alias("spos0", "val")
-    ).select("m", "code", (F.col("spos0") + 1).alias("spos"), "val")
-    cb1e = upd.groupBy("m", "code", "spos").agg(
-        round_compat(F.avg("val"), PQ_ROUND).alias("cv")
-    )
-    cb1 = cb1e.groupBy("m", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("spos", "cv"))),
-            lambda s: s.cv,
-        ).alias("c")
-    )
-    if scope is not None:
-        cb1 = scope.persist(cb1)
-    return cb1, asg0
-
-
 # ------------------------------------------------------- numpy kernel path
 # Round 13 (verdict item 2): the registered PQ queries no longer run
 # the Lloyd training chain as a Catalyst job tree (subvector explode ->
@@ -231,20 +136,20 @@ def _trained_codebook(
 # §4.2/§2.3 — the `_band_bucket_frame` pattern), closed on the driver
 # (the pca/union-find constant-size-close precedent), and re-entering
 # the corpus pass as plain Python state. Bit-exactness contract:
-#  * every distance is the same unrolled left-to-right float64 chain
-#    as `_sq_sub` / the oracle's `list_sum(list_transform(...))`
-#    (products rounded once, sums strictly left-assoc), so argmin
-#    code assignments are bit-identical;
+#  * every distance is the same left-to-right float64 chain as the
+#    oracle's `list_sum(list_transform(...))` (products rounded once,
+#    sums strictly left-assoc), so argmin code assignments are
+#    bit-identical;
 #  * argmin ties break to the LOWEST code on both paths (np.argmin
-#    first-occurrence over ascending code order == MIN(STRUCT(d,
-#    code)));
+#    first-occurrence over ascending code order == the oracle's
+#    ROW_NUMBER() OVER (ORDER BY d, code) = 1);
 #  * centroids are grouped MEANS rounded at PQ_ROUND: summation order
 #    differs between numpy partials, Spark's partial aggregation and
 #    DuckDB — exactly as it already differed cross-engine — and the
 #    1e-6 rounding is what pins all three (the standing CENTROID_ROUND
 #    contract); `round_compat_np` mirrors round_compat's HALF_UP exactly.
-# The JVM helpers above stay as the reference implementation; a test
-# pins the kernel-trained codebook cell-identical to the JVM one.
+# `test_oracle_parity[pq_train_codebooks]` pins the kernel-trained
+# codebook (cells, centroid values, member counts) to the oracle's.
 
 
 def _collect_head(spark: SparkSession, sf_dir: str, n: int) -> dict:
@@ -260,8 +165,8 @@ def _collect_head(spark: SparkSession, sf_dir: str, n: int) -> dict:
 
 
 def _sq_chain(sq):
-    """Left-associated sum over the last axis — the `_sq_sub` /
-    list_sum fold order, vectorized."""
+    """Left-associated sum over the last axis — the oracle's list_sum
+    fold order, vectorized."""
     d = sq[..., 0]
     for t in range(1, sq.shape[-1]):
         d = d + sq[..., t]
@@ -400,7 +305,7 @@ def _cb1_per_m(codes0, cb1, present):
 
 def _assign_np(xs, per_m):
     """(n, M) argmin code values + distances against the per-m
-    codebooks — the `_assign` contract, vectorized, bit-exact."""
+    codebooks (lowest code on ties), vectorized, bit-exact."""
     n = xs.shape[0]
     codes = np.zeros((n, M), dtype=np.int64)
     dists = np.zeros((n, M))
@@ -416,7 +321,7 @@ def _assign_np(xs, per_m):
 
 def _lut_np(head, per_m):
     """query -> per-m distance lookup row aligned with per_m's code
-    positions: pd[q][mi][j] = _sq_sub(q_sv_mi, cb1[mi][j])."""
+    positions: pd[q][mi][j] = _sq_chain((q_sv_mi - cb1[mi][j]) ** 2)."""
     qids = sorted(v for v in head if v < N_QUERIES)
     lut = []
     for q in qids:
@@ -762,7 +667,7 @@ def _adc_candidates(
     " exact search at sf0.1 while reading original vectors for just"
     f" {RERANK_R} of N candidates per query (the FAISS refine"
     " pipeline)",
-    tags=("similarity", "pq"),
+    tags=("similarity", "pq", "headline"),
 )
 def pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production PQ pipeline: compressed-domain ADC ranks the

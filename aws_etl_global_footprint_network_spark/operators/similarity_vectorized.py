@@ -137,7 +137,7 @@ def _vectorized_oracle() -> str:
     " rounded grain (+ neighbor_id tie-break) in both twins, so the"
     " numpy matmul hash-matches the sequential-fold DuckDB twin even"
     " at a near-tie on the k boundary",
-    tags=("similarity", "pandas_udf"),
+    tags=("similarity", "pandas_udf", "headline"),
 )
 def ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")

@@ -149,7 +149,7 @@ def misra_gries_candidates(token_stream: DataFrame, col: str) -> DataFrame:
     " + an exact recount of candidates only — the shuffle is bounded"
     " by sketch capacity x partitions, never by vocabulary size"
     " (oracle: the full groupBy it replaces)",
-    tags=("sketch", "text", "scale"),
+    tags=("sketch", "text", "scale", "headline"),
 )
 def heavy_hitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_etl_global_footprint_network_spark.functions.cache import (
@@ -241,7 +241,7 @@ def _cms_oracle() -> str:
     f" broadcasts anywhere), then the top-{CMS_TOPK} tokens' estimates"
     " = min over rows are validated against their exact counts — the"
     " CMS overcount guarantee (estimate >= exact) is an output column",
-    tags=("sketch", "text", "scale"),
+    tags=("sketch", "text", "scale", "headline"),
 )
 def cms_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At 100 TB the point is the asymmetry: the exact count table

@@ -98,7 +98,7 @@ def asof_join(
     """,
     "as-of join: latest purchase at-or-before each click (oracle:"
     " DuckDB native ASOF JOIN)",
-    tags=("temporal", "asof"),
+    tags=("temporal", "asof", "headline"),
 )
 def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_testdata(spark, sf_dir, "events")
@@ -197,7 +197,7 @@ def lineitem_ship_window_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "native session_window grouping; oracle reconstructs gap-merge"
     " semantics with lag + running sum",
-    tags=("temporal", "window", "sessionize"),
+    tags=("temporal", "window", "sessionize", "headline"),
 )
 def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's built-in session_window: events merge while the gap is
@@ -249,7 +249,7 @@ RESAMPLE_HOURS = 6
     " the observations — gap filling for feature stores / downsampled"
     " dashboards (oracle: DuckDB native ASOF against its own"
     " generate_series spine)",
-    tags=("temporal", "asof", "resample"),
+    tags=("temporal", "asof", "resample", "headline"),
 )
 def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resample + forward-fill as a composition of existing primitives:
@@ -362,7 +362,7 @@ OHLC_BAR_US = OHLC_HOURS * 3600 * 1_000_000
     " open/high/low/close picked by event time (min_by/max_by ==="
     " DuckDB arg_min/arg_max) — the time-series compaction every"
     " metrics store runs before long-horizon queries",
-    tags=("temporal", "agg", "resample"),
+    tags=("temporal", "agg", "resample", "headline"),
 )
 def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One groupBy on (user, bar): min_by/max_by carry the open/close
@@ -428,7 +428,7 @@ WJ_WINDOW_US = 1_800_000_000  # 30-minute lookback, integer microseconds
     " count and cents sum of the same user's view/click events in the"
     " preceding 30 minutes — a point-in-interval aggregate across two"
     " relations, bucketized into an equi-join",
-    tags=("temporal", "join"),
+    tags=("temporal", "join", "headline"),
 )
 def window_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The third member of the temporal-join family: as-of attaches
@@ -536,7 +536,7 @@ COVER_SPAN_US = 5 * 60 * 1_000_000
     " activity span, overlapping spans merge into islands via the"
     " running-max-of-ends recipe; per user the island count, total"
     " covered microseconds and longest island — all integer-exact",
-    tags=("temporal", "window", "agg"),
+    tags=("temporal", "window", "agg", "headline"),
 )
 def interval_coverage_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The interval-union pattern (distinct from gap_islands'
@@ -634,7 +634,7 @@ def interval_coverage_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     " matched to its temporally CLOSEST purchase, behind or ahead,"
     " backward preferred on exact ties — one union + two windows on"
     " one user_id partitioning, no join at all",
-    tags=("temporal", "asof"),
+    tags=("temporal", "asof", "headline"),
 )
 def asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 'nearest' direction pandas' merge_asof offers and most

@@ -45,7 +45,7 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
     """,
     "per-document quality stats: token counts, type/token ratio,"
     " stopword ratio",
-    tags=("text",),
+    tags=("text", "headline"),
 )
 def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_testdata(spark, sf_dir, "documents")
@@ -118,7 +118,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base
     """,
     "order-sensitive polynomial rolling-hash document fingerprint",
-    tags=("text", "dedup"),
+    tags=("text", "dedup", "headline"),
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unlike the set-based minhash, this fingerprint is
@@ -146,7 +146,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "corpus token accounting per (source, lang) — the budgeting query"
     " every training-data pipeline runs",
-    tags=("text", "agg"),
+    tags=("text", "agg", "headline"),
 )
 def token_count_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_testdata(spark, sf_dir, "documents")
@@ -189,7 +189,7 @@ BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
     " punctuation / whitespace) in the RE2-and-Java-agreeing subset —"
     " the budget a subword tokenizer would actually see, vs the"
     " whitespace counts of token_count_per_source",
-    tags=("text", "agg"),
+    tags=("text", "agg", "headline"),
 )
 def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-side regex extraction + one groupBy — JVM codegen all the
@@ -245,7 +245,7 @@ PMI_MIN_PAIR = 5
     f" counts vs unigram marginals, scored for pairs seen >="
     f" {PMI_MIN_PAIR} times — the phrase-detection pass (word2vec-style"
     " phrase merging) of a text prep pipeline",
-    tags=("text", "mlprep", "agg"),
+    tags=("text", "mlprep", "agg", "headline"),
 )
 def token_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI = ln p(ab) - ln p(a) - ln p(b). One-pass corpus count
@@ -459,7 +459,7 @@ SKIP_MIN_PAIR = 5
     " scored with positive PMI — the count-matrix builder behind"
     " GloVe / word2vec-style embedding training, built with shifted-"
     "copy equi-joins (never a per-document quadratic self-join)",
-    tags=("text", "mlprep", "agg"),
+    tags=("text", "mlprep", "agg", "headline"),
 )
 def skipgram_ppmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed co-occurrence WITHOUT the quadratic trap: joining the

@@ -43,7 +43,7 @@ _SQL = """
     _SQL.format(table="part"),
     "lead/first/last/nth_value/ntile/percent_rank/cume_dist/rank +"
     " value-based RANGE frame in one pass",
-    tags=("window",),
+    tags=("window", "headline"),
 )
 def window_analytic_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One shuffle on p_brand serves all eleven window expressions

@@ -29,6 +29,8 @@ class QuerySpec:
     builder: Builder
     oracle: str | None  # DuckDB SQL, or None -> driver does rows-only check
     description: str = ""
+    # bench.py reads "headline" (its headline set), "streaming",
+    # "shared-build", "forced-dispatch" and "*-floor"
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 

@@ -63,7 +63,7 @@ class _stream_partitions:
     arrive, scope the setting per query instead (e.g. a dedicated
     SparkSession.newSession() per start, which isolates conf)."""
 
-    def __init__(self, spark: SparkSession, n: int = STREAM_STATE_PARTITIONS):
+    def __init__(self, spark: SparkSession, n: int):
         self.spark, self.n = spark, n
 
     def __enter__(self):
@@ -109,7 +109,7 @@ def _drain(
     out: DataFrame,
     name: str,
     output_mode: str,
-    partitions: int = STREAM_STATE_PARTITIONS,
+    partitions: int,
 ) -> DataFrame:
     """Run ``out`` to completion into the memory sink ``name`` and
     return the sink. The next run of the same query replaces the
@@ -157,7 +157,7 @@ def run_available_now(
     """,
     "Structured Streaming event-time daily aggregation (AvailableNow"
     " file stream + watermark); oracle is the equivalent batch query",
-    tags=("streaming",),
+    tags=("streaming", "headline"),
 )
 def streaming_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked event-time aggregation. Complete output mode so the
@@ -266,10 +266,14 @@ def _sized_state_partitions(spark: SparkSession, n_rows: int) -> int:
     larger backlog less parallelism). Production sizes this to keyspace
     x volume (thousands of partitions at 100 TB), exactly like batch
     shuffle partitioning."""
-    cores = int(spark.sparkContext.defaultParallelism)
     if n_rows < 200_000:
-        return min(STREAM_STATE_PARTITIONS, cores)
-    return max(STREAM_STATE_PARTITIONS, cores)
+        return _core_capped_partitions(spark)
+    return max(STREAM_STATE_PARTITIONS, int(spark.sparkContext.defaultParallelism))
+
+
+def _core_capped_partitions(spark: SparkSession) -> int:
+    """STREAM_STATE_PARTITIONS, or the core count if lower."""
+    return min(STREAM_STATE_PARTITIONS, int(spark.sparkContext.defaultParallelism))
 
 
 @register(
@@ -438,7 +442,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
         writer = agg.writeStream.foreachBatch(upsert_batch).outputMode("update")
-        _run(spark, writer, STREAM_STATE_PARTITIONS)
+        _run(spark, writer, _core_capped_partitions(spark))
     return spark.table(table).select(
         "day", "n", round_compat("total_value", 2).alias("total_value")
     )
@@ -593,7 +597,7 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     "stream-stream inner join: view events joined to the same user's"
     " clicks within 30 minutes, both sides watermarked (bounded join"
     " state); oracle is the equivalent batch time-range join",
-    tags=("streaming", "join"),
+    tags=("streaming", "join", "headline"),
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The attribution join every event pipeline runs, as a true
@@ -635,11 +639,13 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_s"),
         )
-        # deliberately NOT input-sized: an 8-vs-32 A/B at sf1 measured
-        # 3.5 s vs 8.8 s — JVM-side join state pays per-partition store
-        # overhead and gains nothing (the sizing lever only pays where
-        # per-key PYTHON emits parallelise, i.e. applyInPandasWithState)
-        return _drain(spark, out, "stream_ssj", "append")
+        # deliberately NOT input-sized: an 8-vs-32 A/B at sf1 (32 cores)
+        # measured 3.5 s vs 8.8 s — JVM-side join state pays per-partition
+        # store overhead and gains nothing (the sizing lever only pays
+        # where per-key PYTHON emits parallelise, i.e.
+        # applyInPandasWithState); capped at the cores like a toy backlog
+        parts = _core_capped_partitions(spark)
+        return _drain(spark, out, "stream_ssj", "append", parts)
 
 
 @register(
@@ -678,7 +684,8 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deliberately NOT input-sized (see streaming_stream_stream_join:
         # JVM-side state prefers the small fixed partition count; 8-vs-32
         # A/B at sf1 measured 3.6 s vs 5.0 s here)
-        return _drain(spark, out, "stream_dedup", "append")
+        parts = _core_capped_partitions(spark)
+        return _drain(spark, out, "stream_dedup", "append", parts)
 
 
 @register(
@@ -805,7 +812,7 @@ _REGISTRY["streaming_ohlc_bars"].oracle = _REGISTRY["events_ohlc_bars"].oracle
     " SQL). The incremental form of the warehouse CDC apply job:"
     " restarts resume from the checkpoint, state is one row per live"
     " key",
-    tags=("streaming", "cdc", "merge"),
+    tags=("streaming", "cdc", "merge", "headline"),
 )
 def streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Identical semantics to operators/curation.py's batch twin: the
@@ -864,7 +871,7 @@ _REGISTRY["streaming_cdc_compaction"].oracle = _REGISTRY[
     " the static customer dimension (broadcast per micro-batch),"
     " purchase revenue aggregated by market segment; oracle is the"
     " equivalent batch join+aggregate",
-    tags=("streaming", "join"),
+    tags=("streaming", "join", "headline"),
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical enrichment topology: a fact stream joined against

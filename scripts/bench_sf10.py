@@ -34,12 +34,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
-from aws_etl_global_footprint_network_spark.functions import ranking
 from aws_etl_global_footprint_network_spark.registry import load_all
 from aws_etl_global_footprint_network_spark.session import get_spark
 
@@ -77,34 +75,11 @@ CONTROLS = ["forced_distributed_rank_suite", "forced_distributed_cumsum"]
 PROBE = ADAPTIVE + HEAVIES + CONTROLS
 
 
-def run_set(specs, names, sf_dir):
-    """Time each query at sf_dir, draining the dispatch log per query."""
-    timings, rows, dispatch, errors = {}, {}, {}, {}
-    for name in names:
-        ranking.DISPATCH_LOG.clear()
-        t0 = time.perf_counter()
-        try:
-            n = specs[name].builder(spark, sf_dir).count()
-        except Exception as exc:  # keep probing; record the failure
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"# {name} @ {sf_dir}: ERROR {errors[name]}", file=sys.stderr)
-            continue
-        timings[name] = round(time.perf_counter() - t0, 3)
-        rows[name] = n
-        dispatch[name] = list(ranking.DISPATCH_LOG)
-        decided = (
-            " ".join(
-                f"{d['kind']}:{d['branch']}({d['n_rows']:,}/{d['cap']:,})"
-                for d in dispatch[name]
-            )
-            or "-"
-        )
-        print(
-            f"# {name} @ {sf_dir}: {timings[name]:.3f}s ({n} rows) {decided}",
-            file=sys.stderr,
-            flush=True,
-        )
-    return timings, rows, dispatch, errors
+def run_set(spark, specs, names, sf_dir):
+    """Time each query at sf_dir with bench.py's per-query timer; the
+    dispatch decisions are drained per query."""
+    runs = bench._time_queries(spark, specs, names, sf_dir, f"@ {sf_dir} ")
+    return tuple(bench._field(runs, k) for k in ("sec", "rows", "dispatch", "error"))
 
 
 if __name__ == "__main__":
@@ -139,13 +114,10 @@ if __name__ == "__main__":
     spark = get_spark(app_name="bench-sf10", shuffle_partitions=32)
     sf10_parts = os.environ.get("SF10_SHUFFLE", "64")
 
-    # Warm codegen shapes at the smallest SF (same rationale as
-    # bench.py): first use of a plan shape pays 2-5 s of janino.
-    for name in PROBE:
-        try:
-            specs[name].builder(spark, "/root/testdata/sf0.001").count()
-        except Exception as exc:
-            print(f"# warmup {name} failed: {exc}", file=sys.stderr)
+    # Warm codegen shapes at the smallest SF, the sf0.001 beside
+    # $SPARK_GRAFT_SF_DIR (same rationale as bench.py): first use of a
+    # plan shape pays 2-5 s of janino.
+    bench._warm(spark, specs, PROBE, bench._warm_dir(bench.SF_DIR))
 
     out = {
         "sf": 10,
@@ -174,7 +146,7 @@ if __name__ == "__main__":
     # shared builds' plan shapes before the big run).
     if not args.skip_sf1 and os.path.isdir(args.sf1_dir):
         prime1 = bench.prime_shared_builds(spark, args.sf1_dir)
-        t1, r1, d1, e1 = run_set(specs, PROBE, args.sf1_dir)
+        t1, r1, d1, e1 = run_set(spark, specs, PROBE, args.sf1_dir)
         out["sf1_queries"] = t1
         out["sf1_prime_sec"] = prime1
         out["sf1_dispatch"] = d1
@@ -183,7 +155,7 @@ if __name__ == "__main__":
 
     spark.conf.set("spark.sql.shuffle.partitions", sf10_parts)
     prime10 = bench.prime_shared_builds(spark, args.dir)
-    t10, r10, d10, e10 = run_set(specs, PROBE, args.dir)
+    t10, r10, d10, e10 = run_set(spark, specs, PROBE, args.dir)
     out["sf10_shuffle_partitions"] = int(sf10_parts)
 
     vs = {}

@@ -32,8 +32,9 @@ def test_dedup_clusters_cover_pairs(spark, sf_dir):
         assert c == min(members)
 
 
-def test_connected_components_chain_merges(spark):
+def test_connected_components_chain_merges(spark, monkeypatch):
     """A-B, B-C, C-D chains collapse to one cluster labelled min."""
+    from aws_etl_global_footprint_network_spark.functions import kernels
     from aws_etl_global_footprint_network_spark.operators.ml_prep import (
         connected_components,
     )
@@ -43,13 +44,11 @@ def test_connected_components_chain_merges(spark):
     )
     want = {10: 10, 20: 10, 30: 10, 40: 10, 100: 100, 200: 100}
     # both dispatch branches must agree: local union-find (default at
-    # this size) and the forced Pregel loop (local_cap=0)
+    # this size) and the forced Pregel loop (edge cap 0)
     got = {r.node: r.cluster_id for r in connected_components(edges).collect()}
     assert got == want
-    got_pregel = {
-        r.node: r.cluster_id
-        for r in connected_components(edges, local_cap=0).collect()
-    }
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", 0)
+    got_pregel = {r.node: r.cluster_id for r in connected_components(edges).collect()}
     assert got_pregel == want
 
 

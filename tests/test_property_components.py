@@ -5,9 +5,11 @@ one propagation round, cycles, and disconnected singleton pairs."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.operators.ml_prep import (
     connected_components,
 )
@@ -49,14 +51,13 @@ def test_connected_components_matches_union_find(spark, edges):
     # Pregel branch must both match the reference union-find
     got = {r.node: r.cluster_id for r in connected_components(df).collect()}
     assert got == _union_find(edges)
-    got_pregel = {
-        r.node: r.cluster_id
-        for r in connected_components(df, local_cap=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(kernels, "LOCAL_EDGE_CAP", 0)
+        got_pregel = {r.node: r.cluster_id for r in connected_components(df).collect()}
     assert got_pregel == _union_find(edges)
 
 
-def test_long_chain_converges(spark):
+def test_long_chain_converges(spark, monkeypatch):
     """Regression: a chain whose diameter exceeds the old fixed round
     budget must still fully converge (pointer jumping makes this
     O(log n) rounds), never silently return partial labels."""
@@ -64,22 +65,19 @@ def test_long_chain_converges(spark):
     edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(edges, "u long, v long")
     # pointer jumping is a Pregel-branch property: force it
-    got = {
-        r.node: r.cluster_id
-        for r in connected_components(df, local_cap=0).collect()
-    }
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", 0)
+    got = {r.node: r.cluster_id for r in connected_components(df).collect()}
     assert got == {i: 0 for i in range(n + 1)}
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     """max_iter is a safety bound: exceeding it raises instead of
     returning wrong clusters."""
-    import pytest
-
     edges = [(i, i + 1) for i in range(40)]
     df = spark.createDataFrame(edges, "u long, v long")
+    monkeypatch.setattr(kernels, "LOCAL_EDGE_CAP", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=1, local_cap=0)
+        connected_components(df, max_iter=1)
 
 
 # --- round-6 hardening: weighted-MG merge + bounded top-R ----------------

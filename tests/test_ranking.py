@@ -244,12 +244,10 @@ def test_distributed_cumsum_joined_offsets_fallback(spark, monkeypatch):
         scope.release()
 
 
-def test_adaptive_cumsum_paths_agree(spark):
+def test_adaptive_cumsum_paths_agree(spark, monkeypatch):
     """The dispatcher's two paths (value-table window vs distributed
     rank) must be bit-identical on the same input."""
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-    )
+    from aws_etl_global_footprint_network_spark.functions import ranking
 
     rows = [(f"g{i % 3}", i % 40, 1 + i % 7) for i in range(2000)]
     df = (
@@ -259,13 +257,15 @@ def test_adaptive_cumsum_paths_agree(spark):
     )
     scope = CacheScope("test_adaptive_agree")
     try:
-        a = adaptive_cumsum(
-            df, "g", [F.col("x")], {"cb": "t"}, scope, window_cap=10**9
-        ).select("g", "x", "cb")
-        b = adaptive_cumsum(
-            df, "g", [F.col("x")], {"cb": "t"}, scope, window_cap=0
-        ).select("g", "x", "cb")
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 10**9)
+        a = ranking.adaptive_cumsum(
+            df, "g", [F.col("x")], {"cb": "t"}, scope
+        ).select("g", "x", "cb").collect()
+        monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 0)
+        b = ranking.adaptive_cumsum(
+            df, "g", [F.col("x")], {"cb": "t"}, scope
+        ).select("g", "x", "cb").collect()
+        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     finally:
         scope.release()
 
@@ -316,7 +316,7 @@ def test_hll_dispatch_estimate_inflates_conservatively():
         assert got == int(est * HLL_DISPATCH_INFLATION)
 
 
-def test_dispatch_log_records_branches(spark):
+def test_dispatch_log_records_branches(spark, monkeypatch):
     """DISPATCH_LOG is the sf10 probe's evidence channel: every
     adaptive dispatcher appends (kind, n_rows, cap, branch), under-cap
     -> window, over-cap -> distributed."""
@@ -335,8 +335,9 @@ def test_dispatch_log_records_branches(spark):
         ranking.adaptive_cumsum(
             df, "g", [F.col("v")], {"c": "v"}, scope, n_rows=10
         ).count()
+        monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 1)
         ranking.adaptive_cumsum(
-            df, "g", [F.col("v")], {"c": "v"}, scope, n_rows=10, window_cap=1
+            df, "g", [F.col("v")], {"c": "v"}, scope, n_rows=10
         ).count()
         kinds = [(d["kind"], d["branch"]) for d in ranking.DISPATCH_LOG]
         assert ("row_number", "window") in kinds

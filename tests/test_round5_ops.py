@@ -29,11 +29,14 @@ SPECS = load_all()
 
 
 def test_bloom_prune_has_no_false_negatives(spark, sf_dir):
+    """The broadcast-relation bloom filter (what the registered operator
+    runs) keeps every true key and prunes some of the others."""
     from aws_etl_global_footprint_network_spark.operators.join_accel import (
         HIGH_VALUE_ORDER,
         BLOOM_MIN_BITS,
         bloom_bitmap_words,
-        bloom_might_contain,
+        bloom_prune,
+        bloom_words_relation,
     )
 
     o = read_testdata(spark, sf_dir, "orders")
@@ -49,24 +52,6 @@ def test_bloom_prune_has_no_false_negatives(spark, sf_dir):
     }
     passed = {
         r.l_orderkey
-        for r in li.filter(
-            bloom_might_contain(F.col("l_orderkey"), words, BLOOM_MIN_BITS)
-        ).collect()
-    }
-    assert true_rows <= passed, "bloom dropped a true key (false negative)"
-    # the filter must actually prune something at this geometry
-    n_all = li.count()
-    assert len(passed) < n_all
-    # the broadcast-relation form (what the registered operator runs)
-    # must pass the exact same row set as the literal form
-    from aws_etl_global_footprint_network_spark.operators.join_accel import (
-        bloom_prune,
-        bloom_words_relation,
-    )
-
-    spark = li.sparkSession
-    rel_passed = {
-        r.l_orderkey
         for r in bloom_prune(
             li,
             F.col("l_orderkey"),
@@ -74,7 +59,9 @@ def test_bloom_prune_has_no_false_negatives(spark, sf_dir):
             BLOOM_MIN_BITS,
         ).collect()
     }
-    assert rel_passed == passed, "relation form diverged from literal form"
+    assert true_rows <= passed, "bloom dropped a true key (false negative)"
+    # the filter must actually prune something at this geometry
+    assert len(passed) < li.select("l_orderkey").distinct().count()
 
 
 def test_misra_gries_candidates_cover_true_heavy_hitters(spark, sf_dir):

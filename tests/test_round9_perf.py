@@ -63,10 +63,18 @@ def test_sized_state_partitions_dispatch(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["streaming_daily_counts", "streaming_first_seen_stateful"]
+    "name",
+    [
+        "streaming_daily_counts",
+        "streaming_first_seen_stateful",
+        "streaming_stream_stream_join",
+        "streaming_dedup_watermark",
+        "streaming_foreachbatch_upsert",
+    ],
 )
 def test_state_partitions_do_not_change_results(spark, sf_dir, monkeypatch, name):
-    """One state partition and eight give the same rows."""
+    """One state partition and eight (or the core count, if lower) give
+    the same rows."""
     from aws_etl_global_footprint_network_spark.streaming import jobs
 
     rows = []
@@ -138,7 +146,7 @@ def test_staged_stream_forces_cross_batch_state(spark, sf_dir):
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        sink = _drain(spark, out, "staged_probe", "update")
+        sink = _drain(spark, out, "staged_probe", "update", 8)
     sink_rows = sink.count()
     assert sink_rows > n_keys, (sink_rows, n_keys)
     # and the accumulated final state is still the exact batch total

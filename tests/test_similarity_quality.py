@@ -111,21 +111,22 @@ def test_kmeans_refinement_does_not_increase_sse(spark, sf_dir):
     assert sse(final, "cluster") <= sse(init, "label") * (1 + 1e-9)
 
 
-def test_pq_lloyd_round_does_not_increase_quantization_error(spark, sf_dir):
+def test_pq_lloyd_round_does_not_increase_quantization_error(sf_dir):
     """The refined PQ codebook must quantize the corpus at least as
-    well as the seed codebook (Lloyd monotonicity, per subspace and in
-    total)."""
+    well as the seed codebook (Lloyd monotonicity), checked on the
+    oracle's training chain: the seed assignment ``asg0``'s error sum
+    against the refined assignment ``codesr``'s. The kernel's codebook
+    is pinned to that chain by test_oracle_parity[pq_train_codebooks]."""
     from aws_etl_global_footprint_network_spark.operators import similarity_pq as pq
-    from pyspark.sql import functions as F
+    from tests.oracle_harness import duck_connection
 
-    subv = pq._subvectors(spark, sf_dir).persist()
-    cb0 = subv.filter(F.col("vec_id") < pq.K).select(
-        "m", F.col("vec_id").alias("code"), F.col("sv").alias("c")
-    )
-    cb1, _ = pq._trained_codebook(subv)
-    err0 = pq._assign(subv, cb0).agg(F.sum("d")).collect()[0][0]
-    err1 = pq._assign(subv, cb1).agg(F.sum("d")).collect()[0][0]
-    subv.unpersist()
+    con = duck_connection(sf_dir)
+    err0, err1 = con.sql(
+        f"""WITH {pq._pq_prefix_sql()}
+        SELECT (SELECT SUM(d) FROM d0 JOIN asg0 USING (vec_id, m, code)),
+               (SELECT SUM(d) FROM codesr)"""
+    ).fetchone()
+    assert err0 > 0
     assert err1 <= err0 * (1 + 1e-9), (err0, err1)
 
 
@@ -343,49 +344,3 @@ def test_adaptive_lsh_forced_geometry_parity_and_recall(spark, sf_dir):
     )
     emb.unpersist()
     assert grown_buckets > base_buckets
-
-
-def test_pq_kernel_codebook_matches_jvm_reference(spark, sf_dir):
-    """Round-13 pin: the Arrow-kernel-trained codebook (numpy
-    partials + driver close) must be CELL-IDENTICAL to the retained
-    JVM reference chain (`_subvectors` -> `_trained_codebook`) —
-    same (m, code) cells present, bit-equal rounded centroids. This
-    is the invariant every ADC consumer's hash parity rests on."""
-    from pyspark.sql import functions as F
-
-    from aws_etl_global_footprint_network_spark.operators import (
-        similarity_pq as pq,
-    )
-
-    codes0, cb1, present, cnts, _ = pq._train_np(spark, sf_dir)
-    subv = pq._subvectors(spark, sf_dir).persist()
-    jvm_rows = pq._trained_codebook(subv)[0].collect()
-    # member counts from the seed assignment, for the sizes pin
-    cb0 = subv.filter(F.col("vec_id") < pq.K).select(
-        "m", F.col("vec_id").alias("code"), F.col("sv").alias("c")
-    )
-    jvm_sizes = {
-        (r["m"], r["code"]): r["n"]
-        for r in pq._assign(subv, cb0)
-        .groupBy("m", "code")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    subv.unpersist()
-    jvm = {(r["m"], r["code"]): list(r["c"]) for r in jvm_rows}
-    kern = {
-        (mi, int(codes0[ci])): list(cb1[mi, ci])
-        for mi in range(pq.M)
-        for ci in range(len(codes0))
-        if present[mi, ci]
-    }
-    assert set(jvm) == set(kern)
-    for key in jvm:
-        assert jvm[key] == kern[key], (key, jvm[key], kern[key])
-    kern_sizes = {
-        (mi, int(codes0[ci])): int(cnts[mi, ci])
-        for mi in range(pq.M)
-        for ci in range(len(codes0))
-        if present[mi, ci]
-    }
-    assert jvm_sizes == kern_sizes
