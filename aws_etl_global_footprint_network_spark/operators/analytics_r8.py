@@ -1044,27 +1044,22 @@ def auc_roc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen operating points, AUC integrates over all of them — and
     the exact tie-corrected AUC is U/(n1*n0), the Mann-Whitney
     statistic this repo already computes rank-free (mann_whitney_u's
-    doubled-rank recipe over value-grouped counts, cumulative count
-    via distributed_cumsum — no window partitioned by a constant).
-    r1_twice <= 2N^2 stays exact int64 to ~2^31 rows; two float
-    divisions close, rounded 1e-6. Degenerate single-class input
-    pins NULL both engines."""
+    doubled-rank recipe over a global ``ranking.value_ranks`` score
+    table; the scored relation has one row per customer, so the
+    customer footer sizes it). r1_twice <= 2N^2 stays exact int64 to
+    ~2^31 rows; two float divisions close, rounded 1e-6. Degenerate
+    single-class input pins NULL both engines."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-        hll_dispatch_estimate,
-    )
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
-    scored = urgent_score_labels(spark, sf_dir)
-    v = scored.groupBy("score").agg(
-        F.sum("y").alias("n1v"), F.count(F.lit(1)).alias("t")
-    ).withColumn("g", F.lit(1))
-    est = hll_dispatch_estimate(
-        scored.agg(F.approx_count_distinct("score")).first()[0]
-    )
-    cum = adaptive_cumsum(
-        v, "g", [F.col("score")], {"cb": "t"}, CacheScope("auc_roc_score"),
-        n_rows=est,
+    cum = value_ranks(
+        urgent_score_labels(spark, sf_dir),
+        None,
+        "score",
+        {"n1v": F.sum("y"), "t": F.count(F.lit(1))},
+        {"cb": "t"},
+        CacheScope("auc_roc_score"),
+        (sf_dir, "customer"),
     )
     s = cum.agg(
         F.sum("n1v").alias("n1"),
@@ -1254,19 +1249,18 @@ def brown_forsythe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Levene centered at the MEDIAN — the Brown-Forsythe variant).
     Scale recipe in three exact-integer stages: (1) per-group exact
     medians on the DOUBLED scale (med2 = lo+hi order statistics, so
-    .5 medians stay integer) located from value-grouped counts + an
-    inclusive distributed cumulative count — never a per-group sort
-    buffer (Spark's exact `percentile` agg holds the whole group on
-    one reducer); (2) z2 = |2x - med2| per row, exact int64, via a
-    k-row broadcast join; (3) the one-way-F close over DECIMAL(38,0)
-    sufficient sums (the anova_f_oneway machinery — the x2 scale
-    cancels in F). The oracle derives the same medians from a plain
-    value window (sound single-node), an independent formulation."""
+    .5 medians stay integer) located from the ``ranking.value_ranks``
+    value table — a run of t rows after cb earlier ones holds the
+    order statistics cb+1..cb+t, and the group size n is a window
+    total — never a per-group sort buffer (Spark's exact `percentile`
+    agg holds the whole group on one reducer); (2) z2 = |2x - med2| per
+    row, exact int64, via a k-row broadcast join; (3) the one-way-F
+    close over DECIMAL(38,0) sufficient sums (the anova_f_oneway
+    machinery — the x2 scale cancels in F). The oracle derives the
+    same medians from a plain value window (sound single-node), an
+    independent formulation."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-        hll_dispatch_estimate,
-    )
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
     e = (
         read_testdata(spark, sf_dir, "events")
@@ -1276,30 +1270,21 @@ def brown_forsythe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         )
     )
-    v = e.groupBy("event_type", "cents").agg(
-        F.count(F.lit(1)).cast("bigint").alias("t")
-    )
-    est = hll_dispatch_estimate(
-        e.agg(
-            F.approx_count_distinct(F.struct("event_type", "cents"))
-        ).first()[0]
-    )
-    c = adaptive_cumsum(
-        v,
+    cn = value_ranks(
+        e,
         "event_type",
-        [F.col("cents")],
-        {"c1": "t"},
+        "cents",
+        {"t": F.count(F.lit(1)).cast("bigint")},
+        {"cb": "t"},
         CacheScope("brown_forsythe_test"),
-        inclusive=True,
-        n_rows=est,
+        (sf_dir, "events"),
+        totals={"n": F.col("t")},
     )
-    n = v.groupBy("event_type").agg(F.sum("t").cast("bigint").alias("n"))
-    cn = c.join(F.broadcast(n), "event_type")
     # median order-statistic positions as exact integer floor division
     lo_pos = F.expr("(n + 1) DIV 2")
     hi_pos = F.expr("n DIV 2 + 1")
     at = lambda pos: F.sum(  # noqa: E731 - local alias for symmetry
-        F.when((F.col("c1") >= pos) & (F.col("c1") - F.col("t") < pos),
+        F.when((F.col("cb") < pos) & (F.col("cb") + F.col("t") >= pos),
                F.col("cents")).otherwise(0)
     )
     med = cn.groupBy("event_type").agg(

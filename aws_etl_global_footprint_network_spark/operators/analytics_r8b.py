@@ -87,64 +87,63 @@ from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
 def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA's rank-based sibling (anova_f_oneway compares
     means; this compares distributions without normality). Rank-free:
-    global midranks come from the value-grouped table + exclusive
-    cumulative count via distributed_cumsum (no window partitioned by
-    a constant — round-7 verdict item 3's recipe), per-group rank
-    sums stay exact int64 (doubled, <= 2N^2), and the t^3-t tie term
-    runs in DECIMAL(38,0) exactly as the N^3-N denominator does. The
-    float close (R_g^2/n_g summed over k bounded groups, one
-    subtraction) mirrors the oracle's fold order; both engines round
-    1e-6."""
+    global midranks come from a global ``ranking.value_ranks`` table
+    over the (event_type, x) cell counts, which the doubled midrank
+    2*cb + t + 1 then joins back to by value; per-group rank sums stay
+    exact int64 (doubled, <= 2N^2), and the t^3-t tie term runs in
+    DECIMAL(38,0) exactly as the N^3-N denominator does. The float
+    close (R_g^2/n_g summed over k bounded groups, one subtraction)
+    mirrors the oracle's fold order; both engines round 1e-6."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-        hll_dispatch_estimate,
-    )
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
-    e = (
+    # x IS NOT NULL is the oracle's value filter, stated on the join
+    # key: both uses of the cell counts then plan identically and share
+    # one shuffle (the join would otherwise infer it on one side only)
+    ec = (
         read_testdata(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
         .select(
             "event_type",
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
+        .filter(F.col("x").isNotNull())
+        .groupBy("event_type", "x")
+        .agg(F.count(F.lit(1)).alias("n_gx"))
     )
-    scope = CacheScope("kruskal_wallis_h")
-    ec = scope.persist(
-        e.groupBy("event_type", "x").agg(F.count(F.lit(1)).alias("n_gx"))
+    t = F.col("t")
+    c = value_ranks(
+        ec,
+        None,
+        "x",
+        {"t": F.sum("n_gx")},
+        {"cb": "t"},
+        CacheScope("kruskal_wallis_h"),
+        (sf_dir, "events"),
+        totals={"n": t, "ties": t.cast("decimal(38,0)") * t * t - t},
+        broadcast=True,
     )
-    v = (
-        ec.groupBy("x")
-        .agg(F.sum("n_gx").alias("t"))
-        .withColumn("g", F.lit(1))
-    )
-    est = hll_dispatch_estimate(e.agg(F.approx_count_distinct("x")).first()[0])
-    c = adaptive_cumsum(v, "g", [F.col("x")], {"cb": "t"}, scope, n_rows=est)
     rg = (
-        ec.join(c.select("x", "t", "cb"), "x")
+        ec.join(c, "x")
         .groupBy("event_type")
         .agg(
             F.sum("n_gx").alias("n_g"),
             F.sum(
                 F.col("n_gx") * (2 * F.col("cb") + F.col("t") + 1)
             ).alias("r2_g"),
+            F.max("n").alias("n"),
+            F.max("ties").alias("ties"),
         )
-    )
-    tot = c.agg(
-        F.sum("t").alias("n"),
-        F.sum(
-            F.col("t").cast("decimal(38,0)") * F.col("t") * F.col("t")
-            - F.col("t")
-        ).alias("ties"),
     )
     s = rg.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum(
             (F.col("r2_g") / 2.0) * (F.col("r2_g") / 2.0) / F.col("n_g")
         ).alias("rsq"),
+        F.max("n").alias("n"),
+        F.max("ties").alias("ties"),
     )
     n = F.col("n")
-    f = s.crossJoin(F.broadcast(tot)).select(
+    f = s.select(
         "k",
         n,
         (12.0 / (n * (n + 1.0)) * F.col("rsq") - 3.0 * (n + 1)).alias("h"),

@@ -891,40 +891,17 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every tied row's average rank is (2*cb + t + 1)/2 — so the
     rank sum doubles to the all-integer
     r1_twice = sum(n1v * (2cb + t + 1)) and no per-row rank window
-    ever runs (the classic rank-based formulation single-tasks each
-    partition at corpus scale; this one windows over distinct
-    values). The tie-corrected variance consumes sum(t^3 - t) from
+    ever runs. The tie-corrected variance consumes sum(t^3 - t) from
     the same pass. Integer bounds: r1_twice <= 2N^2 keeps exact
     int64 to N ~ 2^31 rows per event type; the z chain is IEEE ops
     on exact inputs in identical order both engines, rounded 1e-6.
     Degenerate variance (all values tied) pins NULL both sides;
-    n>=2 per sample via HAVING. The exclusive cumulative count
-    dispatches on measured value cardinality
-    (functions/ranking.adaptive_cumsum, round-8 verdict item 3):
-    domain-bounded cents take a cheap event_type-partitioned window
-    over the aggregated value table; a genuinely continuous value
-    column trips the cap and routes through the distributed-rank
-    recipe instead — never a single-task window either way.
-
-    One exchange when the parquet footer proves the raw rows (and so
-    the value table) at most ``ADAPTIVE_WINDOW_CAP``: the rows are
-    hash-partitioned on event_type BEFORE the value grouping, and the
-    grouping, the cumulative window and the per-type close all run
-    on that one partitioning (3 jobs and 6 stages at sf0.001 -> 2 jobs
-    and 3 stages). The bound is what makes that safe: it caps the rows
-    any event_type task receives. Past it (only an HLL estimate under
-    the cap, or the distributed recipe) the value table keeps its own
-    (event_type, x) exchange with partial aggregation before it, so no
-    handful of event_type tasks ever receives unbounded raw rows."""
+    n>=2 per sample via HAVING. The value table, its sizing and its
+    partitioning come from ``functions/ranking.value_ranks``: under
+    the footer proof one event_type exchange serves the grouping, the
+    window and this close (2 jobs, 3 stages)."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        ADAPTIVE_WINDOW_CAP,
-        adaptive_cumsum,
-        hll_dispatch_estimate,
-    )
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        value_table_rows_bound,
-    )
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
     e = (
         read_testdata(spark, sf_dir, "events")
@@ -935,26 +912,17 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )
-    # distinct (type, x) <= raw rows: when the footer row count is
-    # already under the cap the window branch is proved for free
-    # (round 13, width.value_table_rows_bound); only past it does the
-    # HLL scan run — same branch at every scale, one job fewer here
-    est = value_table_rows_bound(sf_dir, "events", ADAPTIVE_WINDOW_CAP)
-    if est is None:
-        est = hll_dispatch_estimate(
-            e.agg(
-                F.approx_count_distinct(F.struct("event_type", "x"))
-            ).first()[0]
-        )
-    else:
-        e = e.repartition("event_type")
-    v = e.groupBy("event_type", "x").agg(
-        F.sum(F.when(~F.col("we"), 1).otherwise(0)).alias("n1v"),
-        F.count(F.lit(1)).alias("t"),
-    )
-    c = adaptive_cumsum(
-        v, "event_type", [F.col("x")], {"cb": "t"},
-        CacheScope("mann_whitney_u"), n_rows=est,
+    c = value_ranks(
+        e,
+        "event_type",
+        "x",
+        {
+            "n1v": F.sum(F.when(~F.col("we"), 1).otherwise(0)),
+            "t": F.count(F.lit(1)),
+        },
+        {"cb": "t"},
+        CacheScope("mann_whitney_u"),
+        (sf_dir, "events"),
     )
     s = (
         c.groupBy("event_type")
@@ -1038,24 +1006,19 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distribution-difference member of the two-sample trio
     (Welch = means, Mann-Whitney = ranks, KS = whole CDFs), on the
-    same machinery as mann_whitney_u: group by VALUE, cumulative
-    counts per sample over one value-ordered window. The sup
-    statistic needs no floats until the last step — |F1(x) - F2(x)|
-    maximises exactly where |c1*n2 - c2*n1| does (cross-multiplied
-    integers, exact in int64 to ~2^31 rows per sample), so the max
-    reduces over integers and ONE division + one sqrt produce the
-    reported values, identical order both engines, rounded 1e-6.
-    Checking F only at sample points is exact: the step functions
-    change nowhere else. Both cumulative sample counts dispatch on
-    measured value cardinality (functions/ranking.adaptive_cumsum,
-    round-8 verdict item 3 — bounded tables window over the value
-    table itself, continuous ones take the distributed-rank recipe)
-    and the per-type totals come from a tiny aggregate join."""
+    same value table as mann_whitney_u (``ranking.value_ranks``):
+    inclusive cumulative counts per sample are the exclusive ones plus
+    the value's own count, and the per-type sample totals are window
+    sums over the same event_type partitioning (a NULL event_type
+    keeps its row, as in the oracle's window). The sup statistic needs
+    no floats until the last step — |F1(x) - F2(x)| maximises exactly
+    where |c1*n2 - c2*n1| does (cross-multiplied integers, exact in
+    int64 to ~2^31 rows per sample), so the max reduces over integers
+    and ONE division + one sqrt produce the reported values, identical
+    order both engines, rounded 1e-6. Checking F only at sample points
+    is exact: the step functions change nowhere else."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-        hll_dispatch_estimate,
-    )
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
     e = (
         read_testdata(spark, sf_dir, "events")
@@ -1066,41 +1029,25 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long").alias("x"),
         )
     )
-    v = e.groupBy("event_type", "x").agg(
-        F.sum(F.when(~F.col("we"), 1).otherwise(0)).alias("n1v"),
-        F.sum(F.when(F.col("we"), 1).otherwise(0)).alias("n2v"),
-    )
-    # footer-proved window branch under the cap (round 13 — see
-    # mann_whitney_u); the HLL scan only runs past it
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        ADAPTIVE_WINDOW_CAP,
-    )
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        value_table_rows_bound,
-    )
-
-    est = value_table_rows_bound(sf_dir, "events", ADAPTIVE_WINDOW_CAP)
-    if est is None:
-        est = hll_dispatch_estimate(
-            e.agg(
-                F.approx_count_distinct(F.struct("event_type", "x"))
-            ).first()[0]
-        )
-    cum = adaptive_cumsum(
-        v,
+    v = value_ranks(
+        e,
         "event_type",
-        [F.col("x")],
-        {"c1": "n1v", "c2": "n2v"},
+        "x",
+        {
+            "n1v": F.sum(F.when(~F.col("we"), 1).otherwise(0)),
+            "n2v": F.sum(F.when(F.col("we"), 1).otherwise(0)),
+        },
+        {"b1": "n1v", "b2": "n2v"},
         CacheScope("ks_two_sample"),
-        inclusive=True,
-        n_rows=est,
+        (sf_dir, "events"),
+        totals={"n1": F.col("n1v"), "n2": F.col("n2v")},
     )
-    tot = v.groupBy("event_type").agg(
-        F.sum("n1v").cast("long").alias("n1"),
-        F.sum("n2v").cast("long").alias("n2"),
-    )
-    c = cum.join(tot, "event_type").select(
-        "event_type", "c1", "c2", "n1", "n2"
+    c = v.select(
+        "event_type",
+        (F.col("b1") + F.col("n1v")).alias("c1"),
+        (F.col("b2") + F.col("n2v")).alias("c2"),
+        "n1",
+        "n2",
     )
     s = (
         c.groupBy("event_type", "n1", "n2")

@@ -1099,63 +1099,41 @@ def quantile_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-grain COUNT/SUM are invariant to how NTILE assigns rows
     WITHIN a tie run (rows tied on cents are interchangeable — any
     split of a run across a bucket boundary moves identical values),
-    so the raw-relation rank never needs to exist.  Aggregate once to
-    the (type, cents) value table, take the per-run rank interval
-    [excl+1, excl+cnt] from an exclusive running count
-    (``adaptive_cumsum`` — plain per-type window under the measured
-    1M cap, the distributed recipe past it for genuinely continuous
-    values), and intersect each run with the SQL-standard NTILE
-    bucket layout arithmetically (first n%B buckets hold n//B+1
-    ranks): a run spans at most the buckets its interval touches, so
-    the explode is bounded by B per run.  One shuffle over the raw
-    relation (the value-table aggregate), everything after is
-    value-cardinality-sized.  All sums are integer cents (exact,
+    so the raw-relation rank never needs to exist.  The (type, cents)
+    value table of ``ranking.value_ranks`` gives each run its rank
+    interval [excl+1, excl+cnt] and its type's size n_g (a window
+    total, so a NULL event_type keeps its buckets), and each run is
+    intersected with the SQL-standard NTILE bucket layout
+    arithmetically (first n%B buckets hold n//B+1 ranks): a run spans
+    at most the buckets its interval touches, so the explode is
+    bounded by B per run.  All sums are integer cents (exact,
     order-independent); the single rounded division happens on the
-    pooled reference mean.  sf1 A/B, one warm session, two rounds
-    each: old distributed-row_number plan 8.33 / 6.75 s vs this plan
-    2.37 / 2.25 s, result rows identical (the r9 suite recorded the
-    old plan at 4.40 s amortised against warmer neighbours)."""
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        adaptive_cumsum,
-    )
+    pooled reference mean, a window sum per bucket over the
+    groups x buckets table.  sf1 A/B of the value-table recipe, one
+    warm session, two rounds each: old distributed-row_number plan
+    8.33 / 6.75 s vs 2.37 / 2.25 s, result rows identical."""
+    from aws_etl_global_footprint_network_spark.functions.ranking import value_ranks
 
-    scope = CacheScope("quantile_normalize_events")
-    v = (
+    e = (
         read_testdata(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
-        .groupBy(
+        .select(
             "event_type",
             F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         )
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # value-table cardinality <= raw rows: the footer row count proves
-    # the window branch under the cap with no persist+count action
-    # (round 13, width.value_table_rows_bound); past the cap the
-    # dispatch measures exactly as before
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        ADAPTIVE_WINDOW_CAP,
-    )
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        value_table_rows_bound,
-    )
-
-    # v stays persisted (the cumsum result is consumed by both grp and
-    # runs; the old n_rows=None path persisted it as a side effect)
-    v = scope.persist(v)
-    c = adaptive_cumsum(
-        v,
+    c = value_ranks(
+        e,
         "event_type",
-        [F.col("cents")],
+        "cents",
+        {"cnt": F.count(F.lit(1))},
         {"excl": "cnt"},
-        scope,
-        n_rows=value_table_rows_bound(sf_dir, "events", ADAPTIVE_WINDOW_CAP),
-    )
-    grp = c.groupBy(F.col("event_type").alias("gt")).agg(
-        F.sum("cnt").alias("n_g")
+        CacheScope("quantile_normalize_events"),
+        (sf_dir, "events"),
+        totals={"n_g": F.col("cnt")},
     )
     B = F.lit(QN_BUCKETS)
-    runs = c.join(F.broadcast(grp), c.event_type == grp.gt).select(
+    runs = c.select(
         "event_type",
         "cents",
         (F.col("excl") + 1).alias("s"),
@@ -1199,23 +1177,20 @@ def quantile_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap = (
         F.least(F.col("e"), b_end) - F.greatest(F.col("s"), b_start) + 1
     )
-    gb = scope.persist(
-        spanned.groupBy("event_type", "bucket").agg(
-            F.sum(overlap).cast("bigint").alias("n_rows"),
-            F.sum(F.col("cents") * overlap).cast("bigint").alias("group_cents"),
-        )
+    gb = spanned.groupBy("event_type", "bucket").agg(
+        F.sum(overlap).cast("bigint").alias("n_rows"),
+        F.sum(F.col("cents") * overlap).cast("bigint").alias("group_cents"),
     )
-    ref = gb.groupBy(F.col("bucket").alias("rbucket")).agg(
-        F.sum("group_cents").cast("bigint").alias("ref_sum"),
-        F.sum("n_rows").cast("bigint").alias("ref_n"),
-    )
-    return gb.join(F.broadcast(ref), F.col("rbucket") == F.col("bucket")).select(
+    ref = Window.partitionBy("bucket")
+    return gb.select(
         "event_type",
         "bucket",
         "n_rows",
         "group_cents",
         round_compat(
-            F.col("ref_sum") / (F.lit(100.0) * F.col("ref_n")), 6
+            F.sum("group_cents").over(ref)
+            / (F.lit(100.0) * F.sum("n_rows").over(ref)),
+            6,
         ).alias("normalized_value"),
     )
 

@@ -1082,57 +1082,55 @@ def partial_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monotone association at corpus scale: Spearman is Pearson on
-    ranks, and ranks come from the same value-grouping recipe as
-    mann_whitney_u — per distinct value, the doubled tied-average
-    rank 2*cb + t + 1 is an INTEGER, so the per-variable rank
-    tables are exact and row ranks attach by joining each row to its
-    value's entry (two value-cardinality dimension joins — never a
-    per-row rank window, which single-tasks each group). The
-    sufficient sums accumulate as exact integers whose WIDTH is
-    dispatched on the parquet-footer row count (round 12): int64 while
-    the provable moment bound N·(2N+2)² stays under 2^62 (sf0.1:
-    3.3-4.0 s vs 4.3-5.5 s decimal, same hash), DECIMAL(38,0) above it
-    — the rank products overflow int64 past ~7e5 rows per group
-    (caught by the sf1 sweep under ANSI mode), while 38 digits hold to
-    ~3e12 rows/group and DuckDB's integer sums widen to HUGEINT
-    natively —
-    but only the JOINT moment Σ r2x·r2y needs the row path: the four
+    ranks, and ranks come from the same value tables as
+    mann_whitney_u (``ranking.value_ranks``) — per distinct value, the
+    doubled tied-average rank 2*cb + t + 1 is an INTEGER, so the
+    per-variable rank tables are exact and ranks attach by joining to
+    each value's entry (never a per-row rank window, which
+    single-tasks each group). Under the window cap a rank table comes
+    back broadcast-hinted, so both rank joins are map-side and the
+    pair table never shuffles for them. The sufficient sums
+    accumulate as exact integers whose WIDTH is dispatched on the
+    parquet-footer row count (round 12): int64 while the provable
+    moment bound N·(2N+2)² stays under 2^62 (sf0.1: 3.3-4.0 s vs
+    4.3-5.5 s decimal, same hash), DECIMAL(38,0) above it — the rank
+    products overflow int64 past ~7e5 rows per group (caught by the
+    sf1 sweep under ANSI mode), while 38 digits hold to ~3e12
+    rows/group and DuckDB's integer sums widen to HUGEINT natively —
+    but only the JOINT moment Σ r2x·r2y needs the pair path: the four
     marginal moments Σr2, Σr2² regroup by value (Σ_values t·r2^k,
     identical integers) and aggregate over the value-cardinality rank
-    tables instead, so the row-scale aggregate carries one decimal
-    multiply + one decimal sum instead of three and five (round-12
-    rework; sf1 A/B, one warm session, three alternating rounds:
-    five-sum row path 9.05/6.34/6.19 s -> joint-only 6.75/5.86/6.03 s,
-    same hash). A later round-12 rework moved the whole computation to
-    the (flag, x, y) PAIR grain — see the inline comment — so "row
-    path" above now reads "pair path" at ~1/10 the cardinality on
-    this corpus. The closing Pearson formula is an identical-order
-    IEEE chain rounded 1e-6 consuming identical exact integers, so
-    the row-based oracle twin is unchanged.
-    Zero rank variance (all values tied) pins NULL on both sides.
-    The exclusive cumulative count dispatches on measured value
-    cardinality (functions/ranking.adaptive_cumsum, round-8 verdict
-    item 3): the aggregated value table is counted — one cheap action
-    on the persisted frame — and while it is provably domain-bounded
-    (cents/quantities) a flag-partitioned window over IT is exact and
-    job-free; past the cap the distributed-rank recipe takes over, so
-    a genuinely continuous value column still never single-tasks.
+    tables instead (round-12 rework; sf1 A/B, one warm session, three
+    alternating rounds: five-sum row path 9.05/6.34/6.19 s ->
+    joint-only 6.75/5.86/6.03 s, same hash). The closing Pearson
+    formula is an identical-order IEEE chain rounded 1e-6 consuming
+    identical exact integers, so the row-based oracle twin is
+    unchanged. Zero rank variance (all values tied) pins NULL on both
+    sides.
 
     MEASURED FLOOR (round 13, tag ``rank-grain-floor``): three
-    structural alternatives bracket this plan within noise on the
-    regenerated seed — (a) the shuffle-free row path (round 12: wash
-    at sf0.1, LOST at sf1), (b) the direct-value-table variant
-    (``git show cf696a5:scripts/ab_spearman_r13.py``: 5.2-5.5 s
-    both arms, warm alternating, identical rows), (c) this committed
-    shape. With l_extendedprice ~unique the pair/value tables are
+    structural alternatives bracket the pair-grain plan within noise
+    on the regenerated seed — (a) the shuffle-free row path (round 12:
+    wash at sf0.1, LOST at sf1), (b) the direct-value-table variant
+    (``git show cf696a5:scripts/ab_spearman_r13.py``: 5.2-5.5 s both
+    arms, warm alternating, identical rows), (c) the pair-grain shape
+    kept here. With l_extendedprice ~unique the pair/value tables are
     ~row-cardinality at sf0.1, so the cost IS the exact tied-rank
-    grain: one pair shuffle + one value shuffle + a per-flag rank
-    pass is the sufficient-statistics minimum for Spearman with
-    ties, not a plan defect."""
+    grain: one pair shuffle + one value shuffle per variable + a
+    per-flag rank pass is the sufficient-statistics minimum for
+    Spearman with ties, not a plan defect. Re-examined on
+    ``value_ranks`` (no per-variable count collect, sf0.1 16 -> 10
+    jobs): ``scripts/ab.py`` at sf0.1, 4-core host, five alternating
+    rounds, old 3.81-4.90 s (median 4.01) vs new 3.38-4.56 s (median
+    3.91), identical rows — the floor stands."""
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
     from aws_etl_global_footprint_network_spark.functions.ranking import (
-        ADAPTIVE_WINDOW_CAP,
-        adaptive_cumsum,
+        _log_dispatch,
+        value_ranks,
+    )
+    from aws_etl_global_footprint_network_spark.functions.width import (
+        INT64_SAFE_BOUND,
+        table_num_rows,
     )
 
     scope = CacheScope("spearman_rank_corr")
@@ -1151,56 +1149,14 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw scan + ONE shuffle builds the persisted pair table and
     # everything downstream — both value tables, the rank joins, and
     # the DECIMAL(38,0) joint moment — runs at pair cardinality
-    # instead of row scale. The previous shape scanned the raw
-    # relation twice (value-table build + row-path join) and paid the
-    # decimal multiply per ROW (sf1 A/B, one warm session, 4
-    # alternating rounds under host load: 5.67/3.84/4.51/3.88 s ->
-    # 4.24/3.54/2.98/3.05 s, same hash; the exact integers make the
-    # regrouping invisible to the row-based DuckDB twin).
+    # instead of row scale (sf1 A/B, one warm session, 4 alternating
+    # rounds under host load: 5.67/3.84/4.51/3.88 s ->
+    # 4.24/3.54/2.98/3.05 s, same hash). Each value table is the pair
+    # table weighted by t_xy, and lineitem's footer bounds both.
     p = scope.persist(
         li.groupBy("flag", "x", "y").agg(F.count(F.lit(1)).alias("txy"))
     )
-    v = scope.persist(
-        p.select(
-            "flag",
-            F.explode(
-                F.create_map(
-                    F.lit("x"), F.col("x"), F.lit("y"), F.col("y")
-                )
-            ).alias("var", "val"),
-            "txy",
-        )
-        .groupBy("flag", "var", "val")
-        .agg(F.sum("txy").alias("t"))
-    )
-    n_vals = {r["var"]: r["n"] for r in
-              v.groupBy("var").agg(F.count(F.lit(1)).alias("n")).collect()}
 
-    def rank_table(var: str, col: str, out: str) -> DataFrame:
-        t = v.filter(F.col("var") == var).select(
-            "flag", F.col("val").alias(col), "t"
-        )
-        c = adaptive_cumsum(
-            t, "flag", [F.col(col)], {"cb": "t"}, scope, n_rows=n_vals[var]
-        )
-        return c.select(
-            "flag", col, "t", (2 * F.col("cb") + F.col("t") + 1).alias(out)
-        )
-
-    vx = rank_table("x", "x", "r2x")
-    vy = rank_table("y", "y", "r2y")
-    # Marginal moments off the row path (round-12 rework): Σr2, Σr2²
-    # over ROWS group by VALUE — Σ_values t·r2 and t·r2² are the same
-    # exact integers — so four of the five wide sums aggregate over the
-    # value-cardinality rank tables instead of the row-scale join, and
-    # the row path keeps only the joint moment Σ r2x·r2y (plus the
-    # count), cutting the DECIMAL(38,0) row work from three multiplies
-    # + five sums to one multiply + one sum.  Exact integers make the
-    # formulation invisible to the oracle: the closing double chain
-    # consumes identical values, so the row-based DuckDB twin
-    # hash-matches unchanged.  (sf1 A/B, one warm session, alternating:
-    # see docstring.)
-    #
     # Width dispatch (round 12, the gini/anova pattern): every rank
     # moment here is bounded by N·(2N+2)² — the doubled tied-average
     # rank is <= 2N+1 and Σt = N — with N the parquet-footer row count
@@ -1211,14 +1167,6 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are exact integers, so the closing double chain — and the hash —
     # is width-independent.  sf0.1 (600k rows, 4N³ ≈ 8.6e17) runs
     # narrow; sf1 (6M rows, ≈ 8.6e20) runs wide.
-    from aws_etl_global_footprint_network_spark.functions.ranking import (
-        _log_dispatch,
-    )
-    from aws_etl_global_footprint_network_spark.functions.width import (
-        INT64_SAFE_BOUND,
-        table_num_rows,
-    )
-
     n_rows = table_num_rows(sf_dir, "lineitem")
     narrow = (
         n_rows is not None
@@ -1237,44 +1185,38 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dec = "long" if narrow else "decimal(38,0)"
 
-    def moments(vt: DataFrame, out: str, s1n: str, s11n: str) -> DataFrame:
+    def rank_table(col: str, out: str, s1n: str, s11n: str) -> DataFrame:
+        """(flag, col, out) with the doubled rank ``out`` and the flag's
+        marginal moments Σ t·r2 and Σ t·r2², totals of the rank table."""
         td = F.col("t").cast(dec)
-        rd = F.col(out).cast(dec)
-        return vt.groupBy("flag").agg(
-            F.sum(td * rd).alias(s1n),
-            F.sum(td * rd * rd).alias(s11n),
+        rd = (2 * F.col("cb") + F.col("t") + 1).cast(dec)
+        c = value_ranks(
+            p, "flag", col, {"t": F.sum("txy")}, {"cb": "t"}, scope,
+            (sf_dir, "lineitem"),
+            totals={s1n: td * rd, s11n: td * rd * rd},
+            broadcast=True,
+        )
+        return c.select(
+            "flag", col, (2 * F.col("cb") + F.col("t") + 1).alias(out), s1n, s11n
         )
 
-    mom_x = moments(vx, "r2x", "s1", "s11")
-    mom_y = moments(vy, "r2y", "s2", "s22")
-    # A value table that passed the adaptive-window dispatch
-    # (cardinality <= cap) is PROVABLY bounded — the same
-    # domain-boundedness argument that justified the window justifies
-    # BROADCASTING it (<= cap rows x ~32 B): both rank joins become
-    # map-side, the row-scale relation never shuffles, and the 6-sum
-    # aggregate folds partially in the same scan. Past the cap (a
-    # genuinely continuous value column at 100 TB) nothing may be
-    # broadcast and the shuffle joins + distributed rank stand.
-    if n_vals["x"] <= ADAPTIVE_WINDOW_CAP:
-        vx = F.broadcast(vx)
-    if n_vals["y"] <= ADAPTIVE_WINDOW_CAP:
-        vy = F.broadcast(vy)
-    ranked = p.join(vx.drop("t"), ["flag", "x"]).join(
-        vy.drop("t"), ["flag", "y"]
-    )
+    # Marginal moments off the pair path (round-12 rework): Σr2, Σr2²
+    # over ROWS group by VALUE — Σ_values t·r2 and t·r2² are the same
+    # exact integers — so they are per-flag totals of the rank tables
+    # and ride the rank joins as constants; the pair path keeps only
+    # the joint moment Σ t_xy·r2x·r2y (plus the count).
+    vx = rank_table("x", "r2x", "s1", "s11")
+    vy = rank_table("y", "r2y", "s2", "s22")
+    ranked = p.join(vx, ["flag", "x"]).join(vy, ["flag", "y"])
     # Decimal casts happen BEFORE any multiply: no int64 product on
     # the pair path (t_xy·r2x·r2y overflows int64 past ~7e5 rows per
     # group under ANSI mode — caught by the sf1 sweep).
     r2xd, r2yd = F.col("r2x").cast(dec), F.col("r2y").cast(dec)
     txyd = F.col("txy").cast(dec)
-    s = (
-        ranked.groupBy("flag")
-        .agg(
-            F.sum("txy").cast("bigint").alias("n"),
-            F.sum(txyd * r2xd * r2yd).alias("s12"),
-        )
-        .join(mom_x, "flag")
-        .join(mom_y, "flag")
+    s = ranked.groupBy("flag").agg(
+        F.sum("txy").cast("bigint").alias("n"),
+        F.sum(txyd * r2xd * r2yd).alias("s12"),
+        *[F.max(m).alias(m) for m in ("s1", "s11", "s2", "s22")],
     )
     nd = F.col("n").cast("double")
     s1d, s2d = F.col("s1").cast("double"), F.col("s2").cast("double")

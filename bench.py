@@ -417,7 +417,7 @@ def pair_mode(specs, names) -> None:
     con = duck_connection(SF_DIR)
 
     _warm(spark, specs, paired, _warm_dir(SF_DIR))
-    prime_sec = prime_shared_builds(spark, SF_DIR)
+    prime_sec = prime_shared_builds(spark, SF_DIR, specs, paired)
 
     spark_q: dict[str, float] = {}
     duck_q: dict[str, float] = {}
@@ -518,7 +518,7 @@ def _write_out(line, details, sidecar) -> None:
     print(out)
 
 
-def prime_shared_builds(spark, sf_dir) -> dict[str, float]:
+def prime_shared_builds(spark, sf_dir, specs, names) -> dict[str, float]:
     """Materialize the cross-query memoized builds (basket arrays,
     co-purchase edge variants, transition pairs) ONCE before the
     timed pass, each timed separately (round-9 verdict item 3 /
@@ -527,7 +527,11 @@ def prime_shared_builds(spark, sf_dir) -> dict[str, float]:
     iteration-order-dependent and not reproducible standalone. With
     the builds primed, every `shared-build`-tagged query's number is
     its own warm cost, and the build prices are reported explicitly
-    in the sidecar instead of silently folded into one victim."""
+    in the sidecar instead of silently folded into one victim.
+    A selection ``names`` with no `shared-build` query primes nothing
+    and returns an empty dict."""
+    if not any("shared-build" in specs[n].tags for n in names):
+        return {}
     from aws_etl_global_footprint_network_spark.functions import baskets
     from aws_etl_global_footprint_network_spark.operators import (
         analytics_r8c,
@@ -672,7 +676,7 @@ def main() -> None:
     # Prime the cross-query memoized builds at the measured SF so
     # per-query warm numbers are reproducible standalone (their cold
     # cost is reported separately in the sidecar).
-    prime_sec = prime_shared_builds(spark, SF_DIR)
+    prime_sec = prime_shared_builds(spark, SF_DIR, specs, names)
     runs = _time_queries(spark, specs, names, SF_DIR)
 
     # Bench coverage rotation: registered queries outside the headline

@@ -5,7 +5,10 @@ dispatcher took on REAL data (round-10 verdict item 1).
     python scripts/make_scale.py --factor 100 --out /tmp/sf10   # ~1 min
     python scripts/bench_sf10.py [--dir /tmp/sf10]
 
-Writes ``BENCH_sf10.json`` at the repo root:
+Writes ``BENCH_sf10.json`` at the repo root, but only when ``--dir``
+holds sf10 data (read from the lineitem parquet footer, 6M rows per
+scale factor); at any other scale it prints the record and leaves the
+file untouched:
 
     {"sf": 10, "queries": {name: sec}, "rows": {name: n},
      "dispatch": {name: [{kind, n_rows, cap, branch}, ...]},
@@ -38,6 +41,7 @@ import sys
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
+from aws_etl_global_footprint_network_spark.functions.width import table_num_rows
 from aws_etl_global_footprint_network_spark.registry import load_all
 from aws_etl_global_footprint_network_spark.session import get_spark
 
@@ -73,6 +77,13 @@ HEAVIES = [
 ]
 CONTROLS = ["forced_distributed_rank_suite", "forced_distributed_cumsum"]
 PROBE = ADAPTIVE + HEAVIES + CONTROLS
+LINEITEM_ROWS_PER_SF = 6_000_000
+
+
+def scale_of(sf_dir: str) -> float | None:
+    """The scale factor of ``sf_dir`` from its lineitem footer row count."""
+    n = table_num_rows(sf_dir, "lineitem")
+    return None if n is None else n / LINEITEM_ROWS_PER_SF
 
 
 def run_set(spark, specs, names, sf_dir):
@@ -90,10 +101,11 @@ if __name__ == "__main__":
     ap.add_argument(
         "--only",
         default="",
-        help="comma-separated subset of the probe set; results are"
-        " MERGED into an existing BENCH_sf10.json",
+        help="comma-separated subset of the probe set; at sf10 the"
+        " results are MERGED into an existing BENCH_sf10.json",
     )
     args = ap.parse_args()
+    sf = scale_of(args.dir)
     merge_only = bool(args.only)
     if merge_only:
         PROBE = [n.strip() for n in args.only.split(",") if n.strip()]
@@ -120,7 +132,7 @@ if __name__ == "__main__":
     bench._warm(spark, specs, PROBE, bench._warm_dir(bench.SF_DIR))
 
     out = {
-        "sf": 10,
+        "sf": sf,
         "unit": "sec",
         "probe_dir": args.dir,
         "notes": {
@@ -145,7 +157,7 @@ if __name__ == "__main__":
     # Same-session sf1 pass first (smaller; also re-warms the memoized
     # shared builds' plan shapes before the big run).
     if not args.skip_sf1 and os.path.isdir(args.sf1_dir):
-        prime1 = bench.prime_shared_builds(spark, args.sf1_dir)
+        prime1 = bench.prime_shared_builds(spark, args.sf1_dir, specs, PROBE)
         t1, r1, d1, e1 = run_set(spark, specs, PROBE, args.sf1_dir)
         out["sf1_queries"] = t1
         out["sf1_prime_sec"] = prime1
@@ -154,7 +166,7 @@ if __name__ == "__main__":
         t1 = {}
 
     spark.conf.set("spark.sql.shuffle.partitions", sf10_parts)
-    prime10 = bench.prime_shared_builds(spark, args.dir)
+    prime10 = bench.prime_shared_builds(spark, args.dir, specs, PROBE)
     t10, r10, d10, e10 = run_set(spark, specs, PROBE, args.dir)
     out["sf10_shuffle_partitions"] = int(sf10_parts)
 
@@ -183,6 +195,10 @@ if __name__ == "__main__":
         }
     )
     dest = os.path.join(_HERE, "BENCH_sf10.json")
+    if sf != 10:
+        print(json.dumps(out, indent=1, sort_keys=True))
+        print(f"{args.dir} is sf{sf}, not sf10: {dest} left untouched")
+        raise SystemExit(0)
     if merge_only and os.path.exists(dest):
         with open(dest) as fh:
             prior = json.load(fh)

@@ -117,3 +117,31 @@ def test_timer_prices_layout_writes_counts_compiles_and_survives_errors(spark, s
     # write taken out fits in the loop's wall time next to the write
     timed = runs["q1_pricing_summary"]["sec"] + runs["bucketed_join_colocated"]["sec"]
     assert timed + w <= wall + 0.002, (timed, w, wall)
+
+
+def test_prime_skips_selections_without_shared_builds(spark, sf_dir):
+    """Priming builds only what a `shared-build` query reads: a
+    selection without one runs no job and reports no prime time."""
+    from tests.test_fixed_cost import jobs_run
+
+    specs = load_all()
+    names = ["q1_pricing_summary", "bucketed_join_colocated", "streaming_daily_counts"]
+    assert not any("shared-build" in specs[n].tags for n in names)
+    prime, jobs = jobs_run(
+        spark, lambda: bench.prime_shared_builds(spark, sf_dir, specs, names)
+    )
+    assert prime == {} and jobs == 0
+
+
+def test_sf10_probe_reads_its_scale_from_the_lineitem_footer(sf_dir):
+    """`scripts/bench_sf10.py` writes `BENCH_sf10.json` only at sf10;
+    the scale comes from the lineitem row count, not the dir name."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(bench.__file__), "scripts", "bench_sf10.py")
+    spec = importlib.util.spec_from_file_location("bench_sf10", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.scale_of(sf_dir) == 0.001
+    assert mod.scale_of(os.path.join(sf_dir, "missing")) is None

@@ -4,15 +4,24 @@ nodes in the planned query.
 
 - ``weekly_vs_window_equivalence`` plans one Exchange and no cached
   relation, and collects in at most 2 jobs;
-- ``mann_whitney_u`` collects in at most 2 jobs when the parquet
-  footer proves its value table under the window cap, and keeps its
-  partial aggregate below the first Exchange when it does not;
+- the seven rank statistics on ``ranking.value_ranks`` run no builder
+  job and collect in at most their pinned jobs over their pinned
+  Exchanges (``mann_whitney_u``: 2 jobs, 1 Exchange);
+- when the parquet footer proves a keyed value table under the window
+  cap, the raw rows cross one exchange on the key and the (key, value)
+  grouping reuses it; without the proof the grouping's exchange has a
+  partial aggregate below it and nothing partitions on the key alone;
+  a global rank ships only partially aggregated rows;
 - driver results (``kernels.local_frame``) collect with no job;
 - a warm read of a test table, ``.schema`` included, runs no job;
 - on a copy of sf0.001 with NULL user_id and event_type keys, the
-  re-planned compound-return and rank-sum queries match their DuckDB
-  oracles; on a copy with NULL ts, so do the weekday/weekend
-  statistics and the ``ORDER BY ts`` windows that sort NULLs last.
+  re-planned compound-return queries and the seven rank statistics
+  match their DuckDB oracles; on a copy with NULL ts, so do the
+  weekday/weekend statistics and the ``ORDER BY ts`` windows that sort
+  NULLs last; the rank statistics also match on copies with every
+  value NULL or every 7th, with the footer proof off (HLL sizing) and
+  with the window cap forced under the value table (distributed
+  running sums).
 """
 
 from __future__ import annotations
@@ -27,7 +36,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from aws_etl_global_footprint_network_spark.functions import kernels, width
+from aws_etl_global_footprint_network_spark.functions import kernels, ranking, width
 from aws_etl_global_footprint_network_spark.registry import load_all
 from aws_etl_global_footprint_network_spark.sources.readers import (
     read_testdata,
@@ -93,6 +102,91 @@ def test_mann_whitney_unproved_bound_aggregates_before_exchange(
     assert "hashpartitioning(event_type" in lines[first]
     assert ", x" in lines[first].split("hashpartitioning")[1]
     assert any("partial_count" in line for line in lines[first + 1:]), plan
+
+
+# (query, key, value) of the rank statistics on ``ranking.value_ranks``;
+# key None ranks globally
+RANK_STATS = [
+    ("mann_whitney_u", "event_type", "x"),
+    ("ks_two_sample", "event_type", "x"),
+    ("auc_roc_score", None, "score"),
+    ("brown_forsythe_test", "event_type", "cents"),
+    ("kruskal_wallis_h", None, "x"),
+    ("quantile_normalize_events", "event_type", "cents"),
+    ("spearman_rank_corr", "flag", "x"),
+]
+RANK_NAMES = [name for name, _, _ in RANK_STATS]
+KEYED = [s for s in RANK_STATS if s[1]]
+
+# (collect jobs, Exchanges) at sf0.001 on the footer-proved branch
+RANK_COST = {
+    "mann_whitney_u": (2, 1),
+    "ks_two_sample": (2, 1),
+    "auc_roc_score": (5, 3),
+    "brown_forsythe_test": (5, 3),
+    "kruskal_wallis_h": (7, 6),
+    "quantile_normalize_events": (3, 2),
+    "spearman_rank_corr": (10, 6),
+}
+
+
+@pytest.mark.parametrize("name", RANK_NAMES)
+def test_rank_statistic_jobs_and_exchanges(spark, sf_dir, name):
+    SPECS[name].builder(spark, sf_dir)  # warm the reads
+    df, builder_jobs = jobs_run(spark, lambda: SPECS[name].builder(spark, sf_dir))
+    jobs, n_exchanges = RANK_COST[name]
+    assert builder_jobs == 0
+    assert len(exchanges(planned(df))) == n_exchanges
+    rows, got = collect_jobs(spark, df)
+    assert rows and got <= jobs
+
+
+def hash_exchanges(plan: str, *cols: str) -> list[int]:
+    """Line numbers of the Exchanges hash-partitioned on exactly ``cols``."""
+    keys = r", ".join(rf"{c}#\d+L?" for c in cols)
+    pat = re.compile(rf"\bExchange hashpartitioning\({keys}, \d+\)")
+    return [i for i, line in enumerate(plan.splitlines()) if pat.search(line)]
+
+
+@pytest.mark.parametrize("name, key, value", KEYED, ids=[s[0] for s in KEYED])
+def test_footer_proof_partitions_raw_rows_once_on_the_key(spark, sf_dir, name, key, value):
+    """The grouping key (key, value) contains the window's partition
+    key, so the one exchange on the key serves the grouping too."""
+    plan = planned(SPECS[name].builder(spark, sf_dir))
+    assert hash_exchanges(plan, key), plan
+    assert not hash_exchanges(plan, key, value), plan
+
+
+# mann_whitney_u has its own test above
+UNPROVED = KEYED[1:]
+
+
+@pytest.mark.parametrize("name, key, value", UNPROVED, ids=[s[0] for s in UNPROVED])
+def test_unproved_bound_aggregates_before_exchange(
+    spark, sf_dir, monkeypatch, name, key, value
+):
+    """Without the footer proof the rows are partially aggregated
+    before they are shuffled, never shipped raw to the key's tasks."""
+    monkeypatch.setattr(width, "value_table_rows_bound", lambda *a: None)
+    plan = planned(SPECS[name].builder(spark, sf_dir))
+    lines = plan.splitlines()
+    grouped = hash_exchanges(plan, key, value)
+    assert grouped, plan
+    for i in grouped:
+        assert "partial_" in lines[i + 1], lines[i + 1]
+    assert "REPARTITION_BY_COL" not in plan
+
+
+@pytest.mark.parametrize("name", ["auc_roc_score", "kruskal_wallis_h"])
+def test_global_rank_ships_only_aggregated_rows(spark, sf_dir, name):
+    """A global rank windows on one task, so no exchange, the one into
+    that task included, may carry rows that were not aggregated."""
+    plan = planned(SPECS[name].builder(spark, sf_dir))
+    lines = plan.splitlines()
+    ex = [i for i, line in enumerate(lines) if re.search(r"\bExchange ", line)]
+    assert any("SinglePartition" in lines[i] for i in ex), plan
+    for i in ex:
+        assert "HashAggregate(" in lines[i + 1], (lines[i], lines[i + 1])
 
 
 @pytest.mark.parametrize(
@@ -167,7 +261,7 @@ def null_key_dir(tmp_path_factory, sf_dir):
 
 @pytest.mark.parametrize(
     "name",
-    ["weekly_vs_window_equivalence", "mann_whitney_u", "weekly_compound_by_user"],
+    ["weekly_vs_window_equivalence", "weekly_compound_by_user", *RANK_NAMES],
 )
 def test_null_keys_match_oracle(spark, null_key_dir, name):
     con = duck_connection(null_key_dir)
@@ -203,3 +297,48 @@ def test_null_ts_matches_oracle(spark, null_ts_dir, name):
     con = duck_connection(null_ts_dir)
     res = compare(name, SPECS[name].builder(spark, null_ts_dir), SPECS[name].oracle, con)
     assert res.ok, (res.detail, res.mismatches[:5])
+
+
+NULLED = {"null_ts": {"ts": 83}, "null_value": {"value": 1}, "sparse_value": {"value": 7}}
+
+
+@pytest.fixture(scope="module")
+def nulled_dirs(tmp_path_factory, sf_dir):
+    """sf0.001 copies with ts NULL on every 83rd event, value NULL on
+    every event (every rank input empty), and value NULL on every 7th."""
+    return {
+        name: nulled_events_copy(tmp_path_factory.mktemp(name), sf_dir, every)
+        for name, every in NULLED.items()
+    }
+
+
+def assert_matches_oracle(spark, sf_dir: str, name: str) -> None:
+    con = duck_connection(sf_dir)
+    res = compare(name, SPECS[name].builder(spark, sf_dir), SPECS[name].oracle, con)
+    assert res.ok, (res.detail, res.mismatches[:5])
+
+
+@pytest.mark.parametrize("copy", list(NULLED))
+@pytest.mark.parametrize("name", RANK_NAMES)
+def test_rank_statistics_match_oracle_on_degenerate_inputs(spark, nulled_dirs, name, copy):
+    assert_matches_oracle(spark, nulled_dirs[copy], name)
+
+
+@pytest.mark.parametrize("name", RANK_NAMES)
+def test_rank_statistics_hll_branch_matches_oracle(spark, sf_dir, monkeypatch, name):
+    """No footer proof: the value table is sized by the HLL estimate."""
+    monkeypatch.setattr(width, "value_table_rows_bound", lambda *a: None)
+    ranking.DISPATCH_LOG.clear()
+    assert_matches_oracle(spark, sf_dir, name)
+    assert {d["branch"] for d in ranking.DISPATCH_LOG if d["kind"] == "cumsum"} == {"window"}
+
+
+@pytest.mark.parametrize("name", RANK_NAMES)
+def test_rank_statistics_distributed_branch_matches_oracle(spark, sf_dir, monkeypatch, name):
+    """Window cap under the value table: distributed running sums."""
+    monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 1)
+    ranking.DISPATCH_LOG.clear()
+    assert_matches_oracle(spark, sf_dir, name)
+    assert {d["branch"] for d in ranking.DISPATCH_LOG if d["kind"] == "cumsum"} == {
+        "distributed"
+    }

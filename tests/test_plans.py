@@ -177,8 +177,6 @@ CARTESIAN_WHITELIST = {
     # 1-row grand total into the bounded RxC contingency cells
     "cramers_v_priority_status",
     "mutual_information_cats",
-    # 1-row N/ties total into the k-group close
-    "kruskal_wallis_h",
     # 1-row min/max scalar into the corpus bin assignment
     "calibration_reliability_bins",
     "stump_split_gain",

@@ -257,13 +257,14 @@ def test_adaptive_cumsum_paths_agree(spark, monkeypatch):
     )
     scope = CacheScope("test_adaptive_agree")
     try:
+        n = df.count()
         monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 10**9)
         a = ranking.adaptive_cumsum(
-            df, "g", [F.col("x")], {"cb": "t"}, scope
+            df, "g", [F.col("x")], {"cb": "t"}, scope, n
         ).select("g", "x", "cb").collect()
         monkeypatch.setattr(ranking, "ADAPTIVE_WINDOW_CAP", 0)
         b = ranking.adaptive_cumsum(
-            df, "g", [F.col("x")], {"cb": "t"}, scope
+            df, "g", [F.col("x")], {"cb": "t"}, scope, n
         ).select("g", "x", "cb").collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     finally:
