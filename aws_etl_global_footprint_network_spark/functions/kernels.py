@@ -9,19 +9,23 @@ driver memory. ``bounded_collect`` pulls such a graph to the driver
 as one Arrow table when it is provably under a cap, and tells the
 caller to run the distributed loop otherwise. ``local_frame`` hands
 such a driver result back to Spark as a local scan that collects with
-no job.
+no job. ``partial_pass`` is the one Arrow pass of the package: a
+per-partition Python fold over pandas batches (``mapInPandas``) whose
+bounded partials either stay in the plan or come back to the driver
+with one ``toArrow()``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+import functools
+from collections.abc import Callable, Iterable, Iterator, Mapping
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from aws_etl_global_footprint_network_spark.functions.ranking import _log_dispatch
 
@@ -111,3 +115,42 @@ def local_frame(
         cols = list(zip(*rows)) if rows else [()] * len(struct.names)
     table = pa.Table.from_arrays([pa.array(c) for c in cols], names=struct.names)
     return spark.createDataFrame(table, struct)
+
+
+def partial_pass(
+    df: DataFrame,
+    fold: Callable[[Iterator[pd.DataFrame]], Iterable],
+    schema: str | StructType,
+) -> DataFrame:
+    """``df`` mapped partition by partition through ``fold``, a
+    ``mapInPandas`` stage with output ``schema``.
+
+    ``fold`` gets one partition's non-empty pandas batches and yields
+    its output batches, each either columns by name (a mapping or a
+    pandas frame) or a list of row tuples in ``schema`` order (Spark
+    assigns unlabelled columns by position). Zero-row outputs are
+    dropped. The stage carries ``fold``'s name, which is what the
+    plan's ``MapInPandas`` node shows."""
+
+    @functools.wraps(fold)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for out in fold(pdf for pdf in batches if len(pdf)):
+            if not isinstance(out, pd.DataFrame):
+                out = pd.DataFrame(out)
+            if len(out):
+                yield out
+
+    return df.mapInPandas(run, schema)
+
+
+def batch_map(
+    df: DataFrame, fn: Callable[[pd.DataFrame], object], schema: str | StructType
+) -> DataFrame:
+    """``partial_pass`` with no state across batches: ``fn`` maps one
+    non-empty pandas batch to one output batch."""
+
+    @functools.wraps(fn)
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator:
+        return map(fn, batches)
+
+    return partial_pass(df, fold, schema)

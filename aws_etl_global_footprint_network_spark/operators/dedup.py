@@ -20,7 +20,6 @@ whole point of LSH at 100 TB. Hash functions are md5-derived
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +42,7 @@ from aws_etl_global_footprint_network_spark.functions.text import (
     tokens_sql,
     word_shingles_sql,
 )
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.registry import register
@@ -176,59 +176,51 @@ def _minhash_sig_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     A = np.asarray(MINHASH_A, dtype=np.int64)
     B = np.asarray(MINHASH_B, dtype=np.int64)
 
-    def fn(it):
-        pat = re.compile("[^a-z0-9]+")
-        for pdf in it:
-            ids: list[int] = []
-            counts: list[int] = []
-            hs_list: list[np.ndarray] = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in pat.split((text or "").lower()) if t]
-                if len(toks) < 3:
-                    continue
-                sh = {
-                    " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
-                }
-                ids.append(did)
-                counts.append(len(sh))
-                hs_list.append(
-                    np.fromiter(
-                        (
-                            int(
-                                hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
-                                16,
-                            )
-                            % P31
-                            for s in sh
-                        ),
-                        dtype=np.int64,
-                        count=len(sh),
-                    )
-                )
-            if not ids:
+    pat = re.compile("[^a-z0-9]+")
+
+    def fn(pdf):
+        ids: list[int] = []
+        counts: list[int] = []
+        hs_list: list[np.ndarray] = []
+        for did, text in zip(pdf["doc_id"], pdf["text"]):
+            toks = [t for t in pat.split((text or "").lower()) if t]
+            if len(toks) < 3:
                 continue
-            nd = len(ids)
-            allh = np.concatenate(hs_list)
-            seg = np.repeat(np.arange(nd), np.asarray(counts))
-            cols = {"doc_id": np.asarray(ids, dtype=np.int64)}
-            for i in range(MINHASH_K):
-                p = (A[i] * allh + B[i]) % P31
-                mins = np.full(nd, np.iinfo(np.int64).max)
-                np.minimum.at(mins, seg, p)
-                cols[f"m{i}"] = mins
-            cols["n"] = np.asarray(counts, dtype=np.int64)
-            yield pd.DataFrame(cols)
+            sh = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+            ids.append(did)
+            counts.append(len(sh))
+            hs_list.append(
+                np.fromiter(
+                    (
+                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+                        % P31
+                        for s in sh
+                    ),
+                    dtype=np.int64,
+                    count=len(sh),
+                )
+            )
+        if not ids:
+            return {}
+        nd = len(ids)
+        allh = np.concatenate(hs_list)
+        seg = np.repeat(np.arange(nd), np.asarray(counts))
+        cols = {"doc_id": np.asarray(ids, dtype=np.int64)}
+        for i in range(MINHASH_K):
+            p = (A[i] * allh + B[i]) % P31
+            mins = np.full(nd, np.iinfo(np.int64).max)
+            np.minimum.at(mins, seg, p)
+            cols[f"m{i}"] = mins
+        cols["n"] = np.asarray(counts, dtype=np.int64)
+        return cols
 
     schema = (
         "doc_id bigint, "
         + ", ".join(f"m{i} bigint" for i in range(MINHASH_K))
         + ", n bigint"
     )
-    return (
-        spread(read_testdata(spark, sf_dir, "documents"))
-        .select("doc_id", "text")
-        .mapInPandas(fn, schema)
-    )
+    docs = spread(read_testdata(spark, sf_dir, "documents")).select("doc_id", "text")
+    return kernels.batch_map(docs, fn, schema)
 
 
 def lsh_band_buckets(signatures: DataFrame) -> DataFrame:
@@ -425,41 +417,32 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import re
 
-    def fn(it):
-        pat = re.compile("[^a-z0-9]+")
-        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-        for pdf in it:
-            ids: list[int] = []
-            sigs: list[int] = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = {t for t in pat.split((text or "").lower()) if t}
-                if not toks:
-                    continue
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                        for t in toks
-                    ),
-                    dtype=np.int64,
-                    count=len(toks),
-                )
-                bits = (hs[:, None] >> shifts[None, :]) & 1
-                votes = (2 * bits - 1).sum(axis=0)
-                ids.append(did)
-                sigs.append(int(((votes > 0).astype(np.int64) << shifts).sum()))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.asarray(ids, dtype=np.int64),
-                        "simhash": np.asarray(sigs, dtype=np.int64),
-                    }
-                )
+    pat = re.compile("[^a-z0-9]+")
+    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
-    return (
-        spread(read_testdata(spark, sf_dir, "documents"))
-        .select("doc_id", "text")
-        .mapInPandas(fn, "doc_id bigint, simhash bigint")
-    )
+    def fn(pdf):
+        ids: list[int] = []
+        sigs: list[int] = []
+        for did, text in zip(pdf["doc_id"], pdf["text"]):
+            toks = {t for t in pat.split((text or "").lower()) if t}
+            if not toks:
+                continue
+            hs = np.fromiter(
+                (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) for t in toks),
+                dtype=np.int64,
+                count=len(toks),
+            )
+            bits = (hs[:, None] >> shifts[None, :]) & 1
+            votes = (2 * bits - 1).sum(axis=0)
+            ids.append(did)
+            sigs.append(int(((votes > 0).astype(np.int64) << shifts).sum()))
+        return {
+            "doc_id": np.asarray(ids, dtype=np.int64),
+            "simhash": np.asarray(sigs, dtype=np.int64),
+        }
+
+    docs = spread(read_testdata(spark, sf_dir, "documents")).select("doc_id", "text")
+    return kernels.batch_map(docs, fn, "doc_id bigint, simhash bigint")
 
 
 # --------------------------------------------------------------------

@@ -18,14 +18,13 @@ from __future__ import annotations
 import math
 import struct
 import zlib
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat_np
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
@@ -163,29 +162,32 @@ def synthesize_image_payloads(media: DataFrame, every: int = 4) -> DataFrame:
     a deterministic, codec-free image corpus so the decode path runs
     on genuine image bytes. Map-only (mapInPandas), no shuffle."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, types, sizes = [], [], []
-            for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if doc_id % every == 0:
-                    w = 4 + int(doc_id) % 29
-                    h = 3 + int(doc_id) % 17
-                    payload, mtype = synth_png(w, h, bytes(payload)), "image/png"
-                payloads.append(payload)
-                types.append(mtype)
-                sizes.append(len(payload))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": types,
-                    "n_bytes": sizes,
-                }
-            )
+    def op(pdf: pd.DataFrame) -> list[tuple]:
+        rows = []
+        for doc_id, payload, mtype in zip(
+            pdf["doc_id"], pdf["payload"], pdf["media_type"]
+        ):
+            if doc_id % every == 0:
+                w = 4 + int(doc_id) % 29
+                h = 3 + int(doc_id) % 17
+                payload, mtype = synth_png(w, h, bytes(payload)), "image/png"
+            rows.append((doc_id, payload, mtype, len(payload)))
+        return rows
 
-    return media.mapInPandas(op, schema=MEDIA_SCHEMA)
+    return kernels.batch_map(media, op, MEDIA_SCHEMA)
+
+
+def _header_columns(pdf: pd.DataFrame) -> dict:
+    """doc_id, n_bytes and the sniffed (format, width, height) of a
+    batch of payloads; width and height are NULL where unknown."""
+    fmt, w, h = zip(*(decode_image_header(bytes(b)) for b in pdf["payload"]))
+    return {
+        "doc_id": pdf["doc_id"],
+        "n_bytes": pdf["n_bytes"],
+        "format": fmt,
+        "width": pd.array(w, dtype="Int32"),
+        "height": pd.array(h, dtype="Int32"),
+    }
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -197,28 +199,16 @@ def extract_features(media: DataFrame) -> DataFrame:
     partitions; swap ``byte_features`` for a pixel/codec featurizer in
     a deployment that ships codec libraries."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image_header(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["n_bytes"],
-                    "format": [d[0] for d in decoded],
-                    "width": pd.array(
-                        [d[1] for d in decoded], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [d[2] for d in decoded], dtype="Int32"
-                    ),
-                    "features": [
-                        [round(x, 6) for x in byte_features(bytes(b))]
-                        for b in pdf["payload"]
-                    ],
-                }
-            )
+    def op(pdf: pd.DataFrame) -> dict:
+        return dict(
+            _header_columns(pdf),
+            features=[
+                [round(x, 6) for x in byte_features(bytes(b))]
+                for b in pdf["payload"]
+            ],
+        )
 
-    return media.mapInPandas(op, schema=FEATURES_SCHEMA)
+    return kernels.batch_map(media, op, FEATURES_SCHEMA)
 
 
 def extract_headers(media: DataFrame) -> DataFrame:
@@ -230,22 +220,13 @@ def extract_headers(media: DataFrame) -> DataFrame:
     dropping it here cut multimodal_features ~2.5x at sf1 (the
     remaining cost is the genuine PNG synth + header parse)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image_header(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["n_bytes"],
-                    "format": [d[0] for d in decoded],
-                    "width": pd.array([d[1] for d in decoded], dtype="Int32"),
-                    "height": pd.array([d[2] for d in decoded], dtype="Int32"),
-                }
-            )
+    def op(pdf: pd.DataFrame) -> dict:  # the stage name the plan shows
+        return _header_columns(pdf)
 
-    return media.mapInPandas(
+    return kernels.batch_map(
+        media,
         op,
-        schema=T.StructType(
+        T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
                 T.StructField("n_bytes", T.LongType()),

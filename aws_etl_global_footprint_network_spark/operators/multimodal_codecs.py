@@ -32,14 +32,13 @@ import io
 import struct
 import wave
 import zlib
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.operators.multimodal import (
     attach_binary_payload,
     synth_png,
@@ -167,26 +166,20 @@ def resize_thumbnails(media: DataFrame) -> DataFrame:
     nearest-neighbor, and emit the thumbnail's pixel sum (content
     witness) plus dimensions. Map-only mapInPandas."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in THUMB_SCHEMA.fieldNames()}
-            for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if mtype != "image/png":
-                    continue
-                w, h, raster = decode_png_gray(bytes(payload))
-                tw, th = (w + 1) // 2, (h + 1) // 2
-                thumb = resize_nn(raster, w, h, tw, th)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["thumb_w"].append(tw)
-                rows["thumb_h"].append(th)
-                rows["thumb_sum"].append(int(sum(thumb)))
-            yield pd.DataFrame(rows)
+    def op(pdf: pd.DataFrame) -> list[tuple]:
+        rows = []
+        for doc_id, payload, mtype in zip(
+            pdf["doc_id"], pdf["payload"], pdf["media_type"]
+        ):
+            if mtype != "image/png":
+                continue
+            w, h, raster = decode_png_gray(bytes(payload))
+            tw, th = (w + 1) // 2, (h + 1) // 2
+            thumb = resize_nn(raster, w, h, tw, th)
+            rows.append((int(doc_id), w, h, tw, th, int(sum(thumb))))
+        return rows
 
-    return media.mapInPandas(op, schema=THUMB_SCHEMA)
+    return kernels.batch_map(media, op, THUMB_SCHEMA)
 
 
 @register(
@@ -264,19 +257,20 @@ def synthesize_audio_payloads(documents: DataFrame) -> DataFrame:
     16-bit PCM samples ((byte - 64) * 256) at a doc_id-derived sample
     rate — real WAV files, reproducible by the oracle from the text."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                samples = (b.astype(np.int32) - 64) * 256
-                rate = 8000 + (int(doc_id) % 8) * 1000
-                payloads.append(synth_wav(rate, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def op(pdf: pd.DataFrame) -> list[tuple]:
+        rows = []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+            samples = (b.astype(np.int32) - 64) * 256
+            rate = 8000 + (int(doc_id) % 8) * 1000
+            rows.append((doc_id, synth_wav(rate, samples)))
+        return rows
 
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).mapInPandas(op, schema=AUDIO_SCHEMA)
+    return kernels.batch_map(
+        documents.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
+        op,
+        AUDIO_SCHEMA,
+    )
 
 
 def extract_audio_features(audio: DataFrame) -> DataFrame:
@@ -285,31 +279,34 @@ def extract_audio_features(audio: DataFrame) -> DataFrame:
     PCM samples with numpy: energy (exact integer sum of squares) and
     peak amplitude. Map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in AUDIO_FEATURES_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    rate, nch, width = (
-                        w.getframerate(),
-                        w.getnchannels(),
-                        w.getsampwidth(),
-                    )
-                    n = w.getnframes()
-                    samples = np.frombuffer(w.readframes(n), dtype="<i2").astype(
-                        np.int64
-                    )
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(nch)
-                rows["sample_width"].append(width)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(n * 1000 // rate)
-                rows["sum_sq"].append(int((samples * samples).sum()))
-                rows["peak"].append(int(np.abs(samples).max()) if n else 0)
-            yield pd.DataFrame(rows)
+    def op(pdf: pd.DataFrame) -> list[tuple]:
+        rows = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
+                rate, nch, width = (
+                    w.getframerate(),
+                    w.getnchannels(),
+                    w.getsampwidth(),
+                )
+                n = w.getnframes()
+                samples = np.frombuffer(w.readframes(n), dtype="<i2").astype(
+                    np.int64
+                )
+            rows.append(
+                (
+                    int(doc_id),
+                    rate,
+                    nch,
+                    width,
+                    n,
+                    n * 1000 // rate,
+                    int((samples * samples).sum()),
+                    int(np.abs(samples).max()) if n else 0,
+                )
+            )
+        return rows
 
-    return audio.mapInPandas(op, schema=AUDIO_FEATURES_SCHEMA)
+    return kernels.batch_map(audio, op, AUDIO_FEATURES_SCHEMA)
 
 
 @register(
@@ -402,17 +399,20 @@ def demux_frames(payload: bytes) -> tuple[int, int, int, list[bytes]]:
 
 
 def synthesize_video_payloads(documents: DataFrame) -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
+    def op(pdf: pd.DataFrame) -> dict:
+        return {
+            "doc_id": pdf["doc_id"],
+            "payload": [
                 synth_video(int(doc_id), text.encode("utf-8"))
                 for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+            ],
+        }
 
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).mapInPandas(op, schema=VIDEO_SCHEMA)
+    return kernels.batch_map(
+        documents.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
+        op,
+        VIDEO_SCHEMA,
+    )
 
 
 def sample_frames(videos: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
@@ -421,22 +421,16 @@ def sample_frames(videos: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     feature extraction). Frame decode is the real PNG decoder; output
     is one row per sampled frame with the decoded pixel sum."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in FRAME_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames, fw, fh, frames = demux_frames(bytes(payload))
-                for f in range(0, n_frames, stride):
-                    w, h, raster = decode_png_gray(frames[f])
-                    rows["doc_id"].append(int(doc_id))
-                    rows["n_frames"].append(n_frames)
-                    rows["frame_idx"].append(f)
-                    rows["frame_w"].append(w)
-                    rows["frame_h"].append(h)
-                    rows["frame_sum"].append(int(sum(raster)))
-            yield pd.DataFrame(rows)
+    def op(pdf: pd.DataFrame) -> list[tuple]:
+        rows = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            n_frames, fw, fh, frames = demux_frames(bytes(payload))
+            for f in range(0, n_frames, stride):
+                w, h, raster = decode_png_gray(frames[f])
+                rows.append((int(doc_id), n_frames, f, w, h, int(sum(raster))))
+        return rows
 
-    return videos.mapInPandas(op, schema=FRAME_SCHEMA)
+    return kernels.batch_map(videos, op, FRAME_SCHEMA)
 
 
 @register(
@@ -492,30 +486,22 @@ def average_hash(media: DataFrame) -> DataFrame:
     the downsampled mean (compared in integers: n_pixels * p > total,
     no float mean). Map-only mapInPandas."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(pdf: pd.DataFrame) -> list[tuple]:
         n_px = AH_W * AH_H
-        for pdf in batches:
-            rows = {k: [] for k in PHASH_SCHEMA.fieldNames()}
-            for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if mtype != "image/png":
-                    continue
-                w, h, raster = decode_png_gray(bytes(payload))
-                small = resize_nn(raster, w, h, AH_W, AH_H)
-                total = int(sum(small))
-                phash = 0
-                nset = 0
-                for k, p in enumerate(small):
-                    if n_px * int(p) > total:
-                        phash |= 1 << k
-                        nset += 1
-                rows["doc_id"].append(int(doc_id))
-                rows["phash"].append(phash)
-                rows["n_set_bits"].append(nset)
-            yield pd.DataFrame(rows)
+        rows = []
+        for doc_id, payload, mtype in zip(
+            pdf["doc_id"], pdf["payload"], pdf["media_type"]
+        ):
+            if mtype != "image/png":
+                continue
+            w, h, raster = decode_png_gray(bytes(payload))
+            small = resize_nn(raster, w, h, AH_W, AH_H)
+            total = int(sum(small))
+            above = [k for k, p in enumerate(small) if n_px * int(p) > total]
+            rows.append((int(doc_id), sum(1 << k for k in above), len(above)))
+        return rows
 
-    return media.mapInPandas(op, schema=PHASH_SCHEMA)
+    return kernels.batch_map(media, op, PHASH_SCHEMA)
 
 
 def _phash_oracle() -> str:

@@ -8,7 +8,7 @@ point is non-dominated within its partition, so
 ``union(local frontiers) ⊇ global frontier``. That licenses the
 classic two-phase plan:
 
-1. map-side prune (``mapInPandas``): each Arrow batch sorts by
+1. map-side prune (``kernels.batch_map``): each Arrow batch sorts by
    (price, size) and keeps rows whose size equals the running minimum
    — a superset of the batch's frontier, vectorized, no shuffle. At
    100 TB this discards ~everything; survivors per partition are
@@ -25,30 +25,24 @@ is exact by construction.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
 
 _CAND_SCHEMA = "p_partkey bigint, p_retailprice double, p_size int"
 
 
-def _local_frontier(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _local_frontier(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-batch skyline superset: after sorting by (price, size), a
     row can only be dominated by a predecessor, and any dominating
     predecessor has strictly smaller size — so keeping rows whose size
     equals the running min keeps every frontier point (ties included)."""
-    for pdf in batches:
-        if pdf.empty:
-            yield pdf
-            continue
-        s = pdf.sort_values(["p_retailprice", "p_size"], kind="mergesort")
-        keep = s["p_size"] <= s["p_size"].cummin()
-        yield s[keep]
+    s = pdf.sort_values(["p_retailprice", "p_size"], kind="mergesort")
+    return s[s["p_size"] <= s["p_size"].cummin()]
 
 
 # Candidate sets at or below this row count broadcast for the exact
@@ -150,5 +144,5 @@ def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
 
     scope = CacheScope("pareto_frontier_parts")
-    cand = scope.persist(p.mapInPandas(_local_frontier, _CAND_SCHEMA))
+    cand = scope.persist(kernels.batch_map(p, _local_frontier, _CAND_SCHEMA))
     return _exact_dominance(cand, PARETO_BROADCAST_CAP)

@@ -19,6 +19,10 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,7 +35,10 @@ from aws_etl_global_footprint_network_spark.functions.vectors import (
     norm_sql,
 )
 from aws_etl_global_footprint_network_spark.functions.cache import cut_lineage, CacheScope
-from aws_etl_global_footprint_network_spark.functions.compat import round_compat
+from aws_etl_global_footprint_network_spark.functions.compat import (
+    round_compat,
+    round_compat_np,
+)
 from aws_etl_global_footprint_network_spark.functions.hashing import (
     md5_hash60,
     md5_hash60_sql,
@@ -504,9 +511,6 @@ def _band_bucket_frame(emb: DataFrame, extra: int) -> DataFrame:
     ``extra`` appends the adaptive bucket bits (see the constants
     block): pool plane N_PLANES + band*ADAPTIVE_MAX_EXTRA + je feeds
     bucket bit BITS_PER_BAND + je of ``band``."""
-    import numpy as np
-    import pandas as pd
-
     needed = list(range(N_PLANES)) + [
         N_PLANES + b * ADAPTIVE_MAX_EXTRA + je
         for b in range(LSH_BANDS)
@@ -516,38 +520,35 @@ def _band_bucket_frame(emb: DataFrame, extra: int) -> DataFrame:
         [[HYPERPLANES_POOL[p][i] for p in needed] for i in range(DIM)]
     )
 
-    def project(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            e = np.vstack(pdf["e"].to_numpy()).astype(np.float64)
-            acc = np.zeros((n, w.shape[1]))
-            for i in range(DIM):
-                acc += e[:, i : i + 1] * w[i]
-            bits = (acc > 0).astype(np.int64)
-            vec = pdf["vec_id"].to_numpy()
-            frames = []
-            for b in range(LSH_BANDS):
-                bucket = np.zeros(n, dtype=np.int64)
-                for j in range(BITS_PER_BAND):
-                    bucket += bits[:, b * BITS_PER_BAND + j] << j
-                for je in range(extra):
-                    col = N_PLANES + b * extra + je
-                    bucket += bits[:, col] << (BITS_PER_BAND + je)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": vec,
-                            "band": np.full(n, b, dtype=np.int32),
-                            "bucket": bucket,
-                        }
-                    )
+    def project(pdf):
+        n = len(pdf)
+        e = np.vstack(pdf["e"].to_numpy()).astype(np.float64)
+        acc = np.zeros((n, w.shape[1]))
+        for i in range(DIM):
+            acc += e[:, i : i + 1] * w[i]
+        bits = (acc > 0).astype(np.int64)
+        vec = pdf["vec_id"].to_numpy()
+        frames = []
+        for b in range(LSH_BANDS):
+            bucket = np.zeros(n, dtype=np.int64)
+            for j in range(BITS_PER_BAND):
+                bucket += bits[:, b * BITS_PER_BAND + j] << j
+            for je in range(extra):
+                col = N_PLANES + b * extra + je
+                bucket += bits[:, col] << (BITS_PER_BAND + je)
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "vec_id": vec,
+                        "band": np.full(n, b, dtype=np.int32),
+                        "bucket": bucket,
+                    }
                 )
-            yield pd.concat(frames, ignore_index=True)
+            )
+        return pd.concat(frames, ignore_index=True)
 
-    return emb.select("vec_id", "e").mapInPandas(
-        project, "vec_id long, band int, bucket long"
+    return kernels.batch_map(
+        emb.select("vec_id", "e"), project, "vec_id long, band int, bucket long"
     )
 
 
@@ -765,6 +766,70 @@ def ivf_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _centroid_dists(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, *keep: str
+) -> DataFrame:
+    """(vec_id, label, d, *keep): every vector of ``emb`` (with its
+    double array ``e``) against every label centroid, gathered into
+    one ordered array per label and broadcast; ``d`` is the squared
+    L2 distance folded left to right, as the oracle's ``list_sum``."""
+    cent = ivf_label_centroids(spark, sf_dir)
+    carr = cent.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))),
+            lambda s: s.centroid_val,
+        ).alias("c")
+    )
+    dist = F.aggregate(
+        F.zip_with("e", "c", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+    return emb.crossJoin(F.broadcast(carr)).select(
+        "vec_id", "label", dist.alias("d"), *keep
+    )
+
+
+# numpy folds of the IVF/PQ Arrow passes (k-means, PQ training, ADC)
+
+def label_sq_dists(x: np.ndarray, carr: np.ndarray) -> np.ndarray:
+    """(n, L) squared L2 distances from the rows of ``x`` to the L
+    centroid rows of ``carr``, each folded left to right over the
+    dimensions: the float64 order of ``_centroid_dists`` and of the
+    oracle's ``list_sum``, so argmins agree bit for bit."""
+    d = np.zeros((len(x), len(carr)))
+    for i in range(x.shape[1]):
+        t = x[:, i][:, None] - carr[None, :, i]
+        d = d + t * t
+    return d
+
+
+def add_label_sums(acc: dict, x: np.ndarray, lab: np.ndarray) -> None:
+    """Fold one batch into a partition's per-label partials
+    ``acc[label] = (count, sum vector)``: each label's rows of the
+    batch are summed, then added to its running sum."""
+    for lv in np.unique(lab):
+        rows = x[lab == lv]
+        n, total = acc.get(int(lv), (0, 0.0))
+        acc[int(lv)] = (n + len(rows), total + rows.sum(axis=0))
+
+
+def keyed_means(
+    parts: pa.Table, width: int, digits: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(keys, counts, means) of ``(key, cnt, s)`` partial rows: each
+    key's ``width``-long sums added in row order, which ``toArrow``
+    keeps in partition order, and the means rounded at ``digits``
+    (the CENTROID_ROUND contract that pins the engines' different
+    summation orders)."""
+    keys, idx = np.unique(parts["key"].to_numpy(), return_inverse=True)
+    counts = np.zeros(len(keys), dtype=np.int64)
+    sums = np.zeros((len(keys), width))
+    np.add.at(counts, idx, parts["cnt"].to_numpy())
+    np.add.at(sums, idx, pc.list_flatten(parts["s"]).to_numpy().reshape(-1, width))
+    return keys, counts, round_compat_np(sums / counts[:, None], digits)
+
+
 @register(
     "ivf_assignments",
     f"""
@@ -803,26 +868,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(read_testdata(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double_array("embedding").alias("e")
     )
-    cent = ivf_label_centroids(spark, sf_dir)
-    carr = (
-        cent.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "centroid_val"))
-                ),
-                lambda s: s.centroid_val,
-            ).alias("c")
-        )
-    )
-    dist = F.aggregate(
-        F.zip_with("e", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = emb.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "label", dist.alias("d")
-    )
+    scored = _centroid_dists(spark, sf_dir, emb)
     w = Window.partitionBy("vec_id").orderBy("d", "label")
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -921,24 +967,7 @@ def ivf_probe_topk(
         as_double_array("embedding").alias("e"),
         norm(as_double_array("embedding")).alias("nrm"),
     )
-    cent = ivf_label_centroids(spark, sf_dir)
-    carr = (
-        cent.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))),
-                lambda s: s.centroid_val,
-            ).alias("c")
-        )
-    )
-    dist = F.aggregate(
-        F.zip_with("e", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    dists = emb.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "label", dist.alias("d"), "e", "nrm"
-    )
+    dists = _centroid_dists(spark, sf_dir, emb, "e", "nrm")
     w_assign = Window.partitionBy("vec_id").orderBy("d", "label")
     assigned = (
         dists.withColumn("rn", F.row_number().over(w_assign))
@@ -1054,13 +1083,6 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding, exactly as cross-engine parity already relied on.
     Empty clusters drop out (no partial row). The final round's
     assignment counts ARE the cluster sizes — no extra pass."""
-    import numpy as np
-    import pandas as pd
-
-    from aws_etl_global_footprint_network_spark.functions.compat import (
-        round_compat_np,
-    )
-
     src = spread(read_testdata(spark, sf_dir, "embeddings")).select(
         "label", as_double_array("embedding").alias("e")
     )
@@ -1069,64 +1091,32 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One partials pass: natural-label grouping when ``carr`` is
         None, else argmin assignment against the rounded centroids."""
 
-        def fn(it):
-            lsum: dict[int, np.ndarray] = {}
-            lcnt: dict[int, int] = {}
-            dim = None
-            for pdf in it:
-                n = len(pdf)
-                if n == 0:
-                    continue
+        def fn(batches):
+            acc: dict[int, tuple] = {}
+            for pdf in batches:
                 x = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-                dim = x.shape[1]
                 if carr is None:
                     lab = pdf["label"].to_numpy(dtype=np.int64)
                 else:
-                    dl = np.zeros((n, len(labels)))
-                    for i in range(dim):
-                        t = x[:, i][:, None] - carr[None, :, i]
-                        dl = dl + t * t
-                    lab = labels[np.argmin(dl, axis=1)]
-                for lv in np.unique(lab):
-                    rows = x[lab == lv]
-                    acc = lsum.setdefault(int(lv), np.zeros(dim))
-                    lsum[int(lv)] = acc + rows.sum(axis=0)
-                    lcnt[int(lv)] = lcnt.get(int(lv), 0) + len(rows)
-            if lsum:
-                yield pd.DataFrame(
-                    {
-                        "lab": sorted(lsum),
-                        "cnt": [lcnt[lv] for lv in sorted(lsum)],
-                        "s": [lsum[lv].tolist() for lv in sorted(lsum)],
-                    }
-                )
+                    lab = labels[np.argmin(label_sq_dists(x, carr), axis=1)]
+                add_label_sums(acc, x, lab)
+            yield [(lv, n, total) for lv, (n, total) in sorted(acc.items())]
 
-        parts = src.mapInPandas(
-            fn, "lab long, cnt long, s array<double>"
-        ).collect()
-        agg_s: dict[int, np.ndarray] = {}
-        agg_n: dict[int, int] = {}
-        for r in sorted(parts, key=lambda r: r["lab"]):
-            acc = agg_s.setdefault(r["lab"], np.zeros(len(r["s"])))
-            agg_s[r["lab"]] = acc + np.asarray(r["s"])
-            agg_n[r["lab"]] = agg_n.get(r["lab"], 0) + r["cnt"]
-        out_labels = np.asarray(sorted(agg_s), dtype=np.int64)
-        cents = np.stack(
-            [round_compat_np(agg_s[lv] / agg_n[lv], 6) for lv in out_labels]
-        ) if len(out_labels) else np.zeros((0, 0))
-        sizes = {int(lv): agg_n[lv] for lv in out_labels}
+        parts = kernels.partial_pass(
+            src, fn, "key long, cnt long, s array<double>"
+        ).toArrow()
+        out_labels, sizes, cents = keyed_means(parts, DIM, CENTROID_ROUND)
         return out_labels, cents, sizes
 
     labels, carr, _ = label_pass()  # cent0: the label-centroid init
-    sizes: dict[int, int] = {}
+    sizes = np.zeros(0, dtype=np.int64)
     for _ in range(KMEANS_ROUNDS):
         labels, carr, sizes = label_pass(labels=labels, carr=carr)
-    rows = []
-    for li, lv in enumerate(labels):
-        for pos in range(carr.shape[1]):
-            rows.append(
-                (int(lv), pos + 1, float(carr[li, pos]), sizes[int(lv)])
-            )
+    rows = [
+        (int(lv), pos + 1, float(carr[li, pos]), int(sizes[li]))
+        for li, lv in enumerate(labels)
+        for pos in range(carr.shape[1])
+    ]
     return kernels.local_frame(
         spark, rows, "cluster int, pos int, centroid_val double, n_members bigint"
     )

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -50,6 +51,12 @@ from aws_etl_global_footprint_network_spark.functions.compat import (
     round_compat_np,
 )
 from aws_etl_global_footprint_network_spark.functions.vectors import as_double_array
+from aws_etl_global_footprint_network_spark.operators.similarity import (
+    CENTROID_ROUND,
+    add_label_sums,
+    keyed_means,
+    label_sq_dists,
+)
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import (
     read_testdata,
@@ -187,27 +194,19 @@ def _train_np(spark: SparkSession, sf_dir: str, with_labels: bool = False):
     head = _collect_head(spark, sf_dir, K)
     codes0 = sorted(head)
     c0 = len(codes0)
-    cb0 = np.stack(
-        [head[c].reshape(M, SUBDIM) for c in codes0], axis=1
-    )  # (M, C0, SUBDIM)
+    cb0 = np.zeros((M, c0, SUBDIM))
+    for ci, c in enumerate(codes0):
+        cb0[:, ci] = head[c].reshape(M, SUBDIM)
 
     cols = ["label", "embedding"] if with_labels else ["embedding"]
 
-    def part_fn(it):
-        from pyspark import TaskContext
-
+    def part_fn(batches):
         sums = np.zeros((M, c0, SUBDIM))
         cnts = np.zeros((M, c0), dtype=np.int64)
-        lsum: dict[int, np.ndarray] = {}
-        lcnt: dict[int, int] = {}
-        seen = False
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            seen = True
+        lacc: dict[int, tuple] = {}
+        for pdf in batches:
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            xs = x.reshape(n, M, SUBDIM)
+            xs = x.reshape(len(x), M, SUBDIM)
             for mi in range(M):
                 sv = xs[:, mi, :]
                 diff = sv[:, None, :] - cb0[mi][None, :, :]
@@ -215,75 +214,31 @@ def _train_np(spark: SparkSession, sf_dir: str, with_labels: bool = False):
                 np.add.at(sums[mi], a, sv)
                 cnts[mi] += np.bincount(a, minlength=c0)
             if with_labels:
-                lab = pdf["label"].to_numpy(dtype=np.int64)
-                for lv in np.unique(lab):
-                    rows = x[lab == lv]
-                    acc = lsum.setdefault(int(lv), np.zeros(DIM))
-                    lsum[int(lv)] = acc + rows.sum(axis=0)
-                    lcnt[int(lv)] = lcnt.get(int(lv), 0) + len(rows)
-        if not seen:
-            return
-        pid = TaskContext.get().partitionId()
-        recs = []
-        for mi in range(M):
-            for ci in range(c0):
-                if cnts[mi, ci]:
-                    recs.append(
-                        (pid, 0, -1, mi, ci, int(cnts[mi, ci]))
-                        + tuple(sums[mi, ci])
-                    )
-        for lv in sorted(lsum):
-            for chunk in range(DIM // SUBDIM):
-                recs.append(
-                    (pid, 1, lv, chunk, 0, lcnt[lv])
-                    + tuple(lsum[lv][chunk * SUBDIM: (chunk + 1) * SUBDIM])
-                )
-        yield pd.DataFrame(
-            recs,
-            columns=["pid", "kind", "lab", "m", "ci", "cnt"]
-            + [f"s{i}" for i in range(SUBDIM)],
-        )
+                add_label_sums(lacc, x, pdf["label"].to_numpy(dtype=np.int64))
+        cells = sums.reshape(M * c0, SUBDIM)
+        yield [
+            (0, int(k), int(cnts.flat[k]), cells[k]) for k in np.flatnonzero(cnts)
+        ] + [(1, lv, n, total) for lv, (n, total) in sorted(lacc.items())]
 
-    schema = (
-        "pid int, kind int, lab long, m int, ci int, cnt long, "
-        + ", ".join(f"s{i} double" for i in range(SUBDIM))
+    parts = kernels.partial_pass(
+        spread(read_testdata(spark, sf_dir, "embeddings")).select(*cols),
+        part_fn,
+        "kind int, key long, cnt long, s array<double>",
+    ).toArrow()
+    # cell key = m * c0 + ci; only the cells some vector chose are present
+    keys, counts, means = keyed_means(
+        parts.filter(pc.equal(parts["kind"], 0)), SUBDIM, PQ_ROUND
     )
-    parts = (
-        spread(read_testdata(spark, sf_dir, "embeddings"))
-        .select(*cols)
-        .mapInPandas(part_fn, schema)
-        .collect()
-    )
-    sums = np.zeros((M, c0, SUBDIM))
-    cnts = np.zeros((M, c0), dtype=np.int64)
-    lsum: dict[int, np.ndarray] = {}
-    lcnt: dict[int, int] = {}
-    for r in sorted(parts, key=lambda r: (r["kind"], r["lab"], r["m"], r["ci"], r["pid"])):
-        s = np.asarray([r[f"s{i}"] for i in range(SUBDIM)])
-        if r["kind"] == 0:
-            sums[r["m"], r["ci"]] = sums[r["m"], r["ci"]] + s
-            cnts[r["m"], r["ci"]] += r["cnt"]
-        else:
-            acc = lsum.setdefault(r["lab"], np.zeros(DIM))
-            lo = r["m"] * SUBDIM
-            acc[lo: lo + SUBDIM] = acc[lo: lo + SUBDIM] + s
-            if r["m"] == 0:
-                lcnt[r["lab"]] = lcnt.get(r["lab"], 0) + r["cnt"]
-    present = cnts > 0
-    cb1 = np.zeros((M, c0, SUBDIM))
-    for mi in range(M):
-        for ci in range(c0):
-            if present[mi, ci]:
-                cb1[mi, ci] = round_compat_np(
-                    sums[mi, ci] / cnts[mi, ci], PQ_ROUND
-                )
-    out = (codes0, cb1, present, cnts, head)
+    cnts = np.zeros(M * c0, dtype=np.int64)
+    cb1 = np.zeros((M * c0, SUBDIM))
+    cnts[keys], cb1[keys] = counts, means
+    cnts, cb1 = cnts.reshape(M, c0), cb1.reshape(M, c0, SUBDIM)
+    out = (codes0, cb1, cnts > 0, cnts, head)
     if with_labels:
-        labels = sorted(lcnt)
-        carr = np.stack(
-            [round_compat_np(lsum[lv] / lcnt[lv], 6) for lv in labels]
-        ) if labels else np.zeros((0, DIM))
-        return out + (np.asarray(labels, dtype=np.int64), carr)
+        labels, _, carr = keyed_means(
+            parts.filter(pc.equal(parts["kind"], 1)), DIM, CENTROID_ROUND
+        )
+        return out + (labels, carr)
     return out
 
 
@@ -426,43 +381,34 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_m = _cb1_per_m(codes0, cb1, present)
     half = M // 2
 
-    def encode(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            xs = (
-                np.stack(pdf["embedding"].to_numpy())
-                .astype(np.float64)
-                .reshape(n, M, SUBDIM)
-            )
-            codes, dists = _assign_np(xs, per_m)
-            lo = np.zeros(n, dtype=np.int64)
-            hi = np.zeros(n, dtype=np.int64)
-            dsum = np.zeros(n)
-            for mi in range(M):
-                if mi < half:
-                    lo += codes[:, mi] << (CODE_BITS * mi)
-                else:
-                    hi += codes[:, mi] << (CODE_BITS * (mi - half))
-                dsum = dsum + dists[:, mi]
-            yield pd.DataFrame(
-                {
-                    "vec_id": vid,
-                    "packed_lo": lo,
-                    "packed_hi": hi,
-                    "mse": round_compat_np(dsum / DIM, 6),
-                }
-            )
-
-    return (
-        spread(read_testdata(spark, sf_dir, "embeddings"))
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            encode,
-            "vec_id bigint, packed_lo bigint, packed_hi bigint, mse double",
+    def encode(pdf):
+        n = len(pdf)
+        xs = (
+            np.stack(pdf["embedding"].to_numpy())
+            .astype(np.float64)
+            .reshape(n, M, SUBDIM)
         )
+        codes, dists = _assign_np(xs, per_m)
+        lo = np.zeros(n, dtype=np.int64)
+        hi = np.zeros(n, dtype=np.int64)
+        dsum = np.zeros(n)
+        for mi in range(M):
+            if mi < half:
+                lo += codes[:, mi] << (CODE_BITS * mi)
+            else:
+                hi += codes[:, mi] << (CODE_BITS * (mi - half))
+            dsum = dsum + dists[:, mi]
+        return {
+            "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
+            "packed_lo": lo,
+            "packed_hi": hi,
+            "mse": round_compat_np(dsum / DIM, 6),
+        }
+
+    return kernels.batch_map(
+        spread(read_testdata(spark, sf_dir, "embeddings")).select("vec_id", "embedding"),
+        encode,
+        "vec_id bigint, packed_lo bigint, packed_hi bigint, mse double",
     )
 
 
@@ -520,7 +466,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _adc_kernel(per_m, qids, lut, r, with_exact, head, probes=None, labels=None, carr=None):
-    """mapInPandas kernel: per corpus vector, PQ-encode against the
+    """Per-batch kernel of the ADC pass: per corpus vector, PQ-encode against the
     per-m codebooks, accumulate the per-query ADC distance from the
     lookup rows (subspace order 0..M-1, left-to-right — the rounding
     grain pins cross-engine summation order exactly as the former
@@ -534,51 +480,40 @@ def _adc_kernel(per_m, qids, lut, r, with_exact, head, probes=None, labels=None,
     query only scores vectors whose label is in its probe list."""
     nq = len(qids)
 
-    def fn(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0 or nq == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            xs = x.reshape(n, M, SUBDIM)
-            codes = np.zeros((n, M), dtype=np.int64)
-            code_pos = np.zeros((n, M), dtype=np.int64)
+    def fn(pdf):
+        n = len(pdf)
+        vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+        x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        xs = x.reshape(n, M, SUBDIM)
+        code_pos = np.zeros((n, M), dtype=np.int64)
+        for mi in range(M):
+            cmat = per_m[mi][1]
+            diff = xs[:, mi, :][:, None, :] - cmat[None, :, :]
+            code_pos[:, mi] = np.argmin(_sq_chain(diff * diff), axis=1)
+        lab_val = None
+        if probes is not None:
+            lab_val = labels[np.argmin(label_sq_dists(x, carr), axis=1)]
+        out = []
+        for qi in range(nq):
+            adc = np.zeros(n)
             for mi in range(M):
-                cvals, cmat = per_m[mi]
-                diff = xs[:, mi, :][:, None, :] - cmat[None, :, :]
-                a = np.argmin(_sq_chain(diff * diff), axis=1)
-                codes[:, mi] = cvals[a]
-                code_pos[:, mi] = a
-            lab_val = None
+                adc = adc + lut[qi][mi][code_pos[:, mi]]
+            adc = round_compat_np(adc, 6)
+            keep = vid != qids[qi]
             if probes is not None:
-                dl = np.zeros((n, len(labels)))
-                for i in range(DIM):
-                    t = x[:, i][:, None] - carr[None, :, i]
-                    dl = dl + t * t
-                lab_val = labels[np.argmin(dl, axis=1)]
-            out = []
-            for qi in range(nq):
-                adc = np.zeros(n)
-                for mi in range(M):
-                    adc = adc + lut[qi][mi][code_pos[:, mi]]
-                adc = round_compat_np(adc, 6)
-                keep = vid != qids[qi]
-                if probes is not None:
-                    keep &= np.isin(lab_val, probes[qi])
-                c, v = adc[keep], vid[keep]
-                top = np.lexsort((v, c))[:r]
-                rec = {
-                    "query_id": np.full(len(top), qids[qi], dtype=np.int64),
-                    "neighbor_id": v[top],
-                    "adc_dist": c[top],
-                }
-                if with_exact:
-                    xr = x[keep][top]
-                    rec["d"] = _exact_d_np(head[int(qids[qi])], xr)
-                out.append(pd.DataFrame(rec))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                keep &= np.isin(lab_val, probes[qi])
+            c, v = adc[keep], vid[keep]
+            top = np.lexsort((v, c))[:r]
+            rec = {
+                "query_id": np.full(len(top), qids[qi], dtype=np.int64),
+                "neighbor_id": v[top],
+                "adc_dist": c[top],
+            }
+            if with_exact:
+                xr = x[keep][top]
+                rec["d"] = _exact_d_np(head[int(qids[qi])], xr)
+            out.append(pd.DataFrame(rec))
+        return pd.concat(out, ignore_index=True) if out else {}
 
     return fn
 
@@ -608,25 +543,15 @@ def _adc_candidates(
     if with_ivf:
         probes = []
         for q in qids:
-            qe = head[int(q)]
-            dl = np.zeros(len(labels))
-            for i in range(DIM):
-                t = qe[i] - carr[:, i]
-                dl = dl + t * t
-            order = np.lexsort((labels, dl))[:IVFADC_NPROBE]
-            probes.append(labels[order])
+            dl = label_sq_dists(head[int(q)][None, :], carr)[0]
+            probes.append(labels[np.lexsort((labels, dl))[:IVFADC_NPROBE]])
     schema = "query_id bigint, neighbor_id bigint, adc_dist double"
     if with_exact:
         schema += ", d double"
-    return (
-        spread(read_testdata(spark, sf_dir, "embeddings"))
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            _adc_kernel(
-                per_m, qids, lut, r, with_exact, head, probes, labels, carr
-            ),
-            schema,
-        )
+    return kernels.batch_map(
+        spread(read_testdata(spark, sf_dir, "embeddings")).select("vec_id", "embedding"),
+        _adc_kernel(per_m, qids, lut, r, with_exact, head, probes, labels, carr),
+        schema,
     )
 
 

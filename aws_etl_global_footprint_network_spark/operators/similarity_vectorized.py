@@ -236,12 +236,14 @@ def matryoshka_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r.vec_id, list(r.embedding))
         for r in emb.filter(F.col("vec_id") < MRL_QUERIES).collect()
     )
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray(
-        [r[1] for r in qrows], dtype=np.float32
-    ).astype(np.float64)
-    nq = len(qids)
     dims = MRL_DIMS
+    nq = len(qrows)
+    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
+    qmat = (
+        np.asarray([r[1] for r in qrows], dtype=np.float32)
+        .astype(np.float64)
+        .reshape(nq, dims[-1])
+    )
     # query prefix norms, same left-to-right fold as the corpus side
     qsq = np.zeros(nq)
     qnrm = {}
@@ -250,75 +252,52 @@ def matryoshka_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (i + 1) in dims:
             qnrm[i + 1] = np.sqrt(qsq)
 
-    def scores(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
+    def scores(pdf):
+        n = len(pdf)
+        vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        sq = np.zeros(n)
+        dots = np.zeros((n, nq))
+        out = []
+        for i in range(dims[-1]):
+            e = m[:, i]
+            sq = sq + e * e
+            dots = dots + e[:, None] * qmat[None, :, i]
+            if (i + 1) not in dims:
                 continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            sq = np.zeros(n)
-            dots = np.zeros((n, nq))
-            out_dim, out_q, out_n, out_c = [], [], [], []
-            for i in range(dims[-1]):
-                e = m[:, i]
-                sq = sq + e * e
-                dots = dots + e[:, None] * qmat[None, :, i]
-                if (i + 1) not in dims:
-                    continue
-                d = i + 1
-                nrm = np.sqrt(sq)
-                cos = dots / (qnrm[d][None, :] * nrm[:, None])
-                for j in range(nq):
-                    keep = vid != qids[j]
-                    c, v = cos[keep, j], vid[keep]
-                    top = np.lexsort((v, -c))[:MRL_K]
-                    out_dim.extend([d] * len(top))
-                    out_q.extend([qids[j]] * len(top))
-                    out_n.extend(v[top])
-                    out_c.extend(c[top])
-            yield pd.DataFrame(
-                {
-                    "dim": np.asarray(out_dim, dtype=np.int32),
-                    "query_id": np.asarray(out_q, dtype=np.int64),
-                    "neighbor_id": np.asarray(out_n, dtype=np.int64),
-                    "cos": np.asarray(out_c, dtype=np.float64),
-                }
-            )
+            d = i + 1
+            cos = dots / (qnrm[d][None, :] * np.sqrt(sq)[:, None])
+            for j in range(nq):
+                keep = vid != qids[j]
+                c, v = cos[keep, j], vid[keep]
+                top = np.lexsort((v, -c))[:MRL_K]
+                out += [(d, qids[j], nb, cs) for nb, cs in zip(v[top], c[top])]
+        return out
 
     cand = (
-        []
-        if nq == 0
-        else spread(emb)
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            scores, "dim int, query_id long, neighbor_id long, cos double"
+        kernels.batch_map(
+            spread(emb).select("vec_id", "embedding"),
+            scores,
+            "dim int, query_id long, neighbor_id long, cos double",
         )
-        .collect()
+        .toArrow()
+        .to_pandas()
     )
     # constant-size close: global top-MRL_K per (dim, query), then the
     # overlap of each prefix's top set against the full-dim top set
-    tops: dict[tuple[int, int], list[int]] = {}
-    by_key: dict[tuple[int, int], list] = {}
-    for r in cand:
-        by_key.setdefault((r["dim"], r["query_id"]), []).append(r)
-    for key, rows in by_key.items():
-        rows.sort(key=lambda r: (-r["cos"], r["neighbor_id"]))
-        tops[key] = [r["neighbor_id"] for r in rows[:MRL_K]]
-    full = {
-        q: set(tops.get((dims[-1], q), [])) for q in qids.tolist()
-    }
+    top = (
+        cand.sort_values(
+            ["cos", "neighbor_id"], ascending=[False, True], kind="mergesort"
+        )
+        .groupby(["dim", "query_id"])
+        .head(MRL_K)
+    )
+    full = top.loc[top["dim"] == dims[-1], ["query_id", "neighbor_id"]]
+    hits = top.merge(full, on=["query_id", "neighbor_id"])["dim"].value_counts()
     out_rows = []
     for d in dims:
-        ov = sum(
-            1
-            for q in qids.tolist()
-            for nb in tops.get((d, q), [])
-            if nb in full[q]
-        )
-        out_rows.append(
-            (int(d), int(ov), (ov * 20000) / 1000000.0)
-        )
+        ov = int(hits.get(d, 0))
+        out_rows.append((d, ov, (ov * 20000) / 1000000.0))
     return kernels.local_frame(
         spark, out_rows, "dim int, overlap_pairs bigint, overlap_at_k double"
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.functions.text import tokens, tokens_sql
 from aws_etl_global_footprint_network_spark.registry import register
@@ -94,7 +95,7 @@ def _mg_survivors_and_counts(token_stream: DataFrame, col: str) -> DataFrame:
     is a tokenize+explode of the corpus, so the third full pass was
     pure recompute of the other two."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[list[tuple]]:
         counters: dict[str, int] = {}
         n = 0
         for pdf in batches:
@@ -102,16 +103,12 @@ def _mg_survivors_and_counts(token_stream: DataFrame, col: str) -> DataFrame:
             weighted_mg_merge(
                 counters, pdf[col].value_counts().items(), MG_CAPACITY
             )
-        yield pd.DataFrame(
-            {
-                col: list(counters.keys()) + [None],
-                "_pn": [0] * len(counters) + [n],
-            }
-        )
+        yield [(t, 0) for t in counters] + [(None, n)]
 
-    return token_stream.mapInPandas(
+    return kernels.partial_pass(
+        token_stream,
         op,
-        schema=T.StructType(
+        T.StructType(
             [
                 T.StructField(col, T.StringType()),
                 T.StructField("_pn", T.LongType()),

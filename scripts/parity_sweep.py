@@ -11,6 +11,11 @@ exists for the sf1 sweep that catches SCALE-dependent divergence
 
 Prints one line per query and a final summary line; exit code 1 on
 any failure.
+
+Both engines run in this process, so they are sized together from the
+host's physical memory (``engine_memory``): DuckDB's ``memory_limit``
+and the Spark driver heap (``SPARK_GRAFT_DRIVER_MEM``, unless it is
+already set) add up to three quarters of it.
 """
 
 from __future__ import annotations
@@ -30,6 +35,17 @@ from aws_etl_global_footprint_network_spark.session import get_spark
 from oracle_harness import compare, duck_connection
 
 
+def engine_memory(host_bytes: int) -> tuple[str, str]:
+    """(DuckDB ``memory_limit``, Spark driver heap) for a host with
+    ``host_bytes`` of physical memory. The heap takes 40 % and DuckDB
+    35 %; the last quarter is left to the JVM beyond its heap, the
+    Python workers and the OS. With DuckDB's own default (80 % of RAM)
+    beside the 16 GB default heap, a 15 GB host lost its JVM during
+    an sf1 sweep."""
+    mib = host_bytes // 2**20
+    return f"{mib * 7 // 20}MiB", f"{mib * 2 // 5}m"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", default="/tmp/sf1")
@@ -42,8 +58,13 @@ def main() -> int:
         if args.only
         else [n for n, s in specs.items() if s.oracle is not None]
     )
+    duck_limit, heap = engine_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", heap)
     spark = get_spark(app_name="parity-sweep")
     con = duck_connection(args.dir)
+    con.execute(f"SET memory_limit = '{duck_limit}'")
     t_start = time.time()
     fails: list[str] = []
     for name in names:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from aws_etl_global_footprint_network_spark.functions import kernels
 from aws_etl_global_footprint_network_spark.functions.cache import cut_lineage
 from aws_etl_global_footprint_network_spark.operators import pareto
 from aws_etl_global_footprint_network_spark.plans.explain import unpartitioned_windows
@@ -90,7 +91,7 @@ def test_pareto_fallback_equals_broadcast_result(spark):
     base = spark.createDataFrame(
         rows, "p_partkey bigint, p_retailprice double, p_size int"
     )
-    cand = base.mapInPandas(pareto._local_frontier, pareto._CAND_SCHEMA).persist()
+    cand = kernels.batch_map(base, pareto._local_frontier, pareto._CAND_SCHEMA).persist()
     try:
         want = sorted(
             map(tuple, pareto._exact_dominance(cand, 10_000).collect())
